@@ -1,0 +1,7 @@
+package org.apache.spark
+
+/** The listener bus is private to Spark; the traced run needs to wait until
+  * its listener has seen every posted event before it reads the counts. */
+object PerfbenchBus {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
