@@ -37,13 +37,13 @@ object SparkEntry {
     * q72 13.2→1.5 s, q44 11.6→1.5 s). Callers of this map (Bench, Verify,
     * TimeOne) all fully materialize each query before invoking the next, so
     * nothing live is ever dropped; this frees memory, it caches nothing.
+    * A failure here propagates: a session that cannot release its blocks
+    * would skew every later query's timing.
     */
   private def cleanSession(s: SparkSession): Unit = {
-    try {
-      s.sharedState.cacheManager.clearCache()
-      s.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-    } catch { case _: Throwable => () }
+    s.sharedState.cacheManager.clearCache()
+    s.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = false))
   }
 
   /** One entry per implemented operator from SURVEY.md §2. */

@@ -5,8 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** Ad-hoc single-query timer: `runMain graft.TimeOne <queryName> [reps]`.
   * Runs one SparkEntry query against SPARK_GRAFT_SF_DIR (default sf0.01)
   * in the same session shape as the Bench queries phase — for profiling a
-  * specific query (pair with GRAFT_WAVE_DEBUG=1 for per-stage wave times)
-  * without paying for the other 55.
+  * specific query without paying for the other 55.
   */
 object TimeOne {
   def main(args: Array[String]): Unit = {

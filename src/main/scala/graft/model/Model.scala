@@ -98,14 +98,11 @@ final case class CrawlSpec(
     // (the log IS the audit table); counters and records are unaffected.
     logDisabled: Boolean = false,
     parserId: String = "default",
-    // Scale path: Bloom-prefiltered seen-set anti-join (graft.state.SeenSet).
+    // Scale path: the seen-set anti-join behind a broadcast Bloom prefilter
+    // (graft.state.SeenSet.Sketch, maintained incrementally across waves).
     // Semantically identical to the plain anti-join (no false negatives);
     // cuts the dedup shuffle to ~new-URL volume at steady state.
     bloomDedup: Boolean = false,
-    // Cuckoo variant of the same prefilter (state/CuckooFilter): identical
-    // no-false-negative routing, plus DELETION — the sketch can withdraw a
-    // seen mark (URLRevisit flows, cache eviction) where a Bloom cannot.
-    cuckooDedup: Boolean = false,
     // Sync-order mode assigns a deterministic GLOBAL discovery rank per wave
     // — the parity mode that reproduces the reference's synchronized crawl
     // order exactly (geziyor.go:225-227) at the cost of one
@@ -115,9 +112,6 @@ final case class CrawlSpec(
     // order) and every per-wave window is partitioned — no serialization
     // point anywhere in the default plan. Parity tests opt in with true.
     syncOrder: Boolean = false,
-    // Skew handling: hosts holding more than this share of a wave get salted
-    // into this many sub-partitions (SURVEY.md §7 hard parts).
-    skewSaltBuckets: Int = 8,
     // Cookie jar (geziyor.go:98-100, client/client.go:250-272): responses'
     // Set-Cookie values accumulate in a per-host state table and are applied
     // to later requests to that host (visible to parsers as meta("cookie")).

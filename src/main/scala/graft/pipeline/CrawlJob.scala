@@ -41,10 +41,11 @@ import graft.url.UrlOps
   * Scale design: every per-wave step is a narrow DataFrame op —
   *  - the seen-set anti-join and fetch join both shuffle on url, so AQE can
   *    reuse/coalesce partitions; at 10^10 urls the seen set lives in the
-  *    Parquet state table, Bloom-prefiltered (graft.state.SeenSet);
+  *    Parquet state table, prefiltered (CrawlSpec.bloomDedup) by the one
+  *    Bloom `SeenSet.Sketch` the crawl holds from first probe to exit;
   *  - the politeness window shuffles on host; mega-hosts are bounded by the
   *    exact two-phase salted ranking (top-k per (host,salt), then top-k per
-  *    host over ≤ k·S survivors);
+  *    host over ≤ k·S survivors, S = SkewSaltBuckets);
   *  - the global concurrency cap is the same two-phase shape: per-bucket
   *    top-cap, then the exact global cap over ≤ cap·B bounded survivors —
   *    by DEFAULT (syncOrder=false) no per-wave window ever ranks an
@@ -80,6 +81,11 @@ object CrawlJob {
       waves: Int)
 
   private val RedirectStatuses = Seq(301, 302, 303, 307, 308)
+
+  /** Salt buckets of the politeness ranking's first phase: a mega-host's
+    * window work spreads over this many tasks (SURVEY.md §7 skew note).
+    */
+  private val SkewSaltBuckets = 8
 
   // robots.txt parsing + matching lives in RobotsRules (full
   // temoto/robotstxt semantics: per-agent groups, Allow longest-match
@@ -332,36 +338,15 @@ object CrawlJob {
     val persisted = scala.collection.mutable.ArrayBuffer
       .empty[org.apache.spark.sql.Dataset[_]]
 
-    // ---- incremental seen-sketch state ----------------------------------
-    // Round-3 verdict fix: the Bloom/cuckoo accelerators must never rebuild
-    // from the full seen set INSIDE the wave loop (O(W·|seen|) total — the
-    // dominant cost at 10^10 urls). The sketches bootstrap once, then absorb
-    // each wave's increment: Bloom via associative mergeInPlace (+ a
-    // caller-managed broadcast destroyed when refreshed), cuckoo via an
-    // executor-side shard-table cogroup (never collected to the driver).
-    // A full rebuild happens only when the sketch outgrows its 4× headroom —
-    // geometric, so total rebuild work is O(final |seen|).
-    var bloomState: Option[graft.state.SeenSet.BloomState] = None
-    var bloomBc: Option[org.apache.spark.broadcast.Broadcast[
-      org.apache.spark.util.sketch.BloomFilter]] = None
-    var cuckooState: Option[graft.state.SeenSet.CuckooState] = None
+    // Bloom prefilter of the seen set (CrawlSpec.bloomDedup): bootstrapped
+    // on the first probe, maintained incrementally, released at exit
+    val sketch = new graft.state.SeenSet.Sketch
     // crawl-trap gate state: (host, template) → urls granted so far; one
     // row per distinct template ever granted (bounded, broadcast side)
     var trapCounts: Option[DataFrame] = None
     // AIMD rate state (CrawlSpec.adaptiveRate): host → current grant cap;
     // one row per host ever OBSERVED in a fetch wave (bounded, broadcast)
     var hostCaps: Option[DataFrame] = None
-    // running seen count (sizes the sketches) — ONE bootstrap count here,
-    // then maintained from the materialized per-wave increments
-    var seenCount: Long =
-      if (spec.bloomDedup || spec.cuckooDedup) seen.count() else 0L
-
-    val debug = sys.env.contains("GRAFT_WAVE_DEBUG")
-    def dbg(tag: String, t0: Long): Long = {
-      val t = System.nanoTime()
-      if (debug) println(f"[wave-debug] $tag%-24s ${(t - t0) / 1e9}%8.2fs")
-      t
-    }
 
     // live counter snapshot — re-rendered per scrape by the metrics
     // endpoint (metrics/metrics.go:100-115) and reused for the final
@@ -394,8 +379,6 @@ object CrawlJob {
       val frontierN = frontier.count()
       if (frontierN == 0) { done = true }
       else {
-        var tMark = System.nanoTime()
-        if (debug) println(s"[wave-debug] ==== wave $wave ====")
         // ---- politeness: grant ≤ k tokens per host this wave ------------
         // (retries bypass the token budget — the reference retries inside
         // the client without re-running the delay middleware)
@@ -459,18 +442,15 @@ object CrawlJob {
             // total order) is always a subset of the per-salt survivors, so
             // phase 2 over ≤ k·S rows/host is EXACT while the mega-host's
             // window work spreads across S tasks (SURVEY.md §7 skew note).
-            val (phase1, deferredA) =
-              if (spec.skewSaltBuckets > 1) {
-                val salted = nonRetry
-                  .withColumn("salt",
-                    pmod(hash(col("url")), lit(spec.skewSaltBuckets)))
-                  .withColumn("t1", row_number().over(
-                    Window.partitionBy(col("host"), col("salt"))
-                      .orderBy(polOrder: _*)))
-                (salted.filter(col("t1") <= col("hcap")),
-                 salted.filter(col("t1") > col("hcap"))
-                   .select(cols: _*))
-              } else (nonRetry, emptyFrontier)
+            val salted = nonRetry
+              .withColumn("salt",
+                pmod(hash(col("url")), lit(SkewSaltBuckets)))
+              .withColumn("t1", row_number().over(
+                Window.partitionBy(col("host"), col("salt"))
+                  .orderBy(polOrder: _*)))
+            val phase1 = salted.filter(col("t1") <= col("hcap"))
+            val deferredA = salted.filter(col("t1") > col("hcap"))
+              .select(cols: _*)
             val tw = Window.partitionBy(col("host")).orderBy(polOrder: _*)
             val ranked2 = phase1.withColumn("tok", row_number().over(tw))
             val grantedNR = ranked2.filter(col("tok") <= col("hcap"))
@@ -816,7 +796,6 @@ object CrawlJob {
           .withColumn("cur_url", col("url")).withColumn("hops", lit(0))
           .localCheckpoint(true)
 
-        tMark = dbg("politeness+robots+chk", tMark)
         // order/metrics/lineage read from the materialized pending set —
         // no recompute of the politeness/robots pipeline
         val orderInc = pending.select(col("wave"), col("rank"), col("url"))
@@ -894,7 +873,6 @@ object CrawlJob {
             }
           hop += 1
         }
-        tMark = dbg("order+metrics+lineage", tMark)
 
         // ---- validator / 304 merge for revalidations ----------------------
         // (cache/cache.go:210-239: inject If-None-Match/If-Modified-Since;
@@ -1226,7 +1204,6 @@ object CrawlJob {
             "records", "links", "parse_error")
           .persist(StorageLevel.MEMORY_AND_DISK)
 
-        tMark = dbg("fetch-loop(lazy)", tMark)
         auditInc += (parsed.filter(col("parse_error").isNotNull)
           .select(col("wave"), lit("parse_error"), lit("GET"), lit(0),
             col("host"), col("url"), col("parse_error")))
@@ -1276,44 +1253,13 @@ object CrawlJob {
         val candNew = {
           val cn =
             if (spec.urlRevisitEnabled) candDeduped
-            else if (spec.bloomDedup) {
-              if (bloomState.isEmpty || bloomState.exists(_.overfull)) {
-                bloomBc.foreach(_.destroy())
-                bloomState =
-                  Some(graft.state.SeenSet.buildState(seen, seenCount))
-                bloomBc =
-                  Some(spark.sparkContext.broadcast(bloomState.get.bloom))
-              }
-              graft.state.SeenSet.filterNewBc(candDeduped, bloomBc.get, seen)
-            } else if (spec.cuckooDedup) {
-              if (cuckooState.isEmpty || cuckooState.exists(_.overfull))
-                cuckooState =
-                  Some(graft.state.SeenSet.buildCuckooState(seen, seenCount))
-              graft.state.SeenSet.filterNewCuckoo(candDeduped,
-                cuckooState.get, seen)
-            } else candDeduped.join(seen, Seq("url"), "left_anti")
+            else if (spec.bloomDedup) sketch.filterNew(candDeduped, seen)
+            else candDeduped.join(seen, Seq("url"), "left_anti")
           cn.localCheckpoint(true)
         }
-        // absorb the materialized increment into the running sketches —
-        // O(increment) per wave, no full-seen rescan, no count() on `seen`
-        if (spec.bloomDedup || spec.cuckooDedup) {
-          val incCount = candNew.count() // candNew is checkpointed → cheap
-          seenCount += incCount
-          bloomState = bloomState.map { st =>
-            val merged = graft.state.SeenSet.mergeIncrement(
-              st, candNew.select(col("url")), incCount)
-            // the filter object mutated — the broadcast holding the stale
-            // copy is refreshed (candNew is materialized, so no in-flight
-            // job still reads it); destroying it also closes the round-3
-            // one-undisposed-broadcast-per-wave leak
-            bloomBc.foreach(_.destroy())
-            bloomBc = Some(spark.sparkContext.broadcast(merged.bloom))
-            merged
-          }
-          cuckooState = cuckooState.map(st =>
-            graft.state.SeenSet.updateCuckoo(
-              st, candNew.select(col("url")), incCount))
-        }
+        // candNew is materialized, so no job still reads the broadcast this
+        // replaces; a no-op unless the Bloom probe above bootstrapped it
+        sketch.mergeIncrement(candNew.select(col("url")))
 
         // ---- crawl-trap budget gate (CrawlSpec.trapTemplateBudget) -------
         // Cap each (host, digit-run path template) at `budget` frontier
@@ -1400,7 +1346,6 @@ object CrawlJob {
             col("parent_rank").as("ord_a"),
             col("link_pos").cast("long").as("ord_b"))
 
-        tMark = dbg("records-chk", tMark)
         // candNew is unique per wave and anti-joined against seen, so the
         // increment needs no distinct — and it's a projection of the
         // already-checkpointed candNew, so this is free
@@ -1418,7 +1363,6 @@ object CrawlJob {
         // the state-table compaction; StateStore's resume reads already do
         // the equivalent single multi-path scan.
         if ((wave + 1) % 8 == 0) seen = seen.localCheckpoint(true)
-        tMark = dbg("seen-increment-chk", tMark)
         // assembly order keys: deferred/retries by their carried rank, new
         // discoveries by (parent_rank, link_pos) — unique within a wave in
         // both modes, so the assigned ranks are deterministic
@@ -1448,7 +1392,6 @@ object CrawlJob {
           }.drop("grp", "ord_a", "ord_b")
             .localCheckpoint(true)
         }(sideJobEc)
-        tMark = dbg("frontier-assembly-async", tMark)
         // normalize column names: the audit branches select lit() columns
         // whose auto-names would otherwise leak into the delta parquet.
         // Materialize the wave's increment NOW, while granted2/fetched are
@@ -1470,13 +1413,11 @@ object CrawlJob {
             .localCheckpoint(true)
         }
         metricsBuf.synchronized { audit = audit.union(auditIncDf) }
-        tMark = dbg("audit-fold-chk", tMark)
         frontier = scala.concurrent.Await.result(
           frontierF, scala.concurrent.duration.Duration.Inf)
         lineageBuf ++= scala.concurrent.Await.result(
             lineageF, scala.concurrent.duration.Duration.Inf)
           .map(r => (wave, r.getInt(0), r.getLong(1)))
-        tMark = dbg("frontier-assembly-join", tMark)
 
         persisted += parsed
         granted2.unpersist()
@@ -1508,11 +1449,13 @@ object CrawlJob {
     }
     order = order.localCheckpoint(true)
     persisted.foreach(_.unpersist())
-    bloomBc.foreach(_.destroy())
 
     val metrics = liveMetrics()
     val lineage = lineageBuf.toSeq.toDF("wave", "partition_id", "n_rows")
     CrawlResult(records, audit, seen, order, metrics, lineage, wave)
-    } finally metricsServer.foreach(_.stop())
+    } finally {
+      sketch.close()
+      metricsServer.foreach(_.stop())
+    }
   }
 }

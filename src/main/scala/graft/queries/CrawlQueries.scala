@@ -151,8 +151,9 @@ object CrawlQueries {
   /** Per-host politeness token grant: top-k rows per host per wave by
     * (priority desc, rank) — the wave-mode collapse of
     * ConcurrentRequestsPerDomain + RequestDelay (geziyor.go:277-288,
-    * middleware/delay.go:15-30). Scale: one shuffle on host; mega-hosts are
-    * salted in the real pipeline (graft.pipeline.Politeness).
+    * middleware/delay.go:15-30). Scale: one shuffle on host; the crawl
+    * itself bounds mega-hosts with CrawlJob.run's two-phase salted grant
+    * (top-k per (host, salt), then top-k per host over the survivors).
     */
   val qPolitenessTokens = Q(
     "q07_politeness_tokens",

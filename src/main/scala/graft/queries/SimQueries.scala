@@ -59,7 +59,7 @@ object SimQueries {
     * buckets (a boilerplate-heavy embedding cluster can put a large share
     * of the corpus into ONE (tbl, bucket) key, making the per-bucket
     * self-join quadratic in a single task). Same treatment as skewed
-    * crawl hosts (CrawlSpec.skewSaltBuckets):
+    * crawl hosts (CrawlJob's salted politeness ranking):
     *   - BUILD side keeps one row per (vec, table), salted by
     *     hash(vec_id) % S → every join group holds ~|bucket|/S build rows;
     *   - PROBE side replicates each row S ways (one per salt value).

@@ -3,15 +3,13 @@ package graft.state
 import scala.util.hashing.MurmurHash3
 
 /** Cuckoo filter (Fan, Andersen, Kaminsky, Mitzenmacher: "Cuckoo Filter:
-  * Practically Better Than Bloom", CoNEXT 2014) — the alternative URL-seen
-  * prefilter named by the north rule ("bloom/cuckoo URL-seen").
+  * Practically Better Than Bloom", CoNEXT 2014).
   *
-  * Why a second sketch next to Bloom (`SeenSet`): a cuckoo filter supports
-  * DELETION. A crawl frontier needs that in two real places the Bloom
-  * can't serve: URLRevisitEnabled flows (a url's seen mark is withdrawn so
-  * a later wave may re-fetch it) and cache invalidation (an entry evicted
-  * from the RFC2616 store must stop short-circuiting the fetch path).
-  * Same safety contract as the Bloom layer: NO false negatives for
+  * Kept only because the crawl benchmark's seen-set probe times it
+  * (through `SeenSet.buildCuckooState`/`filterNewCuckoo`) next to the Bloom
+  * prefilter the engine uses; no crawl or stream runs it. It supports
+  * DELETION, which a Bloom cannot, but nothing in the engine deletes a seen
+  * mark. Same safety contract as the Bloom layer: NO false negatives for
   * present members — a successful insert is always visible to lookup, so
   * routing "definitely new" rows around the exact anti-join can never
   * drop a URL. False positives (~2^-14 per lookup at b=4, f=16) only cost
@@ -23,8 +21,6 @@ import scala.util.hashing.MurmurHash3
   * stored fingerprint. Bounded eviction (500 kicks) with a small stash as
   * the overflow safety valve — items in the stash keep the no-false-
   * negative guarantee even when the table is pathologically full.
-  *
-  * Serializable → broadcastable to executors like the Bloom filter.
   */
 final class CuckooFilter private (
     numBuckets: Int,

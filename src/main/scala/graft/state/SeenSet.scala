@@ -9,179 +9,167 @@ import org.apache.spark.util.sketch.BloomFilter
   * centerpiece; reference: middleware/duplicate_requests.go:16-26).
   *
   * Two layers, preserving the exact-set invariant:
-  *  1. an approximate membership sketch (Bloom or cuckoo) over the seen
-  *     table, consulted before the shuffle;
+  *  1. a Bloom filter over the seen table, broadcast and consulted before
+  *     the shuffle;
   *  2. the exact anti-join against the seen state table.
   *
-  * The sketch can only say "definitely NOT seen" (no false negatives by
+  * The Bloom can only say "definitely NOT seen" (no false negatives by
   * construction) — those rows skip the anti-join shuffle entirely. "Maybe
   * seen" rows (true positives + fp-rate false positives) take the exact
   * anti-join, so a false positive can never drop a genuinely-new URL.
   * At steady crawl state most candidates are dupes of the seen set, so the
   * shuffle shrinks to ~(new + fpp·new) rows instead of all candidates.
   *
-  * INCREMENTAL maintenance (round-3 verdict fix): neither sketch is ever
-  * rebuilt from the full seen set inside the wave loop.
-  *  - Bloom: bit-ors are associative, so each wave builds a filter over
-  *    ONLY its increment (same capacity/fpp → compatible bit layout) and
-  *    `mergeInPlace`s it into the running filter — O(increment) per wave.
-  *    When the running count outgrows the capacity headroom the filter is
-  *    rebuilt 4× larger from the full seen set — a geometric series, so
-  *    total rebuild work over the whole crawl is O(final seen size).
-  *  - Cuckoo: the filter state is a DISTRIBUTED table of keyspace shards
-  *    (`Dataset[(shard, CuckooFilter)]`), updated per wave by cogrouping
-  *    the shard table with the increment (each shard's filter absorbs only
-  *    its new keys) and consulted by cogrouping candidates with their
-  *    shard — the filters never touch the driver and are never broadcast.
+  * [[Sketch]] owns the filter's whole lifecycle for one crawl
+  * (`CrawlJob.run`) or one stream (`StreamingCrawl.foreachBatchCrawl`):
+  * it is never rebuilt from the full seen set inside the loop. Bit-ors are
+  * associative, so each wave builds a filter over ONLY its increment (same
+  * capacity/fpp → compatible bit layout) and `mergeInPlace`s it into the
+  * running filter — O(increment) per wave. When the running count outgrows
+  * the capacity headroom the filter is rebuilt 4× larger from the full seen
+  * set — a geometric series, so total rebuild work over the whole crawl is
+  * O(final seen size).
   *
   * Deployment note (10^10 keys): one monolithic Bloom is ~9 GB — shard it
-  * per frontier url-hash range exactly like the cuckoo table below (one
-  * filter per range, each sized for its range, consulted co-partitioned),
-  * which also caps the per-wave increment-filter allocation at range size.
-  * The cuckoo path here IS that layout already.
+  * per frontier url-hash range (one filter per range, each sized for its
+  * range, consulted co-partitioned), which also caps the per-wave
+  * increment-filter allocation at range size.
   */
 object SeenSet {
 
-  /** Test hook: counts FULL-seen-set sketch builds (buildState /
-    * buildCuckooState). SeenSetSpec asserts a multi-wave crawl performs
+  /** Test hook: counts FULL-seen-set sketch builds (a Sketch's bootstrap
+    * and regrowths). SeenSetSpec asserts a multi-wave crawl performs
     * O(log growth) builds, not one per wave — the round-3 scale-killer.
     */
   val fullBuilds = new java.util.concurrent.atomic.AtomicInteger(0)
 
   // ---- Bloom layer --------------------------------------------------------
 
+  /** Design false-positive rate: ~7.3 bits per url (see the deployment
+    * note for what that means at 10^10 urls).
+    */
+  private val Fpp = 0.03
+
   final case class Layered(bloom: BloomFilter, seen: DataFrame)
 
-  /** Build the broadcastable Bloom from the seen table. `expected` sizes the
-    * bit array — callers pass the running seen count (cheap: maintained
-    * incrementally); fpp 3% keeps a 10^10-key filter ~7 GB, sharded per
-    * host-range in a real deployment (one filter per frontier partition
-    * group) — at sandbox scale one filter suffices.
-    */
-  def build(seen: DataFrame, expected: Long, fpp: Double = 0.03): Layered =
+  /** One-shot Bloom over the seen table, sized for `expected` urls. */
+  def build(seen: DataFrame, expected: Long, fpp: Double = Fpp): Layered =
     Layered(seen.stat.bloomFilter("url", math.max(expected, 1L), fpp), seen)
 
-  /** Candidates NOT in the seen set — exact, Bloom-accelerated. */
-  def filterNew(cand: DataFrame, layered: Layered): DataFrame = {
-    val bloomBc = cand.sparkSession.sparkContext.broadcast(layered.bloom)
-    val mightContain = udf((u: String) => bloomBc.value.mightContain(u))
-    val definitelyNew = cand.filter(!mightContain(col("url")))
-    val maybeSeen = cand.filter(mightContain(col("url")))
-    definitelyNew.union(maybeSeen.join(layered.seen, Seq("url"), "left_anti"))
+  /** Candidates NOT in the seen set — exact, Bloom-accelerated. One-shot:
+    * the broadcast lives as long as the returned plan; loops use [[Sketch]],
+    * which keeps exactly one live broadcast.
+    */
+  def filterNew(cand: DataFrame, layered: Layered): DataFrame =
+    probe(cand, cand.sparkSession.sparkContext.broadcast(layered.bloom),
+      layered.seen)
+
+  /** The prefilter's row predicate. A named class rather than a lambda so
+    * a plan's Bloom broadcast can be found in its ScalaUDF (StreamingSpec).
+    */
+  private[graft] final case class MightContain(bc: Broadcast[BloomFilter])
+      extends (String => Boolean) {
+    def apply(u: String): Boolean = bc.value.mightContain(u)
   }
 
-  /** Running Bloom state for the wave loop. `capacity`/`fpp` fix the bit
-    * layout (increment filters built with the same pair are
-    * mergeInPlace-compatible); `count` is maintained incrementally so the
-    * loop never runs a `seen.count()` action.
-    */
-  final case class BloomState(
-      bloom: BloomFilter, capacity: Long, count: Long, fpp: Double) {
-    /** Past this, fpp degrades beyond the design point → caller rebuilds. */
-    def overfull: Boolean = count > capacity
-  }
-
-  /** One-time (or post-overfill) build from the full seen table, with 4×
-    * headroom so subsequent waves merge in place.
-    */
-  def buildState(seen: DataFrame, count: Long, fpp: Double = 0.03): BloomState = {
-    fullBuilds.incrementAndGet()
-    val capacity = math.max(4 * math.max(count, 1L), 1L << 20)
-    BloomState(seen.stat.bloomFilter("url", capacity, fpp), capacity, count, fpp)
-  }
-
-  /** Full build with an EXPLICIT log-depth merge topology: per-partition
-    * Bloom filters combined through `treeAggregate(depth = 2)`, so at
-    * 1000 executors the bit-OR fan-in is a two-level combiner tree instead
-    * of an all-partitions-to-driver reduce. Result is merge-compatible
-    * with `buildState`'s filters (same capacity/fpp → same bit geometry;
-    * Bloom OR is associative and commutative, so partition order is
-    * irrelevant). The default `buildState` keeps Spark's own columnar
-    * sketch aggregate (no row conversion); this path exists where the
-    * merge topology must be explicit — SeenSetSpec pins the two builds
-    * behave identically as seen-set prefilters.
-    */
-  def buildStateTree(seen: DataFrame, count: Long, fpp: Double = 0.03): BloomState = {
-    fullBuilds.incrementAndGet()
-    val capacity = math.max(4 * math.max(count, 1L), 1L << 20)
-    // Filters are created LAZILY inside each partition: a treeAggregate
-    // zero value would serialize the full capacity-sized bit array into the
-    // task binary and ship one copy to every task (GBs at the 4×-count
-    // capacities the scaladoc's 1000-executor deployment implies — the r5
-    // advisor item). Each non-empty partition allocates its own local
-    // filter; the tree reduce then merges partition filters log-depth.
-    val perPart = seen.select(col("url")).na.drop()
-      .rdd.map(_.getString(0))
-      .mapPartitions { it =>
-        if (it.isEmpty) Iterator.empty
-        else {
-          val bf = BloomFilter.create(capacity, fpp)
-          it.foreach(bf.putString)
-          Iterator.single(bf)
-        }
-      }
-    val bloom =
-      if (perPart.isEmpty()) BloomFilter.create(capacity, fpp)
-      else perPart.treeReduce((a, b) => { a.mergeInPlace(b); a }, depth = 2)
-    BloomState(bloom, capacity, count, fpp)
-  }
-
-  /** OR this wave's increment into the running filter — O(|increment|),
-    * never rescans the accumulated seen set. Mutates and returns the state
-    * (the caller must re-broadcast: the previous broadcast's value object
-    * is this same filter, so destroy-then-broadcast, never mutate a live
-    * broadcast mid-job).
-    */
-  def mergeIncrement(state: BloomState, inc: DataFrame, incCount: Long): BloomState = {
-    if (incCount > 0) {
-      val incBloom = inc.stat.bloomFilter("url", state.capacity, state.fpp)
-      state.bloom.mergeInPlace(incBloom)
-    }
-    state.copy(count = state.count + incCount)
-  }
-
-  /** Bloom prefilter + exact anti-join, with a caller-owned broadcast so the
-    * wave loop can destroy it once the wave's output materializes (round-3
-    * advice: per-wave broadcasts were never disposed).
-    */
-  def filterNewBc(cand: DataFrame, bloomBc: Broadcast[BloomFilter],
+  private def probe(cand: DataFrame, bc: Broadcast[BloomFilter],
       seen: DataFrame): DataFrame = {
-    val mightContain = udf((u: String) => bloomBc.value.mightContain(u))
+    val mightContain = udf(MightContain(bc))
     val definitelyNew = cand.filter(!mightContain(col("url")))
     val maybeSeen = cand.filter(mightContain(col("url")))
     definitelyNew.union(maybeSeen.join(seen, Seq("url"), "left_anti"))
   }
 
-  // ---- cuckoo variant (north rule: "bloom/cuckoo URL-seen") --------------
-  // Why both: the cuckoo filter supports DELETION (URLRevisitEnabled
-  // withdrawing a seen mark; RFC2616 cache eviction), which a Bloom cannot.
-  // Cuckoo tables don't merge associatively the way Bloom bit-ors do, so
-  // the build SHARDS the keyspace: one filter per url-hash shard, each
-  // built exactly from its shard's keys. The shard table lives as a
-  // localCheckpointed Dataset (on a cluster: a state table co-partitioned
-  // with the frontier) — consulted and updated EXECUTOR-side; the filters
-  // are never collected to the driver and never broadcast.
+  /** The Bloom prefilter of one crawl or one stream, from bootstrap to
+    * release. Call `filterNew` with each wave's candidates and the current
+    * seen table, `mergeIncrement` with the wave's materialized new urls, and
+    * `close` at the end. It holds exactly one live broadcast: every change
+    * to the filter destroys the broadcast before publishing the next one.
+    * Not thread-safe; one loop drives it.
+    */
+  final class Sketch {
+    private var bloom: BloomFilter = null
+    private var capacity = 0L
+    private var seenCount = 0L
+    private var bc: Broadcast[BloomFilter] = null
 
-  private[graft] def shardOf(u: String, n: Int): Int =
+    /** Urls the filter covers: the bootstrap count plus every increment. */
+    def count: Long = seenCount
+
+    /** The live broadcast of the filter, once bootstrapped. */
+    def broadcast: Option[Broadcast[BloomFilter]] = Option(bc)
+
+    /** Candidates NOT in `seen` — exact. Bootstraps the filter from `seen`
+      * on first use (one count) and rebuilds it once the running count
+      * outgrows its capacity; the returned plan reads the live broadcast,
+      * so materialize it before the next `mergeIncrement`.
+      */
+    def filterNew(cand: DataFrame, seen: DataFrame): DataFrame = {
+      if (bloom == null) rebuild(seen, seen.count())
+      else if (seenCount > capacity) rebuild(seen, seenCount)
+      probe(cand, bc, seen)
+    }
+
+    /** OR the increment's urls into the filter — O(|increment|), never
+      * rescans the accumulated seen set. A no-op until bootstrapped, so a
+      * loop may call it whether or not it probes.
+      */
+    def mergeIncrement(inc: DataFrame): Unit = if (bloom != null) {
+      val n = inc.count()
+      if (n > 0) {
+        bloom.mergeInPlace(inc.stat.bloomFilter("url", capacity, Fpp))
+        seenCount += n
+        publish(inc)
+      }
+    }
+
+    /** Destroys the live broadcast and drops the filter. */
+    def close(): Unit = {
+      if (bc != null) bc.destroy()
+      bc = null
+      bloom = null
+    }
+
+    /** Full build from the seen table with 4× headroom, so the following
+      * waves merge in place.
+      */
+    private def rebuild(seen: DataFrame, n: Long): Unit = {
+      fullBuilds.incrementAndGet()
+      capacity = math.max(4 * math.max(n, 1L), 1L << 20)
+      bloom = seen.stat.bloomFilter("url", capacity, Fpp)
+      seenCount = n
+      publish(seen)
+    }
+
+    // The old broadcast's value may be this same (now mutated) filter:
+    // destroy it, never leave a stale or second copy live.
+    private def publish(df: DataFrame): Unit = {
+      if (bc != null) bc.destroy()
+      bc = df.sparkSession.sparkContext.broadcast(bloom)
+    }
+  }
+
+  // ---- cuckoo variant ----------------------------------------------------
+  // Kept only because the crawl benchmark's seen-set probe times it against
+  // the Bloom (perfbench Probes); no crawl or stream runs it. The Bloom won
+  // that measurement, and nothing calls CuckooFilter.delete, the cuckoo's
+  // reason to exist. Cuckoo tables don't merge associatively the way Bloom
+  // bit-ors do, so the build SHARDS the keyspace: one filter per url-hash
+  // shard, each built exactly from its shard's keys, held executor-side in
+  // a localCheckpointed Dataset.
+
+  private def shardOf(u: String, n: Int): Int =
     math.floorMod(scala.util.hashing.MurmurHash3.stringHash(u, 0x51ed270b), n)
 
   private implicit val cuckooPairEnc: Encoder[(Int, CuckooFilter)] =
     Encoders.tuple(Encoders.scalaInt, Encoders.javaSerialization[CuckooFilter])
 
-  /** Distributed cuckoo shard state. `capacityPerShard` is the fixed table
-    * size each shard was created with (cuckoo tables can't grow — overflow
-    * goes to the stash, so the caller rebuilds 4× larger when `overfull`,
-    * amortized geometric like the Bloom).
-    */
-  final case class CuckooState(
-      filters: Dataset[(Int, CuckooFilter)], nShards: Int,
-      capacityPerShard: Long, count: Long) {
-    def overfull: Boolean = count > (capacityPerShard * nShards * 9) / 10
-  }
+  /** Distributed cuckoo shard state: one filter per url-hash shard. */
+  final case class CuckooState(filters: Dataset[(Int, CuckooFilter)], nShards: Int)
 
+  /** One-shot build of the shard table (benchmark probe only). */
   def buildCuckooState(seen: DataFrame, expected: Long,
       nShards: Int = 32): CuckooState = {
-    fullBuilds.incrementAndGet()
     implicit val strEnc: Encoder[String] = Encoders.STRING
     val perShard = math.max(1024L, (expected / math.max(1, nShards)) * 2)
     val filters = seen.select(col("url")).as[String]
@@ -192,31 +180,7 @@ object SeenSet {
         (shard, f)
       }
       .localCheckpoint(true)
-    CuckooState(filters, nShards, perShard, expected)
-  }
-
-  /** Absorb this wave's increment into the shard table — a cogroup keyed by
-    * shard: each task deserializes its shard's filter, inserts only the new
-    * keys, and emits the updated filter. O(increment + shard-table bytes)
-    * per wave, all executor-side.
-    */
-  def updateCuckoo(state: CuckooState, inc: DataFrame, incCount: Long): CuckooState = {
-    if (incCount == 0) return state
-    implicit val strEnc: Encoder[String] = Encoders.STRING
-    val n = state.nShards
-    val perShard = state.capacityPerShard
-    val incKeyed = inc.select(col("url")).as[String]
-      .groupByKey(u => shardOf(u, n))(Encoders.scalaInt)
-    val updated = state.filters
-      .groupByKey(_._1)(Encoders.scalaInt)
-      .cogroup(incKeyed) { (shard, fs, urls) =>
-        val f = fs.buffered.headOption.map(_._2)
-          .getOrElse(CuckooFilter.create(perShard))
-        urls.foreach(f.insert)
-        Iterator((shard, f))
-      }(cuckooPairEnc)
-      .localCheckpoint(true)
-    state.copy(filters = updated, count = state.count + incCount)
+    CuckooState(filters, nShards)
   }
 
   /** Candidates NOT in the seen set — exact, cuckoo-accelerated (no false
@@ -247,10 +211,4 @@ object SeenSet {
     val maybeSeen = flagged.filter(col("maybe_seen")).select(col("r.*"))
     definitelyNew.union(maybeSeen.join(seen, Seq("url"), "left_anti"))
   }
-
-  /** Spec/bench convenience: build state + filter in one shot (the wave
-    * loop maintains the state across waves instead).
-    */
-  def buildCuckoo(seen: DataFrame, expected: Long, nShards: Int = 32): CuckooState =
-    buildCuckooState(seen, expected, nShards)
 }

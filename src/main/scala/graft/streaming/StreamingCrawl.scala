@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.state.SeenSet
 
 /** Structured-Streaming face of the crawl engine: continuously arriving
   * URLs (a live frontier feed) flow through the same dedup/politeness/fetch
@@ -62,31 +63,20 @@ object StreamingCrawl {
       pages: DataFrame,
       seenTablePath: String,
       sinks: Seq[DataFrame => Unit]) = {
-    // Incremental Bloom across micro-batches (the closure lives for the
-    // query lifetime): bootstrap once from the persisted seen table, then
-    // absorb each batch's fresh urls via associative mergeInPlace — the
-    // same no-per-batch-rebuild rule as the batch wave loop (CrawlJob).
-    var bloomState: Option[graft.state.SeenSet.BloomState] = None
+    // One Bloom prefilter for the query's lifetime, as in the batch wave
+    // loop: bootstrapped from the persisted seen table on the first batch
+    // that has one, then merged with each batch's fresh urls.
+    val sketch = new SeenSet.Sketch
     urlStream.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val seenExists = new java.io.File(seenTablePath).exists()
-        val seen =
-          if (seenExists) spark.read.parquet(seenTablePath)
-          else batch.sparkSession.emptyDataFrame.withColumn("url", lit(""))
-            .limit(0)
         val batchUrls = batch.select(col("url")).distinct()
-        // same scale story as the batch path (graft.state.SeenSet): Bloom
-        // prefilter skips the anti-join shuffle for the definitely-new
-        // majority; the exact anti-join runs only on maybe-seen rows.
+        // persisted: the sinks, the seen-table append and the sketch merge
+        // all read one computation of the batch's new urls
         val fresh =
-          if (seenExists) {
-            if (bloomState.isEmpty || bloomState.exists(_.overfull))
-              bloomState =
-                Some(graft.state.SeenSet.buildState(seen, seen.count()))
-            graft.state.SeenSet.filterNew(batchUrls,
-              graft.state.SeenSet.Layered(bloomState.get.bloom, seen))
-          } else batchUrls
+          (if (new java.io.File(seenTablePath).exists())
+            sketch.filterNew(batchUrls, spark.read.parquet(seenTablePath))
+          else batchUrls).persist()
         val fetched = fresh.join(
           pages.select(col("url"), col("status"), col("text")),
           Seq("url"), "left")
@@ -94,11 +84,8 @@ object StreamingCrawl {
         try {
           sinks.foreach(_(fetched))
           fresh.write.mode("append").parquet(seenTablePath)
-          // fresh is persisted via fetched's cache — count is cheap; the
-          // merged filter covers this batch's appends for the next batch
-          bloomState = bloomState.map(st =>
-            graft.state.SeenSet.mergeIncrement(st, fresh, fresh.count()))
-        } finally fetched.unpersist()
+          sketch.mergeIncrement(fresh)
+        } finally { fetched.unpersist(); fresh.unpersist() }
         ()
       }
   }

@@ -35,34 +35,6 @@ class SeenSetSpec extends AnyFunSuite {
     assert(want.size == 10000)
   }
 
-  test("treeAggregate build: no false negatives, merge-compatible with " +
-      "the default build, identical prefilter results") {
-    val seen = (0 until 30000 by 2)
-      .map(i => s"http://h${i % 97}.example.com/p/$i").toDF("url")
-      .repartition(16) // force a real multi-partition combiner tree
-    val cand = (0 until 30000)
-      .map(i => s"http://h${i % 97}.example.com/p/$i").toDF("url")
-    val tree = SeenSet.buildStateTree(seen, 15000, fpp = 0.2)
-    val flat = SeenSet.buildState(seen, 15000, fpp = 0.2)
-    // no false negatives through the log-depth merge
-    val misses = seen.collect().map(_.getString(0))
-      .count(u => !tree.bloom.mightContain(u))
-    assert(misses == 0)
-    // same (capacity, fpp) → same bit geometry → mergeInPlace-compatible
-    assert(tree.capacity == flat.capacity)
-    tree.bloom.mergeInPlace(flat.bloom) // throws on incompatible layouts
-    // both builds confirm down to the exact same new-candidate set
-    val bcT = spark.sparkContext.broadcast(
-      SeenSet.buildStateTree(seen, 15000, fpp = 0.2).bloom)
-    val gotTree = SeenSet.filterNewBc(cand, bcT, seen)
-      .collect().map(_.getString(0)).toSet
-    val want = cand.join(seen, Seq("url"), "left_anti")
-      .collect().map(_.getString(0)).toSet
-    assert(gotTree == want)
-    assert(want.size == 15000)
-    bcT.destroy()
-  }
-
   test("bloomDedup crawl is result-identical to exact-only crawl " +
       "and never rebuilds the sketch per wave") {
     val pages = SiteFixtures.pagesDf(spark).cache()
@@ -84,37 +56,19 @@ class SeenSetSpec extends AnyFunSuite {
       exact.seen.collect().map(_.getString(0)).toSet)
   }
 
-  test("cuckooDedup crawl is result-identical to exact-only crawl " +
-      "and never rebuilds the shard table per wave") {
-    val pages = SiteFixtures.pagesDf(spark).cache()
-    val spec = CrawlSpec(startUrls = Seq(SiteFixtures.QuotesBase),
-      parserId = "quotes", maxWaves = 20)
-    val exact = CrawlJob.run(spark, spec, pages)
-    SeenSet.fullBuilds.set(0)
-    val cuckoo = CrawlJob.run(spark, spec.copy(cuckooDedup = true), pages)
-    assert(SeenSet.fullBuilds.get() <= 3,
-      s"cuckoo rebuilt ${SeenSet.fullBuilds.get()} times over ${cuckoo.waves} waves")
-    def recs(r: CrawlJob.CrawlResult) =
-      r.records.orderBy(col("wave"), col("rank"), col("seq"))
-        .select("json").collect().map(_.getString(0)).toSeq
-    assert(recs(cuckoo) == recs(exact))
-    assert(cuckoo.seen.collect().map(_.getString(0)).toSet ==
-      exact.seen.collect().map(_.getString(0)).toSet)
-  }
-
   test("1,000-wave soak: flat per-wave sketch cost, geometric rebuilds, " +
       "every stale broadcast disposed") {
-    // Endurance proof for the incremental Bloom machinery (round-4 judge
-    // item 7): drive EXACTLY the wave loop's maintenance protocol —
-    // build-on-overfull, O(increment) mergeInPlace per wave,
-    // destroy-then-rebroadcast — for 1,000 synthetic waves and assert the
+    // Endurance proof for SeenSet.Sketch, the lifecycle the wave loop and
+    // the stream both hold: 1,000 synthetic waves of filterNew (bootstrap
+    // and regrowth; the probe plan itself is not run) then mergeIncrement
+    // (O(increment) mergeInPlace + destroy-then-rebroadcast). Asserts the
     // properties that keep a 10^10-URL crawl alive:
     //   1. full-seen rebuilds are geometric (O(log growth)), not per-wave;
     //   2. per-wave time stays FLAT (late-crawl waves no costlier than
     //      early ones — an O(|seen|)/wave regression shows up as a
     //      monotone climb);
     //   3. every superseded broadcast is destroyed (bounded executor
-    //      memory), only the live one survives;
+    //      memory), only the live one survives, and close() releases it;
     //   4. the merged filter still has zero false negatives across the
     //      whole crawl's keyspace.
     val K = 1500L // urls per wave → 1.5M total, crossing the 2^20
@@ -124,26 +78,22 @@ class SeenSetSpec extends AnyFunSuite {
       spark.range(lo, hi, 1, 2)
         .select(concat(lit("http://soak.example.com/p/"), col("id")).as("url"))
     SeenSet.fullBuilds.set(0)
-    var state = SeenSet.buildState(urls(0, K), K)
-    var bc = spark.sparkContext.broadcast(state.bloom)
-    val stale = scala.collection.mutable.ArrayBuffer
+    val sketch = new SeenSet.Sketch
+    val published = scala.collection.mutable.LinkedHashSet
       .empty[org.apache.spark.broadcast.Broadcast[_]]
     var seenCount = K
     val waveNanos = new Array[Long](waves)
     for (w <- 1 until waves) {
       val t0 = System.nanoTime()
-      if (state.overfull) {
-        stale += bc; bc.destroy()
-        state = SeenSet.buildState(urls(0, seenCount), seenCount)
-        bc = spark.sparkContext.broadcast(state.bloom)
-      }
-      state = SeenSet.mergeIncrement(
-        state, urls(seenCount, seenCount + K), K)
+      val inc = urls(seenCount, seenCount + K)
+      sketch.filterNew(inc, urls(0, seenCount))
+      published ++= sketch.broadcast
+      sketch.mergeIncrement(inc)
+      published ++= sketch.broadcast
       seenCount += K
-      stale += bc; bc.destroy()
-      bc = spark.sparkContext.broadcast(state.bloom)
       waveNanos(w) = System.nanoTime() - t0
     }
+    assert(sketch.count == seenCount)
     // 1. bootstrap + the single 2^20→4·count regrowth, nothing per-wave
     assert(SeenSet.fullBuilds.get() <= 3,
       s"${SeenSet.fullBuilds.get()} full rebuilds over $waves waves")
@@ -156,34 +106,42 @@ class SeenSetSpec extends AnyFunSuite {
     assert(late < early * 4,
       f"per-wave cost climbed: early median ${early / 1e6}%.1fms, " +
         f"late median ${late / 1e6}%.1fms")
-    // 3. all superseded broadcasts are dead (value() must throw), the
-    // live one still serves
-    assert(stale.size >= waves - 1)
-    val probe = stale.indices.by(math.max(1, stale.size / 17))
-    probe.foreach { i =>
-      assert(scala.util.Try(stale(i).value).isFailure,
+    // 3. one broadcast per merge plus one per full build; all superseded
+    // ones are dead (value() must throw), the live one still serves
+    assert(published.size >= waves)
+    val live = sketch.broadcast.get
+    assert(published.last eq live)
+    published.init.zipWithIndex.foreach { case (bc, i) =>
+      assert(scala.util.Try(bc.value).isFailure,
         s"stale broadcast #$i still live")
     }
     // 4. zero false negatives end-to-end + the fpp stayed near design
     val sample = Seq(0L, K - 1, seenCount / 2, seenCount - 1)
     sample.foreach(i =>
-      assert(bc.value.mightContain(s"http://soak.example.com/p/$i")))
+      assert(live.value.mightContain(s"http://soak.example.com/p/$i")))
     val fresh = (0 until 2000)
-      .count(i => bc.value.mightContain(s"http://other.example.com/q/$i"))
+      .count(i => live.value.mightContain(s"http://other.example.com/q/$i"))
     assert(fresh < 400, s"fp rate blew up: $fresh/2000 fresh urls flagged")
-    bc.destroy()
+    sketch.close()
+    assert(scala.util.Try(live.value).isFailure && sketch.broadcast.isEmpty)
   }
 
   test("mergeIncrement equals full rebuild membership (associative bit-or)") {
     val base = (0 until 10000).map(i => s"http://h.example.com/a/$i").toDF("url")
     val inc = (0 until 5000).map(i => s"http://h.example.com/b/$i").toDF("url")
-    val st0 = SeenSet.buildState(base, 10000)
-    val st1 = SeenSet.mergeIncrement(st0, inc, 5000)
-    assert(st1.count == 15000)
-    // no false negatives across BOTH halves after the in-place merge
+    val sketch = new SeenSet.Sketch
+    sketch.filterNew(inc, base) // bootstraps the filter from `base`
+    sketch.mergeIncrement(inc)
+    assert(sketch.count == 15000)
+    // 15,000 urls sit below the 2^20 capacity floor, so a full build over
+    // both halves at that capacity has the same geometry: the in-place
+    // merge must give exactly its bits
+    val merged = sketch.broadcast.get.value
+    assert(merged == SeenSet.build(base.union(inc), 1L << 20).bloom)
     (0 until 10000).foreach(i =>
-      assert(st1.bloom.mightContain(s"http://h.example.com/a/$i")))
+      assert(merged.mightContain(s"http://h.example.com/a/$i")))
     (0 until 5000).foreach(i =>
-      assert(st1.bloom.mightContain(s"http://h.example.com/b/$i")))
+      assert(merged.mightContain(s"http://h.example.com/b/$i")))
+    sketch.close()
   }
 }

@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import graft.state.SeenSet
 import graft.streaming.{StreamOps, StreamingCrawl}
 import graft.streaming.StreamingCrawl.UrlEvent
 
@@ -108,5 +109,46 @@ class StreamingSpec extends AnyFunSuite {
     assert(bySink("sink1") == bySink("sink2"))          // exact fan-out
     assert(bySink("sink1") ==
       Seq("http://s.com/1", "http://s.com/2", "http://s.com/3"))
+  }
+
+  test("foreachBatchCrawl: one live Bloom broadcast across micro-batches, " +
+      "each url reaches the sinks once") {
+    import spark.implicits._
+    implicit val sql = spark.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory("stream-bloom").toString
+    def u(i: Int) = s"http://b.com/$i"
+    val pages = (1 to 8).map(i => (u(i), 200, s"page $i")).toDF("url", "status", "text")
+    val sunk = scala.collection.mutable.ArrayBuffer.empty[String]
+    // the Bloom broadcast each batch's plan probes, and how many earlier
+    // ones were still live while that batch ran
+    val used = scala.collection.mutable.ArrayBuffer
+      .empty[org.apache.spark.broadcast.Broadcast[_]]
+    val liveEarlier = scala.collection.mutable.ArrayBuffer.empty[Int]
+    val sink: org.apache.spark.sql.DataFrame => Unit = df => used.synchronized {
+      sunk ++= df.select("url").as[String].collect()
+      val bcs = df.queryExecution.analyzed.flatMap(_.expressions)
+        .flatMap(_.collect { case udf: org.apache.spark.sql.catalyst.expressions.ScalaUDF =>
+          udf.function })
+        .collect { case SeenSet.MightContain(bc) => bc }.distinct
+      liveEarlier += used.count(bc => scala.util.Try(bc.value).isSuccess)
+      used ++= bcs
+    }
+    val stream = MemoryStream[String]
+    val q = StreamingCrawl.foreachBatchCrawl(spark,
+      stream.toDF().toDF("url"), pages, s"$dir/seen", Seq(sink)).start()
+    // batch 1 creates the seen table; batches 2-4 repeat earlier urls, so
+    // the sketch bootstraps in batch 2 and filters from then on
+    Seq(Seq(1, 2, 3), Seq(2, 3, 4), Seq(1, 4, 5, 6), Seq(6, 7, 1, 8, 8))
+      .foreach { batch =>
+        stream.addData(batch.map(u): _*)
+        q.processAllAvailable()
+      }
+    q.stop()
+    assert(sunk.sorted.toSeq == (1 to 8).map(u).sorted)
+    assert(used.size == 3 && used.distinct.size == 3,
+      s"expected one Bloom broadcast in each of batches 2-4, got $used")
+    assert(liveEarlier.toSeq == Seq(0, 0, 0, 0),
+      s"superseded broadcasts live while later batches ran: $liveEarlier")
+    used.foreach(bc => assert(scala.util.Try(bc.value).isFailure, s"$bc still live"))
   }
 }
