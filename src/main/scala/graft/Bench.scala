@@ -1,6 +1,7 @@
 package graft
 
 import java.util.concurrent.atomic.AtomicBoolean
+import scala.util.control.NonFatal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -220,10 +221,9 @@ object Bench {
           graft.state.SeenSet.build(seen, seenCount))
       case _ => deduped0.join(seen, Seq("url"), "left_anti")
     }
-    // Two-phase salted politeness ranking: a Zipf-1 mega-host holds ~6% of
-    // the frontier — a single-host window would be one straggler task and
-    // cap scaling (Amdahl). Phase 1 ranks within (host, salt) and keeps ≤k
-    // per salt bucket; phase 2 ranks the ≤ k·S survivors per host exactly.
+    // Politeness: the engine's exact two-phase salted top-k (TopK). A
+    // Zipf-1 mega-host holds ~6% of the frontier — a single-host window
+    // would be one straggler task and cap scaling (Amdahl).
     // `host` is derived HERE (codegen substring) rather than carried from
     // the input through the url-keyed shuffles above.
     val k = 64
@@ -231,19 +231,11 @@ object Bench {
       if (deriveHost) deduped.withColumn("host",
         substring_index(substring_index(col("url"), "//", -1), "/", 1))
       else deduped
-    val salted = withHost.withColumn("salt", pmod(hash(col("url")), lit(32)))
-      .withColumn("t1",
-        row_number().over(Window.partitionBy(col("host"), col("salt"))
-          .orderBy(col("priority").desc, col("rank").asc)))
-      .filter(col("t1") <= k).drop("t1", "salt")
+    val grantedAll = graft.pipeline.TopK(withHost, Seq(col("host")),
+      col("url"), 32, Seq(col("priority").desc, col("rank").asc), lit(k)).kept
     // the granted set leaves politeness as the BARE url — the fetch join
     // moves no politeness bookkeeping bytes through its shuffle
-    val grantedAll = salted.withColumn("tok",
-        row_number().over(Window.partitionBy(col("host"))
-          .orderBy(col("priority").desc, col("rank").asc)))
-      .filter(col("tok") <= k)
-    val granted =
-      if (wideRows) grantedAll.drop("tok") else grantedAll.select(col("url"))
+    val granted = if (wideRows) grantedAll else grantedAll.select(col("url"))
     val fetched = granted.join(pages, Seq("url"), "left")
     val out = fetched.groupBy(coalesce(col("status"), lit(-1)).as("status"))
       .agg(count(lit(1)).as("n")).collect()
@@ -358,6 +350,9 @@ object Bench {
     scala.collection.mutable.LinkedHashMap.empty[String, String]
   private val queryTimes =
     scala.collection.mutable.LinkedHashMap.empty[String, Double]
+  // query name → "<exception class>: <message>"; guarded by queryTimes
+  private val queryErrors =
+    scala.collection.mutable.LinkedHashMap.empty[String, String]
   private val emitted = new AtomicBoolean(false)
 
   private def put(k: String, v: Double, fmt: String = "%.3f"): Unit =
@@ -365,14 +360,46 @@ object Bench {
   private def putRaw(k: String, v: String): Unit =
     results.synchronized { results(k) = v }
 
+  /** Run one query and record its seconds under `queries`. A query that
+    * throws is recorded under `query_errors` instead, with no timing: a
+    * time-to-exception is not a measurement.
+    */
+  private[graft] def recordQuery(name: String)(body: => Unit): Unit = {
+    val q0 = System.nanoTime()
+    try {
+      body
+      val secs = (System.nanoTime() - q0) / 1e9
+      queryTimes.synchronized { queryTimes(name) = secs }
+    } catch {
+      case NonFatal(e) =>
+        System.err.println(s"[bench] query $name failed: $e")
+        queryTimes.synchronized {
+          queryErrors(name) = s"${e.getClass.getName}: ${e.getMessage}"
+        }
+    }
+  }
+
+  private[graft] def querySnapshot(): (Seq[(String, Double)], Seq[(String, String)]) =
+    queryTimes.synchronized { (queryTimes.toSeq, queryErrors.toSeq) }
+
+  /** The `query_errors` JSON object: name → message, JSON-escaped. */
+  private[graft] def errorsJson(errors: Seq[(String, String)]): String = {
+    def str(v: String): String = "\"" + v.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => " "
+      case c => c.toString
+    } + "\""
+    errors.map { case (k, v) => s"${str(k)}:${str(v)}" }.mkString("{", ",", "}")
+  }
+
   /** Print the ONE contract JSON line (idempotent). Safe to call from the
     * watchdog/shutdown hook while a phase is mid-flight.
     */
   private def emit(sfDir: String): Unit = {
     if (!emitted.compareAndSet(false, true)) return
-    val (qs, total) = queryTimes.synchronized {
-      (queryTimes.toSeq, queryTimes.values.sum)
-    }
+    val (qs, errs) = querySnapshot()
+    val total = qs.map(_._2).sum
     def qJson(entries: Seq[(String, Double)]): String =
       entries.map { case (k, v) => f""""$k":$v%.3f""" }.mkString("{", ",", "}")
     val extra = results.synchronized {
@@ -389,7 +416,7 @@ object Bench {
         "headline scaling_efficiency = the pre-declared executor family (the north rule's literal N-vs-4N-executor form), thread family reported alongside"
     }
     val fullLine =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":${qJson(qs)},"sf":"$sfDir"$extraPart,"scaling_note":"north-rule evidence, two families on the SAME fetch+dedup wave job + SAME input: executor scaling (1 executor x 8 cores, separate JVM, CPU-pinned, vs 4 executors x 8 cores on local-cluster) and thread scaling (pinned local[8] vs local[32]); each efficiency = T(4N)/(4*T(N)) from per-config best across interleaved subprocess visits; $headlineNote; host-noise dossier + floor analysis: BASELINE.md round-3/4"}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":${qJson(qs)},"query_errors":${errorsJson(errs)},"sf":"$sfDir"$extraPart,"scaling_note":"north-rule evidence, two families on the SAME fetch+dedup wave job + SAME input: executor scaling (1 executor x 8 cores, separate JVM, CPU-pinned, vs 4 executors x 8 cores on local-cluster) and thread scaling (pinned local[8] vs local[32]); each efficiency = T(4N)/(4*T(N)) from per-config best across interleaved subprocess visits; $headlineNote; host-noise dossier + floor analysis: BASELINE.md round-3/4"}"""
     // Full detail (every timing + the scaling-note prose) always lands in
     // BENCH_LAST.json, so a driver stdout-parsing quirk can never lose the
     // round's bench evidence.
@@ -739,16 +766,14 @@ object Bench {
         // flagship q17 runs the opt-in syncOrder parity mode, whose global
         // windows would spray WindowExec warnings into the driver's tail)
         try SparkEntry.queries("q20_dedup_exact")(spark, sfDir).count()
-        catch { case _: Throwable => () }
+        catch {
+          case NonFatal(e) =>
+            System.err.println(s"[bench] warm-up query q20_dedup_exact failed: $e")
+        }
         SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
           // each query needs budget headroom; record skips explicitly
-          if (remaining > 25) {
-            val q0 = System.nanoTime()
-            try { fn(spark, sfDir).count() } catch { case _: Throwable => () }
-            queryTimes.synchronized {
-              queryTimes(name) = (System.nanoTime() - q0) / 1e9
-            }
-          } else putRaw("queries_truncated", "true")
+          if (remaining > 25) recordQuery(name)(fn(spark, sfDir).count())
+          else putRaw("queries_truncated", "true")
         }
       } finally { spark.stop(); cleanupLocalDir() }
     }

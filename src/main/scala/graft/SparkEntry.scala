@@ -35,7 +35,7 @@ object SparkEntry {
     * severe: a controlled A/B (BenchExtra, sf0.1) put the same name-ordered
     * sweep at 165.7 s without the cleanup and 98.0 s with it (q45 28→2.1 s,
     * q72 13.2→1.5 s, q44 11.6→1.5 s). Callers of this map (Bench, Verify,
-    * TimeOne) all fully materialize each query before invoking the next, so
+    * BenchExtra) all fully materialize each query before invoking the next, so
     * nothing live is ever dropped; this frees memory, it caches nothing.
     * A failure here propagates: a session that cannot release its blocks
     * would skew every later query's timing.

@@ -1,51 +1,8 @@
 package graft.model
 
-/** Core data model of the crawl engine.
-  *
-  * Mirrors the reference's abstractions (see SURVEY.md §1) re-expressed as
-  * Spark-encodable case classes:
-  *  - FrontierEntry ≈ geziyor Request  (reference: client/request.go:10-35)
-  *  - FetchResult   ≈ geziyor Response (reference: client/response.go:12-22)
-  *  - CrawlSpec     ≈ geziyor Options  (reference: options.go:16-126)
-  *  - AuditRow      ≈ metrics/log rows (reference: metrics/metrics.go:28-35,
-  *                    middleware/log_stats.go:13-18)
-  *
-  * All fields use Spark-friendly types (String/Int/Long/Boolean/Map) so the
-  * default case-class Encoders apply and columns stay codegen-friendly.
-  */
-final case class FrontierEntry(
-    url: String,
-    host: String,
-    path: String,
-    depth: Int,
-    method: String = "GET",
-    meta: Map[String, String] = Map.empty,
-    retry: Int = 0,
-    priority: Int = 0,
-    // (wave, rank-within-wave) give the deterministic BFS discovery order the
-    // reference exhibits under Synchronized=true (geziyor.go:225-227).
-    wave: Int = 0,
-    rank: Long = 0L,
-    parserId: String = "default"
-)
-
-final case class FetchResult(
-    url: String,
-    host: String,
-    depth: Int,
-    status: Int,
-    contentType: String,
-    body: Array[Byte],
-    text: String,
-    isHtml: Boolean,
-    meta: Map[String, String],
-    retry: Int,
-    wave: Int,
-    location: String // redirect target, null if none
-)
-
 /** Immutable crawl specification — the "query". Field-for-field mirror of the
   * corpus-meaningful subset of the reference Options (options.go:16-126).
+  * The engine's rows are DataFrames (graft.pipeline.CrawlJob).
   */
 final case class CrawlSpec(
     startUrls: Seq[String],
@@ -176,27 +133,21 @@ final case class CrawlSpec(
     trapTemplateBudget: Option[Int] = None,
     // Adaptive per-host crawl rate (opt-in): an AIMD congestion controller
     // on top of the politeness window (q77 is the query face). A host whose
-    // wave had any response slower than adaptiveLatencyMs or any 5xx status
-    // HALVES its next-wave grant cap (floor 1); a healthy observed host
-    // adds 2 (ceiling adaptiveMaxCap). Unobserved hosts keep their cap.
+    // wave had any response slower than 2 s or any 5xx status HALVES its
+    // next-wave grant cap (floor 1); a healthy observed host adds 2
+    // (ceiling 64). Unobserved hosts keep their cap.
     // The effective per-host cap is min(hostTokensPerWave, Crawl-delay cap,
-    // AIMD cap); new hosts start at adaptiveInitialCap. State is one row
-    // per observed host (bounded, broadcast side), per run-session.
+    // AIMD cap); new hosts start at 8. State is one row per observed host
+    // (bounded, broadcast side), per run-session. Thresholds: CrawlJob's
+    // Adaptive* constants.
     adaptiveRate: Boolean = false,
-    adaptiveLatencyMs: Long = 2000,
-    adaptiveInitialCap: Int = 8,
-    adaptiveMaxCap: Int = 64,
     // WARC archive output (opt-in): write each wave's DELIVERED responses
     // as ISO-28500 members under <warcArchiveDir>/wave-NNNN/ via
     // graft.sinks.WarcSink — one member file per partition, streamed from
-    // the executors (no driver collect). warcDedup=true turns
-    // identical-payload captures within the wave into payload-free
-    // WARC/1.1 §6.7 revisit records (one digest-keyed window);
-    // warcGzip wraps each record in its own gzip member (the Common-Crawl
-    // `.warc.gz` random-access layout).
+    // the executors (no driver collect). Identical-payload captures within
+    // the wave become payload-free WARC/1.1 §6.7 revisit records; records
+    // are written uncompressed.
     warcArchiveDir: Option[String] = None,
-    warcDedup: Boolean = true,
-    warcGzip: Boolean = false,
     // Content sniffing fallback (opt-in; the reference's IsHTML is
     // header-only — client/response.go:36-44 — so this is OFF by default
     // for parity): when a response carries no Content-Type, derive one from
@@ -221,25 +172,3 @@ object CrawlSpec {
     "User-Agent" -> DefaultUserAgent
   )
 }
-
-/** One audit-table row: crawl log lines, metric counters and error/panic
-  * branches all land here (SURVEY.md §2.5).
-  */
-final case class AuditRow(
-    wave: Int,
-    kind: String,   // crawled | rejected_domain | robots_forbidden | retry |
-                    // fetch_miss | parse_error | redirect
-    method: String,
-    status: Int,
-    host: String,
-    url: String,
-    detail: String
-)
-
-/** Extracted record for the flagship quotes fixture (geziyor_test.go:76-94). */
-final case class QuoteRecord(
-    number: Int,
-    text: String,
-    author: String,
-    tags: Seq[String]
-)

@@ -1,6 +1,8 @@
 package graft.pipeline
 
 import java.time.Instant
+import scala.concurrent.{Await, Future}
+import scala.concurrent.duration.Duration
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -13,22 +15,16 @@ import graft.url.UrlOps
 /** The crawl engine: Geziyor's whole goroutine pipeline re-expressed as a
   * deterministic micro-batch loop of DataFrame transforms (SURVEY.md §3.1).
   *
-  * One wave = one BFS generation:
-  *   frontier → politeness token grant (per-host ranking window, optional
-  *              randomized per-request delay ordering)
-  *            → global concurrency / requests-per-second cap (two-phase)
-  *            → robots gate (broadcast join vs incrementally-fetched rules)
-  *            → cookie application (per-host jar state → meta("cookie"))
-  *            → custom request middlewares (ordered DataFrame→DataFrame)
-  *            → RFC2616 cache decision (serve-cached / revalidate / fetch)
-  *            → fetch join vs pages corpus (with transparent redirect
-  *              following, bounded by maxRedirect; rendered mode fetches the
-  *              pre-rendered text variant)
-  *            → validator/304 merge for revalidations
-  *            → retryable statuses re-enqueued (retry ≤ retryTimes)
-  *            → custom response middlewares → decode + parse
-  *            → discovered links: AllowedDomains filter → intra-wave
-  *              first-wins dedup → anti-join vs seen set → next frontier
+  * One wave = one BFS generation, run as named stages over one
+  * [[WaveState]] (the reference's middleware chain, SURVEY.md §1): gate
+  * (per-host politeness grant, global wave cap) → robots (rules for new
+  * hosts, gate) → request chain (cookies, custom middlewares, RFC2616
+  * cache decision) → fetch (corpus join, redirects, 304 merge) → respond
+  * (retries, action programs, response middlewares, WARC) → extract
+  * (parse, links, AllowedDomains) → dedup (first-wins, seen anti-join) →
+  * assemble (next frontier) → account (audit, lineage, state commit).
+  * Each optional feature is a method the loop calls only when its spec
+  * field is on.
   *
   * Middleware-order fidelity (geziyor.go:63-68,121-130): AllowedDomains runs
   * BEFORE dedup (blocked-domain urls never enter the seen set); robots runs
@@ -43,13 +39,10 @@ import graft.url.UrlOps
   *    reuse/coalesce partitions; at 10^10 urls the seen set lives in the
   *    Parquet state table, prefiltered (CrawlSpec.bloomDedup) by the one
   *    Bloom `SeenSet.Sketch` the crawl holds from first probe to exit;
-  *  - the politeness window shuffles on host; mega-hosts are bounded by the
-  *    exact two-phase salted ranking (top-k per (host,salt), then top-k per
-  *    host over ≤ k·S survivors, S = SkewSaltBuckets);
-  *  - the global concurrency cap is the same two-phase shape: per-bucket
-  *    top-cap, then the exact global cap over ≤ cap·B bounded survivors —
-  *    by DEFAULT (syncOrder=false) no per-wave window ever ranks an
-  *    unbounded input on a single partition;
+  *  - the politeness grant and the global concurrency cap are both the
+  *    exact two-phase salted top-k ([[TopK]]), so by DEFAULT
+  *    (syncOrder=false) no per-wave window ever ranks an unbounded input
+  *    on a single partition;
   *  - robots rules and the cookie jar are one row per host → broadcast;
   *  - per-wave `localCheckpoint` truncates lineage so plan analysis stays
   *    O(1) in wave count (on a cluster: reliable checkpoint / state table).
@@ -82,14 +75,37 @@ object CrawlJob {
 
   private val RedirectStatuses = Seq(301, 302, 303, 307, 308)
 
-  /** Salt buckets of the politeness ranking's first phase: a mega-host's
-    * window work spreads over this many tasks (SURVEY.md §7 skew note).
-    */
+  // TopK salt buckets of the politeness grant and the global wave cap;
+  // url-hash buckets of the scale-mode rank (see bucketRank)
   private val SkewSaltBuckets = 8
+  private val CapBuckets = 32
+  private val RankBuckets = 1024
 
-  // robots.txt parsing + matching lives in RobotsRules (full
-  // temoto/robotstxt semantics: per-agent groups, Allow longest-match
-  // precedence, `*`/`$` wildcards, FromStatusAndBytes status mapping).
+  // AIMD controller (CrawlSpec.adaptiveRate): slow-response threshold,
+  // a new host's cap, the cap ceiling
+  private val AdaptiveLatencyMs = 2000L
+  private val AdaptiveInitialCap = 8L
+  private val AdaptiveMaxCap = 64L
+
+  // WARC archive (CrawlSpec.warcArchiveDir): identical payloads within a
+  // wave become revisit records; records are written uncompressed
+  private val WarcDedup = true
+  private val WarcGzip = false
+
+  /** The corpus columns a fetched row carries: the one template for the
+    * empty fetch accumulator, the redirect drop list and cache-served rows.
+    */
+  private val FetchCols = Seq(
+    "p_status" -> "int", "p_ct" -> "string", "p_html" -> "binary",
+    "p_text" -> "string", "p_setck" -> "string", "p_etag" -> "string",
+    "p_lastmod" -> "string", "p_latency" -> "long",
+    "p_warc_ts" -> "timestamp")
+
+  private def withFetchCols(df: DataFrame,
+      set: Map[String, Column] = Map.empty): DataFrame =
+    FetchCols.foldLeft(df) { case (d, (name, dt)) =>
+      d.withColumn(name, set.getOrElse(name, lit(null).cast(dt)))
+    }
 
   /** Deterministic per-(url, wave) politeness delay in ms
     * (middleware/delay.go:20-24: uniform in [0.5d, 1.5d) when randomized).
@@ -104,6 +120,23 @@ object CrawlJob {
       conv(substring(md5(concat_ws(":", col("url"), col("wave"))), 1, 12),
         16, 10).cast("long") % d
 
+  /** Scale-mode frontier rank: unique, deterministic and P-way parallel,
+    * not a global order — url-hash bucket · 2^40 + row number by `order`.
+    */
+  private def bucketRank(order: Column*): Column = {
+    val bucket = pmod(hash(col("url")), lit(RankBuckets))
+    bucket.cast("long") * lit(1L << 40) +
+      row_number().over(Window.partitionBy(bucket).orderBy(order: _*))
+        .cast("long")
+  }
+
+  /** Audit rows (wave, kind, method, status, host, url, detail). */
+  private def auditRows(df: DataFrame, kind: String,
+      status: Column = lit(0), detail: Column = lit(""),
+      method: Column = col("method"), wave: Column = col("wave"),
+      url: Column = col("url")): DataFrame =
+    df.select(wave, lit(kind), method, status, col("host"), url, detail)
+
   def run(
       spark: SparkSession,
       spec: CrawlSpec,
@@ -114,33 +147,166 @@ object CrawlJob {
       requestMiddlewares: Seq[DataFrame => DataFrame] = Nil,
       responseMiddlewares: Seq[DataFrame => DataFrame] = Nil,
       cacheDf: Option[DataFrame] = None): CrawlResult = {
+    val st = new WaveState(spark, spec, pages, cacheDf)
+
+    // ---- resume or cold start -------------------------------------------
+    stateDir.flatMap(StateStore.latestCommitted) match {
+      case Some(w) => st.resume(stateDir.get, w)
+      case None => st.coldStart(seedsDf)
+    }
+    val metricsServer = graft.metrics.MetricsServer.start(
+      spec.metricsType, () => st.liveMetrics(), spec.metricsPort)
+    // Per-host wave cap: the spec's hostTokensPerWave, optionally
+    // tightened by robots Crawl-delay and by the AIMD controller.
+    val honorDelay = spec.honorCrawlDelay && !spec.robotsTxtDisabled
+    val hostCapped = spec.hostTokensPerWave != Int.MaxValue || honorDelay ||
+      spec.adaptiveRate
+    // global concurrency cap (geziyor.go:109-111 semaphore → wave size
+    // cap) + RequestsPerSecond × waveInterval (options.go:87) — both
+    // collapse to a wave-size bound; excess is deferred, never dropped
+    val rpsCap =
+      if (spec.requestsPerSecond > 0)
+        math.max(1L, spec.requestsPerSecond.toLong * spec.waveIntervalMs / 1000L)
+      else Long.MaxValue
+    val waveCap = math.min(spec.concurrentRequests.toLong, rpsCap)
+
+    var done = false
+    st.frontier = st.frontier.localCheckpoint(true)
+    try {
+    while (!done && st.wave < spec.maxWaves) {
+      // ONE count action doubles as the emptiness probe AND the
+      // frontier_size metric (frontier is checkpointed, so the count scans
+      // cached partitions)
+      val frontierN = st.frontier.count()
+      if (frontierN == 0) { done = true }
+      else {
+        st.auditInc.clear()
+        // ---- gate -------------------------------------------------------
+        val (hostGranted, hostDeferred) =
+          if (!hostCapped) (st.frontier, st.emptyFrontier)
+          else {
+            val req = st.frontier.filter(!col("is_retry"))
+            val capped =
+              if (honorDelay) st.crawlDelayCap(req) else st.tokenCap(req)
+            st.grant(if (spec.adaptiveRate) st.aimdCap(capped) else capped)
+          }
+        val (granted, deferred) =
+          if (waveCap >= Int.MaxValue) (hostGranted, hostDeferred)
+          else st.capWave(hostGranted, hostDeferred, waveCap)
+
+        // ---- robots -----------------------------------------------------
+        val newRules =
+          if (spec.robotsTxtDisabled) None else st.fetchRobots(granted)
+        val sitemapCand =
+          if (spec.sitemapDiscovery) newRules.map(st.sitemapLinks) else None
+        granted.persist(StorageLevel.MEMORY_AND_DISK)
+        deferred.persist(StorageLevel.MEMORY_AND_DISK)
+        val allowed =
+          if (spec.robotsTxtDisabled) granted else st.robotsGate(granted)
+
+        // ---- request chain ----------------------------------------------
+        val withCookies =
+          if (st.cookiesActive && st.cookieJarNonEmpty) st.applyCookies(allowed)
+          else allowed
+        val requested =
+          if (requestMiddlewares.isEmpty) withCookies
+          else st.requestChain(withCookies, requestMiddlewares)
+        val (toFetch, cacheServed) =
+          if (st.cacheActive) st.cacheDecision(requested)
+          else (st.noCache(requested), None)
+
+        // ---- fetch ------------------------------------------------------
+        val (pending, lineageF) = st.dispatch(toFetch, frontierN)
+        val fetchedNew = st.fetch(pending)
+        val fetchedRev =
+          if (st.cacheActive) st.revalidate(fetchedNew)
+          else fetchedNew.withColumn("revalidated_304", lit(false))
+        val fetched = st.settle(
+          cacheServed.fold(fetchedRev)(st.serveCached(fetchedRev, _)))
+
+        // ---- respond ----------------------------------------------------
+        if (spec.adaptiveRate) st.updateAimd(fetched)
+        if (st.cookiesActive) st.absorbCookies(fetched)
+        val (delivered, requeue) = st.respond(fetched)
+        val rendered = st.actionProg.fold(delivered)(st.runActions(delivered, _))
+        val responses =
+          responseMiddlewares.foldLeft(rendered)((df, mw) => mw(df))
+        st.logCrawled(responses)
+        spec.warcArchiveDir.foreach(st.archive(responses, _))
+
+        // ---- extract ----------------------------------------------------
+        val parsed = st.extract(responses, parsers)
+        val cand = st.links(parsed, sitemapCand)
+
+        // ---- dedup ------------------------------------------------------
+        val candNew = st.dedup(cand)
+        val candGranted =
+          spec.trapTemplateBudget.fold(candNew)(st.trapGate(candNew, _))
+
+        // ---- assemble ---------------------------------------------------
+        val (frontierF, seenInc) =
+          st.assemble(candGranted, candNew, deferred, requeue)
+
+        // ---- account ----------------------------------------------------
+        st.account(frontierN, frontierF, lineageF)
+        granted.unpersist()
+        deferred.unpersist()
+        stateDir.foreach(st.commit(_, seenInc))
+        st.wave += 1
+      }
+    }
+
+    // single final materialization of the accumulated outputs, then release
+    // the per-wave caches they were computed from
+    st.records = st.records.localCheckpoint(true)
+    locally {
+      val a = st.audit.localCheckpoint(true) // action outside the lock
+      st.metricsBuf.synchronized { st.audit = a }
+    }
+    st.order = st.order.localCheckpoint(true)
+    st.persisted.foreach(_.unpersist())
+
+    import spark.implicits._
+    val metrics = st.liveMetrics()
+    val lineage = st.lineageBuf.toSeq.toDF("wave", "partition_id", "n_rows")
+    CrawlResult(st.records, st.audit, st.seen, st.order, metrics, lineage,
+      st.wave)
+    } finally {
+      st.sketch.close()
+      metricsServer.foreach(_.stop())
+    }
+  }
+
+  /** The crawl's state across waves (the wave loop's variables) and its
+    * stages. UDF bodies below capture only local vals: a closure over a
+    * field would drag this (unserializable) holder into every task.
+    */
+  private final class WaveState(spark: SparkSession, spec: CrawlSpec,
+      pages: DataFrame, cacheDf: Option[DataFrame]) {
     import spark.implicits._
 
-    val hostOfU = udf((u: String) => UrlOps.hostOf(u))
-    val pathOfU = udf((u: String) => UrlOps.pathOf(u))
+    private val hostOfU = udf((u: String) => UrlOps.hostOf(u))
+    private val pathOfU = udf((u: String) => UrlOps.pathOf(u))
 
-    val cacheActive =
+    val cacheActive: Boolean =
       (spec.cachePolicy == "rfc2616" || spec.cachePolicy == "dummy") &&
         cacheDf.nonEmpty
-    val cookiesActive =
+    val cookiesActive: Boolean =
       !spec.cookiesDisabled && pages.columns.contains("set_cookie")
-    // Rendered-mode custom action program (pipeline/Actions.scala): the
-    // effective replaced-or-default PreActions plus appended per-request
-    // actions (client/client.go:215-221). None = the default rendered path
-    // (deliver the pre-rendered text variant untouched) stays zero-cost.
+    // Rendered-mode custom action program (pipeline/Actions.scala;
+    // client/client.go:215-221). None = the default rendered path.
     val actionProg: Option[Seq[Actions.Action]] =
       if (spec.rendered &&
           (spec.preActions.isDefined || spec.requestActions.nonEmpty))
         Some(Actions.program(spec.preActions, spec.requestActions))
       else None
 
-    // fetch-relevant corpus projection (Catalyst prunes the parquet scan to
-    // these columns when `pages` comes from files). Optional-feature columns
-    // are projected only when the feature is on, keeping the scan narrow.
-    def optCol(name: String, dt: String, want: Boolean): Column =
+    // fetch-relevant corpus projection; optional-feature columns are read
+    // only when the feature is on, keeping the parquet scan narrow
+    private def optCol(name: String, dt: String, want: Boolean): Column =
       if (want && pages.columns.contains(name)) col(name).cast(dt)
       else lit(null).cast(dt)
-    val corpus = pages.select(
+    private val corpus = pages.select(
       col("url").as("p_url"), col("status").as("p_status"),
       col("content_type").as("p_ct"), col("location").as("p_loc"),
       col("html").as("p_html"),
@@ -153,43 +319,72 @@ object CrawlJob {
       optCol("warc_ts", "timestamp",
         spec.warcArchiveDir.isDefined).as("p_warc_ts"))
 
-    val emptyAudit = Seq.empty[(Int, String, String, Int, String, String, String)]
-      .toDF("wave", "kind", "method", "status", "host", "url", "detail")
-    val emptyRecords = Seq.empty[(Int, Long, Int, String)]
+    private val emptyAudit =
+      Seq.empty[(Int, String, String, Int, String, String, String)]
+        .toDF("wave", "kind", "method", "status", "host", "url", "detail")
+    private val emptyRecords = Seq.empty[(Int, Long, Int, String)]
       .toDF("wave", "rank", "seq", "json")
-    val emptyOrder = Seq.empty[(Int, Long, String)].toDF("wave", "rank", "url")
-    val emptyRules = Seq.empty[(String, Seq[RobotsRules.Rule], Option[Double])]
-      .toDF("r_host", "rules", "crawl_delay")
-    // RFC 6265 jar: keyed by (domain, name, path) — c_domain is the
-    // normalized Domain attribute (host-suffix matched at application) or
-    // the exact response host when absent (c_hostonly) — plus value,
-    // Secure flag, absolute expiry epoch (-1 = session) and receipt wave
-    val emptyCookies =
+    private val emptyOrder =
+      Seq.empty[(Int, Long, String)].toDF("wave", "rank", "url")
+    private val emptyRules =
+      Seq.empty[(String, Seq[RobotsRules.Rule], Option[Double])]
+        .toDF("r_host", "rules", "crawl_delay")
+    // RFC 6265 jar keyed by (domain, name, path); c_domain is the Domain
+    // attribute, or the response host when absent (c_hostonly);
+    // c_expires = -1 for a session cookie
+    private val emptyCookies =
       Seq.empty[(String, Boolean, String, String, String, Boolean, Long, Int)]
         .toDF("c_domain", "c_hostonly", "c_name", "c_path", "c_value",
           "c_secure", "c_expires", "c_wave")
-    val emptyFrontier = Seq
+    val emptyFrontier: DataFrame = Seq
       .empty[(String, String, String, Int, String, Map[String, String], Int, Int, Int, Long, String, Boolean)]
       .toDF("url", "host", "path", "depth", "method", "meta", "retry",
         "priority", "wave", "rank", "parser_id", "is_retry")
+    private val frontierCols = emptyFrontier.columns.map(col).toIndexedSeq
 
-    // ---- resume or cold start -------------------------------------------
-    var startWave = 0
-    var frontier = emptyFrontier
-    var seen = emptyFrontier.select(col("url"))
-    var records = emptyRecords
-    var audit = emptyAudit
-    var order = emptyOrder
-    var robotRules = emptyRules // (r_host, rules) for hosts seen so far
-    var rulesDeltas = 0 // non-empty robots deltas since last compaction
-    var cookieJar = emptyCookies // (c_host, c_cookie) accumulated Set-Cookies
+    // ---- crawl state ----------------------------------------------------
+    var wave = 0
+    var frontier: DataFrame = emptyFrontier
+    var seen: DataFrame = emptyFrontier.select(col("url"))
+    var records: DataFrame = emptyRecords
+    var audit: DataFrame = emptyAudit
+    var order: DataFrame = emptyOrder
+    private var robotRules = emptyRules // (r_host, rules) for hosts seen so far
+    private var rulesDeltas = 0 // non-empty robots deltas since last compaction
+    private var cookieJar = emptyCookies // accumulated Set-Cookies
     var cookieJarNonEmpty = false
-    // jar-shape flags, refreshed whenever the (tiny, checkpointed) jar
-    // changes: they gate which apply-side join slices are even built, so
-    // the common all-host-only jar never pays for the Domain machinery
-    var jarHasDomainCk = false // any non-host-only (Domain-attribute) cookie
-    var jarHasTldCk = false //   … with a single-label domain (no 2-label key)
-    def refreshJarFlags(): Unit = {
+    // jar-shape flags: the common all-host-only jar never builds the
+    // Domain join slices
+    private var jarHasDomainCk = false // any non-host-only (Domain-attribute) cookie
+    private var jarHasTldCk = false //   … with a single-label domain (no 2-label key)
+    // at cold start the seed set is the first seen-delta increment
+    private var coldSeedSeen: Option[DataFrame] = None
+    // Bloom prefilter of the seen set (CrawlSpec.bloomDedup)
+    val sketch = new graft.state.SeenSet.Sketch
+    // trap budget: (host, template) → urls granted so far
+    private var trapCounts: Option[DataFrame] = None
+    // AIMD: observed host → current grant cap
+    private var hostCaps: Option[DataFrame] = None
+
+    // per-wave counters + per-partition lineage of the granted set
+    val metricsBuf = scala.collection.mutable.ArrayBuffer.empty[(Int, String, Long)]
+    val lineageBuf = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Long)]
+    // Per-wave persists live until the end of the crawl: the accumulators
+    // union LAZY references into them, folded ONCE at loop exit.
+    val persisted = scala.collection.mutable.ArrayBuffer
+      .empty[org.apache.spark.sql.Dataset[_]]
+
+    // ---- this wave's increments ------------------------------------------
+    val auditInc = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    private var orderInc: DataFrame = emptyOrder
+    private var recordsInc: DataFrame = emptyRecords
+    private var auditIncDf: DataFrame = emptyAudit
+
+    // deterministic wave clock for cookie expiry and WARC dates
+    private def waveNowEpoch: Long =
+      spec.cacheNowEpochSec + wave.toLong * spec.waveIntervalMs / 1000L
+
+    private def refreshJarFlags(): Unit = {
       val s = cookieJar.filter(!col("c_hostonly"))
         .agg(count(lit(1)),
           count(when(size(split(col("c_domain"), "\\.")) < 2, 1)))
@@ -198,163 +393,9 @@ object CrawlJob {
       jarHasTldCk = s.getLong(1) > 0
     }
 
-    // At cold start the seed set itself is the first seen-delta increment
-    // (resume reconstructs `seen` as the union of committed increments).
-    var coldSeedSeen: Option[DataFrame] = None
-
-    val resumed = stateDir.flatMap(StateStore.latestCommitted)
-    resumed match {
-      case Some(w) =>
-        val dir = stateDir.get
-        frontier = StateStore.read(spark, dir, w, "frontier")
-        robotRules = StateStore.read(spark, dir, w, "robot_rules")
-        // accumulators resume as the union of committed per-wave deltas
-        val seenDeltas = StateStore.readDeltas(spark, dir, "seen", w)
-        // Legacy-layout guard (round-3 advice): a checkpoint written by the
-        // pre-delta format stored accumulators as wave=N snapshots; reading
-        // it with the delta reader would silently resume with an EMPTY seen
-        // set (re-fetching everything) and drop all prior records. Fail
-        // loudly instead of corrupting the crawl.
-        if (seenDeltas.isEmpty && StateStore.hasTable(dir, w, "seen"))
-          throw new IllegalStateException(
-            s"checkpoint at $dir wave=$w uses the legacy pre-delta layout " +
-              "(accumulators under wave=N/ snapshots, no delta/ dir); " +
-              "resuming would silently lose the seen set and all records — " +
-              "re-run the crawl from scratch or migrate the checkpoint " +
-              "(copy wave=N/<table> to delta/<table>/wave=N)")
-        seen = seenDeltas.getOrElse(emptyFrontier.select(col("url")))
-        records = StateStore.readDeltas(spark, dir, "records", w)
-          .getOrElse(emptyRecords)
-        audit = StateStore.readDeltas(spark, dir, "audit", w)
-          .getOrElse(emptyAudit)
-        order = StateStore.readDeltas(spark, dir, "crawl_order", w)
-          .getOrElse(emptyOrder)
-        if (StateStore.hasTable(dir, w, "cookies")) {
-          cookieJar = StateStore.read(spark, dir, w, "cookies")
-          if (!cookieJar.columns.contains("c_name") ||
-              !cookieJar.columns.contains("c_path") ||
-              !cookieJar.columns.contains("c_domain"))
-            throw new IllegalStateException(
-              s"checkpoint at $dir wave=$w has a legacy cookies snapshot " +
-                "(pre-RFC6265 jar without (host, name, path) keys); " +
-                "resuming would fail downstream — restart the crawl or " +
-                "migrate the snapshot")
-          cookieJarNonEmpty = !cookieJar.isEmpty
-          if (cookieJarNonEmpty) refreshJarFlags()
-        }
-        startWave = w + 1
-      case None =>
-        // Seeds pass AllowedDomains + dedup exactly like discovered urls
-        // (the reference runs seeds through the same middleware chain).
-        // Seed source: a driver-side StartURLs list (parity mode, ordered)
-        // or a seeds DataFrame with a `url` column (scale mode — a 10^10
-        // frontier seed list is a table, not a Seq). Optional seed columns
-        // complete the Get/Head/Post helper surface (geziyor.go:189-217):
-        // `method` (default GET — HEAD skips decode downstream) and `body`
-        // (the POST payload, carried as meta("body") so parsers see it).
-        val seedsRaw = seedsDf match {
-          case Some(df) =>
-            val bw = Window
-              .partitionBy(pmod(hash(col("url")), lit(1024)))
-              .orderBy(col("url"))
-            val methodCol =
-              if (df.columns.contains("method"))
-                coalesce(col("method"), lit("GET"))
-              else lit("GET")
-            val metaCol =
-              if (df.columns.contains("body"))
-                when(col("body").isNotNull, map(lit("body"), col("body")))
-                  .otherwise(map().cast("map<string,string>"))
-              else map().cast("map<string,string>")
-            df.select(Seq(col("url")) ++
-                (if (df.columns.contains("method")) Seq(col("method")) else Nil) ++
-                (if (df.columns.contains("body")) Seq(col("body")) else Nil): _*)
-              .withColumn("host", hostOfU(col("url")))
-              .withColumn("path", pathOfU(col("url")))
-              .withColumn("depth", lit(0))
-              .withColumn("meta", metaCol)
-              .withColumn("method", methodCol)
-              .drop("body")
-              .withColumn("retry", lit(0))
-              .withColumn("priority", lit(0))
-              .withColumn("wave", lit(0))
-              .withColumn("rank",
-                pmod(hash(col("url")), lit(1024)).cast("long") *
-                  lit(1L << 40) + row_number().over(bw).cast("long"))
-              .withColumn("parser_id", lit(spec.parserId))
-              .withColumn("is_retry", lit(false))
-              // canonical column ORDER (positional unions downstream)
-              .select(emptyFrontier.columns.map(col).toIndexedSeq: _*)
-          case None =>
-            spec.startUrls.zipWithIndex
-              .map { case (u, i) =>
-                (u, UrlOps.hostOf(u), UrlOps.pathOf(u), 0, "GET",
-                  Map.empty[String, String], 0, 0, 0, i.toLong, spec.parserId,
-                  false)
-              }
-              .toDF("url", "host", "path", "depth", "method", "meta", "retry",
-                "priority", "wave", "rank", "parser_id", "is_retry")
-        }
-        val seedsAllowed =
-          if (spec.allowedDomains.isEmpty) seedsRaw
-          else seedsRaw.filter(col("host").isin(spec.allowedDomains: _*))
-        // Only GETs are deduped / enter the seen set
-        // (middleware/duplicate_requests.go:17: non-GET requests are never
-        // filtered and never recorded) — a POST seed must not block a later
-        // GET to the same url.
-        frontier = seedsAllowed.filter(col("method") === "GET")
-          .dropDuplicates("url")
-          .unionByName(seedsAllowed.filter(col("method") =!= "GET"))
-        seen = seedsAllowed.filter(col("method") === "GET")
-          .dropDuplicates("url").select(col("url"))
-        coldSeedSeen = Some(seen)
-    }
-
-    // RFC2616 serve decision as a classifier over the cached entry's headers
-    // (Freshness.decide — the pure engine; cache/cache.go:182-265). The
-    // clock is injected via spec.cacheNowEpochSec (fake-clock determinism).
-    val cacheNow = Instant.ofEpochSecond(spec.cacheNowEpochSec)
-    val reqHeaders = CrawlSpec.DefaultHeaders
-    val decideU = udf((method: String, cached: Map[String, String]) =>
-      Freshness.decide(method, reqHeaders, Option(cached), cacheNow) match {
-        case Freshness.ServeCached => "serve_cached"
-        case _: Freshness.Revalidate => "revalidate"
-        case Freshness.FetchAndStore => "fetch"
-        case Freshness.FetchNoStore => "fetch_no_store"
-        case Freshness.GatewayTimeout504 => "gateway_504"
-      })
-    val cacheCols = Seq("k_headers", "k_body", "k_ct", "cache_action")
-
-    // per-wave counters + per-partition lineage of the granted set
-    // (north-star: frontier mutations emit lineage + metrics to the audit
-    // store). Tiny driver-side buffers — ≤ #partitions rows per wave.
-    val metricsBuf = scala.collection.mutable.ArrayBuffer.empty[(Int, String, Long)]
-    val lineageBuf = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Long)]
-
-    // Per-wave persists live until the end of the crawl: the records/
-    // audit/order accumulators union LAZY references into them, so each
-    // wave's pipeline materializes exactly once (at its own checkpoint
-    // points), and the accumulated outputs are folded ONCE at loop exit.
-    val persisted = scala.collection.mutable.ArrayBuffer
-      .empty[org.apache.spark.sql.Dataset[_]]
-
-    // Bloom prefilter of the seen set (CrawlSpec.bloomDedup): bootstrapped
-    // on the first probe, maintained incrementally, released at exit
-    val sketch = new graft.state.SeenSet.Sketch
-    // crawl-trap gate state: (host, template) → urls granted so far; one
-    // row per distinct template ever granted (bounded, broadcast side)
-    var trapCounts: Option[DataFrame] = None
-    // AIMD rate state (CrawlSpec.adaptiveRate): host → current grant cap;
-    // one row per host ever OBSERVED in a fetch wave (bounded, broadcast)
-    var hostCaps: Option[DataFrame] = None
-
-    // live counter snapshot — re-rendered per scrape by the metrics
-    // endpoint (metrics/metrics.go:100-115) and reused for the final
-    // CrawlResult.metrics table
-    // Scrapes run on the MetricsServer's HTTP handler threads while the
-    // wave loop appends to metricsBuf / reassigns `audit` — snapshot both
-    // under the shared metricsBuf lock so a mid-append scrape never sees a
-    // torn buffer copy or a half-built audit plan.
+    // live counter snapshot, per scrape (metrics/metrics.go:100-115) and
+    // for CrawlResult.metrics. Scrapes run on the metrics server's threads:
+    // snapshot `audit` and the buffer under the metricsBuf lock.
     def liveMetrics(): DataFrame = {
       val (auditSnap, bufSnap) = metricsBuf.synchronized {
         (audit, metricsBuf.toList)
@@ -364,730 +405,653 @@ object CrawlJob {
         .agg(count(lit(1)).as("value"))
       auditMetrics.union(bufSnap.toDF("wave", "metric", "value"))
     }
-    val metricsServer = graft.metrics.MetricsServer.start(
-      spec.metricsType, () => liveMetrics(), spec.metricsPort)
 
-    var wave = startWave
-    var done = false
-    frontier = frontier.localCheckpoint(true)
-    try {
-    while (!done && wave < spec.maxWaves) {
-      // ONE count action doubles as the emptiness probe AND the
-      // frontier_size metric (isEmpty + a later count() were two separate
-      // jobs per wave through r5; frontier is checkpointed, so the count
-      // scans cached partitions)
-      val frontierN = frontier.count()
-      if (frontierN == 0) { done = true }
-      else {
-        // ---- politeness: grant ≤ k tokens per host this wave ------------
-        // (retries bypass the token budget — the reference retries inside
-        // the client without re-running the delay middleware)
-        val cols = emptyFrontier.columns.map(col).toIndexedSeq
-        val polOrder: Seq[Column] =
-          if (spec.requestDelayMs > 0)
-            Seq(col("priority").desc, col("delay_ms").asc, col("rank").asc)
-          else Seq(col("priority").desc, col("rank").asc)
-        // Per-host wave cap: the spec's hostTokensPerWave, optionally
-        // tightened by the host's robots Crawl-delay (the reference's
-        // robots lib exposes Group.CrawlDelay; wave-mode collapse:
-        // ≤ max(1, floor(waveInterval / delay)) grants per wave). Rules
-        // are fetched lazily, so a host's FIRST wave runs uncapped —
-        // exactly like the reference's lazy robots fetch timing.
-        val honorDelay = spec.honorCrawlDelay && !spec.robotsTxtDisabled
-        val (granted, deferred) =
-          if (spec.hostTokensPerWave == Int.MaxValue && !honorDelay &&
-              !spec.adaptiveRate)
-            (frontier, emptyFrontier)
-          else {
-            val nonRetry00 = frontier.filter(!col("is_retry"))
-            val nonRetry0 =
-              if (!honorDelay)
-                nonRetry00.withColumn("hcap",
-                  lit(spec.hostTokensPerWave.toLong))
-              else nonRetry00
-                .join(broadcast(robotRules
-                    .select(col("r_host"), col("crawl_delay"))),
-                  col("host") === col("r_host"), "left")
-                .withColumn("hcap",
-                  least(lit(spec.hostTokensPerWave.toLong),
-                    coalesce(
-                      greatest(lit(1L),
-                        floor(lit(spec.waveIntervalMs / 1000.0) /
-                          col("crawl_delay")).cast("long")),
-                      lit(spec.hostTokensPerWave.toLong))))
-                .drop("r_host", "crawl_delay")
-            // AIMD cap (CrawlSpec.adaptiveRate): tighten by the host's
-            // controller state — new/unobserved hosts run at the initial
-            // cap; the broadcast side is one row per observed host
-            val nonRetry1 =
-              if (!spec.adaptiveRate) nonRetry0
-              else hostCaps match {
-                case Some(caps) => nonRetry0
-                  .join(broadcast(caps),
-                    col("host") === col("a_host"), "left")
-                  .withColumn("hcap", least(col("hcap"),
-                    coalesce(col("acap"),
-                      lit(spec.adaptiveInitialCap.toLong))))
-                  .drop("a_host", "acap")
-                case None => nonRetry0.withColumn("hcap",
-                  least(col("hcap"), lit(spec.adaptiveInitialCap.toLong)))
-              }
-            val nonRetry =
-              if (spec.requestDelayMs > 0)
-                nonRetry1.withColumn("delay_ms",
-                  delayExpr(spec.requestDelayMs, spec.randomDelay))
-              else nonRetry1
-            // Two-phase salted ranking: phase 1 ranks within (host, salt) and
-            // keeps ≤k per bucket — the global per-host top-k (by the same
-            // total order) is always a subset of the per-salt survivors, so
-            // phase 2 over ≤ k·S rows/host is EXACT while the mega-host's
-            // window work spreads across S tasks (SURVEY.md §7 skew note).
-            val salted = nonRetry
-              .withColumn("salt",
-                pmod(hash(col("url")), lit(SkewSaltBuckets)))
-              .withColumn("t1", row_number().over(
-                Window.partitionBy(col("host"), col("salt"))
-                  .orderBy(polOrder: _*)))
-            val phase1 = salted.filter(col("t1") <= col("hcap"))
-            val deferredA = salted.filter(col("t1") > col("hcap"))
-              .select(cols: _*)
-            val tw = Window.partitionBy(col("host")).orderBy(polOrder: _*)
-            val ranked2 = phase1.withColumn("tok", row_number().over(tw))
-            val grantedNR = ranked2.filter(col("tok") <= col("hcap"))
-              .select(cols: _*)
-            val g = grantedNR.union(frontier.filter(col("is_retry")))
-            // deferred = phase-1 drops ∪ phase-2 drops (no join needed)
-            val d = deferredA.union(
-              ranked2.filter(col("tok") > col("hcap"))
-                .select(cols: _*))
-            (g, d)
-          }
+    // ---- resume / cold start ---------------------------------------------
+    def resume(dir: String, w: Int): Unit = {
+      frontier = StateStore.read(spark, dir, w, "frontier")
+      robotRules = StateStore.read(spark, dir, w, "robot_rules")
+      // accumulators resume as the union of committed per-wave deltas
+      val seenDeltas = StateStore.readDeltas(spark, dir, "seen", w)
+      // legacy pre-delta layout: resuming would silently lose the seen
+      // set and every record, so fail loudly
+      if (seenDeltas.isEmpty && StateStore.hasTable(dir, w, "seen"))
+        throw new IllegalStateException(
+          s"checkpoint at $dir wave=$w uses the legacy pre-delta layout " +
+            "(accumulators under wave=N/ snapshots, no delta/ dir); " +
+            "resuming would silently lose the seen set and all records — " +
+            "re-run the crawl from scratch or migrate the checkpoint " +
+            "(copy wave=N/<table> to delta/<table>/wave=N)")
+      seen = seenDeltas.getOrElse(emptyFrontier.select(col("url")))
+      records = StateStore.readDeltas(spark, dir, "records", w)
+        .getOrElse(emptyRecords)
+      audit = StateStore.readDeltas(spark, dir, "audit", w)
+        .getOrElse(emptyAudit)
+      order = StateStore.readDeltas(spark, dir, "crawl_order", w)
+        .getOrElse(emptyOrder)
+      if (StateStore.hasTable(dir, w, "cookies")) {
+        cookieJar = StateStore.read(spark, dir, w, "cookies")
+        if (!cookieJar.columns.contains("c_name") ||
+            !cookieJar.columns.contains("c_path") ||
+            !cookieJar.columns.contains("c_domain"))
+          throw new IllegalStateException(
+            s"checkpoint at $dir wave=$w has a legacy cookies snapshot " +
+              "(pre-RFC6265 jar without (host, name, path) keys); " +
+              "resuming would fail downstream — restart the crawl or " +
+              "migrate the snapshot")
+        cookieJarNonEmpty = !cookieJar.isEmpty
+        if (cookieJarNonEmpty) refreshJarFlags()
+      }
+      wave = w + 1
+    }
 
-        // ---- global concurrency cap (geziyor.go:109-111 semaphore → wave
-        // size cap) + RequestsPerSecond × waveInterval (options.go:87) —
-        // both collapse to a wave-size bound; excess is deferred, never
-        // dropped. Two-phase like politeness: phase 1 keeps the per-bucket
-        // top-cap (global top-cap rows always survive their bucket's cap by
-        // the same order), phase 2 ranks only ≤ cap·B bounded survivors —
-        // exact, and no unbounded single-partition window.
-        val auditInc = scala.collection.mutable.ArrayBuffer
-          .empty[DataFrame]
-
-        val rpsCap =
-          if (spec.requestsPerSecond > 0)
-            math.max(1L, spec.requestsPerSecond.toLong * spec.waveIntervalMs / 1000L)
-          else Long.MaxValue
-        val waveCap = math.min(spec.concurrentRequests.toLong, rpsCap)
-        val (granted2, deferred2) =
-          if (waveCap >= Int.MaxValue)
-            (granted, deferred)
-          else {
-            val CapBuckets = 32
-            val b1 = granted
-              .withColumn("cbkt", pmod(hash(col("url")), lit(CapBuckets)))
-              .withColumn("c1", row_number().over(
-                Window.partitionBy(col("cbkt")).orderBy(col("rank").asc)))
-            val drop1 = b1.filter(col("c1") > waveCap).select(cols: _*)
-            val ranked = b1.filter(col("c1") <= waveCap)
-              .withColumn("gidx",
-                row_number().over(Window.orderBy(col("rank").asc)))
-            val g2 = ranked.filter(col("gidx") <= waveCap).select(cols: _*)
-            val d2 = ranked.filter(col("gidx") > waveCap).select(cols: _*)
-            (g2, deferred.union(drop1).union(d2))
-          }
-
-        // sitemap-discovered candidate links for THIS wave (set inside the
-        // robots block when sitemapDiscovery is on and new hosts appeared)
-        var sitemapCandW: Option[DataFrame] = None
-
-        // ---- robots: incrementally fetch rules for NEW hosts ------------
-        // Scheme fidelity (middleware/robotstxt.go:40): the robots URL uses
-        // the triggering request's OWN scheme — per host, the first granted
-        // request (min rank) decides, mirroring the reference's first-
-        // request-wins cache fill. The rules cache stays keyed by host.
-        if (!spec.robotsTxtDisabled) {
-          val newHosts = granted2
-            .groupBy(col("host"))
-            .agg(min_by(
-              regexp_extract(col("url"), "^([A-Za-z][A-Za-z0-9+.-]*)://", 1),
-              col("rank")).as("scheme"))
-            .join(robotRules, col("host") === col("r_host"), "left_anti")
-            .withColumn("robots_url",
-              concat(when(col("scheme") === "", "http").otherwise(col("scheme")),
-                lit("://"), col("host"), lit("/robots.txt")))
-          // Materialize the (tiny) new-host set FIRST — its plan never
-          // touches the corpus — and run the robots fetch machinery ONLY
-          // when it is non-empty. On a settled crawl most waves discover
-          // no new hosts, and the r4 shape paid a full corpus-scan
-          // checkpoint on every one of them just to union an empty delta.
-          val newHostsM = newHosts.localCheckpoint(true)
-          if (!newHostsM.isEmpty) {
-            // newHosts is tiny by construction (new hosts this wave) → the
-            // BROADCAST build side of an inner join, so the corpus is never
-            // shuffled for the robots fetch (a left-outer join would force
-            // the huge corpus to be the build side or shuffle both sides);
-            // hosts with no robots page are recovered by the left join's
-            // nulls (allow-all, exactly like a 404 in the reference's
-            // FromStatusAndBytes).
-            val hits = corpus
-              .join(broadcast(newHostsM), col("p_url") === col("robots_url"))
-              .select(col("host").as("h_hit"),
-                col("p_status").as("r_status"), col("p_html").as("r_body"))
-            // FromStatusAndBytes semantics honoring the crawl's UA: 2xx →
-            // parse groups + select the UA's group; 4xx / no page →
-            // allow-all (empty rules); 5xx → disallow-all.
-            val specUa = spec.userAgent
-            val parseRobotsU = udf((status: java.lang.Integer, b: Array[Byte]) =>
-              if (status == null) RobotsRules.Group(Seq.empty, None)
-              else RobotsRules.fromStatusGroup(status.intValue(),
-                if (b == null) ""
-                else new String(b, java.nio.charset.StandardCharsets.UTF_8),
-                specUa))
-            // hits is ≤ |newHosts| rows → broadcast it back onto newHosts
-            // (a single corpus scan feeds both the hit bodies and, via the
-            // left join's nulls, the no-robots-page allow-all rows). ONE
-            // tiny eager materialization (≤ new-hosts rows) feeds the
-            // rules-cache delta AND the robots request/response counter
-            // rows without re-scanning the corpus; the rules cache itself
-            // compacts every 8th delta (plan-width bound, like `seen`)
-            // instead of checkpointing per wave.
-            // when sitemap discovery is on, the Sitemap: pointers ride the
-            // same checkpointed projection (no second robots-body pass)
-            val smPtrsU = udf((status: java.lang.Integer, b: Array[Byte]) =>
-              if (status == null || status.intValue() < 200 ||
-                  status.intValue() >= 300 || b == null) Seq.empty[String]
-              else RobotsRules.sitemaps(
-                new String(b, java.nio.charset.StandardCharsets.UTF_8)))
-            val smCol =
-              if (spec.sitemapDiscovery)
-                Seq(smPtrsU(col("r_status"), col("r_body")).as("sitemap_ptrs"))
-              else Nil
-            val newRulesFull = newHostsM
-              .join(broadcast(hits), col("host") === col("h_hit"), "left")
-              .withColumn("g", parseRobotsU(col("r_status"), col("r_body")))
-              .select(Seq(col("host"), col("robots_url"), col("r_status"),
-                col("g.rules").as("rules"),
-                col("g.crawlDelay").as("crawl_delay")) ++ smCol: _*)
-              .localCheckpoint(true)
-            // counter parity (metrics/metrics.go:31-33): the reference
-            // counts robots.txt fetches separately from forbidden decisions
-            // — one request row per newly-seen host, one response row per
-            // robots.txt actually served (status-labeled)
-            auditInc += (newRulesFull.select(lit(wave), lit("robots_request"),
-              lit("GET"), lit(0), col("host"), col("robots_url"), lit("")))
-            auditInc += (newRulesFull.filter(col("r_status").isNotNull)
-              .select(lit(wave), lit("robots_response"), lit("GET"),
-                col("r_status"), col("host"), col("robots_url"), lit("")))
-            robotRules = robotRules.union(newRulesFull
-              .select(col("host").as("r_host"), col("rules"),
-                col("crawl_delay")))
-            rulesDeltas += 1
-            if (rulesDeltas % 8 == 0)
-              robotRules = robotRules.localCheckpoint(true)
-
-            // ---- sitemap autodiscovery (sitemaps.org; opt-in) ------------
-            // The pointers just parsed for this wave's NEW hosts are
-            // fetched from the corpus NOW (tiny pointer set → broadcast
-            // probe side, the corpus is never shuffled — the robots
-            // fetch's own join shape; one extra corpus scan per wave that
-            // discovers hosts, zero on settled waves) and every urlset
-            // <loc> becomes a candidate link for the NEXT frontier.
-            // parent_rank = -1 sorts sitemap discoveries ahead of parsed
-            // links in the intra-wave first-wins window (deterministic
-            // keeper). At 10^8 hosts the pointer set is O(new hosts) and
-            // the urlset explode is a per-partition flatMap — no driver
-            // state, no collect.
-            if (spec.sitemapDiscovery) {
-              val ptrs = newRulesFull.select(
-                posexplode(col("sitemap_ptrs")).as(Seq("sm_pos", "sm_url")))
-              val smDocs = corpus
-                .join(broadcast(ptrs), col("p_url") === col("sm_url"))
-                .select(col("sm_pos"), col("p_status").as("s_status"),
-                  col("p_html").as("s_body"))
-              val locsU = udf((status: java.lang.Integer, b: Array[Byte]) =>
-                if (status == null || status.intValue() < 200 ||
-                    status.intValue() >= 300 || b == null) Seq.empty[String]
-                else graft.sitemap.Sitemap.parse(
-                  new String(b, java.nio.charset.StandardCharsets.UTF_8))
-                  .map(_.loc))
-              sitemapCandW = Some(smDocs
-                .select(col("sm_pos"),
-                  posexplode(locsU(col("s_status"), col("s_body")))
-                    .as(Seq("loc_pos", "url")))
-                .select(col("url"), lit(spec.parserId).as("parser_id"),
-                  lit(-1L).as("parent_rank"),
-                  (col("sm_pos") * 65536 + col("loc_pos")).as("link_pos"),
-                  lit(1).as("depth"),
-                  typedLit(Map.empty[String, String]).as("meta")))
+    /** Seeds pass AllowedDomains + dedup exactly like discovered urls (the
+      * reference runs seeds through the same middleware chain). Seed
+      * source: a driver-side StartURLs list (parity mode, ordered) or a
+      * seeds DataFrame with a `url` column (scale mode — a 10^10 frontier
+      * seed list is a table, not a Seq). Optional seed columns complete the
+      * Get/Head/Post helper surface (geziyor.go:189-217): `method` (default
+      * GET — HEAD skips decode downstream) and `body` (the POST payload,
+      * carried as meta("body") so parsers see it).
+      */
+    def coldStart(seedsDf: Option[DataFrame]): Unit = {
+      val seedsRaw = seedsDf match {
+        case Some(df) =>
+          val methodCol =
+            if (df.columns.contains("method"))
+              coalesce(col("method"), lit("GET"))
+            else lit("GET")
+          val metaCol =
+            if (df.columns.contains("body"))
+              when(col("body").isNotNull, map(lit("body"), col("body")))
+                .otherwise(map().cast("map<string,string>"))
+            else map().cast("map<string,string>")
+          df.select(Seq(col("url")) ++
+              (if (df.columns.contains("method")) Seq(col("method")) else Nil) ++
+              (if (df.columns.contains("body")) Seq(col("body")) else Nil): _*)
+            .withColumn("host", hostOfU(col("url")))
+            .withColumn("path", pathOfU(col("url")))
+            .withColumn("depth", lit(0))
+            .withColumn("meta", metaCol)
+            .withColumn("method", methodCol)
+            .drop("body")
+            .withColumn("retry", lit(0))
+            .withColumn("priority", lit(0))
+            .withColumn("wave", lit(0))
+            .withColumn("rank", bucketRank(col("url")))
+            .withColumn("parser_id", lit(spec.parserId))
+            .withColumn("is_retry", lit(false))
+            // canonical column ORDER (positional unions downstream)
+            .select(frontierCols: _*)
+        case None =>
+          spec.startUrls.zipWithIndex
+            .map { case (u, i) =>
+              (u, UrlOps.hostOf(u), UrlOps.pathOf(u), 0, "GET",
+                Map.empty[String, String], 0, 0, 0, i.toLong, spec.parserId,
+                false)
             }
-          }
-        }
+            .toDF("url", "host", "path", "depth", "method", "meta", "retry",
+              "priority", "wave", "rank", "parser_id", "is_retry")
+      }
+      val seedsAllowed =
+        if (spec.allowedDomains.isEmpty) seedsRaw
+        else seedsRaw.filter(col("host").isin(spec.allowedDomains: _*))
+      // only GETs are deduped / enter the seen set
+      // (middleware/duplicate_requests.go:17)
+      frontier = seedsAllowed.filter(col("method") === "GET")
+        .dropDuplicates("url")
+        .unionByName(seedsAllowed.filter(col("method") =!= "GET"))
+      seen = seedsAllowed.filter(col("method") === "GET")
+        .dropDuplicates("url").select(col("url"))
+      coldSeedSeen = Some(seen)
+    }
 
-        granted2.persist(StorageLevel.MEMORY_AND_DISK)
-        deferred2.persist(StorageLevel.MEMORY_AND_DISK)
+    // ---- gate ------------------------------------------------------------
+    // Politeness: grant ≤ `hcap` tokens per host this wave. Retries bypass
+    // the budget (the reference retries inside the client without
+    // re-running the delay middleware).
+    def tokenCap(req: DataFrame): DataFrame =
+      req.withColumn("hcap", lit(spec.hostTokensPerWave.toLong))
 
-        val (robotsOk, robotsBlocked) =
-          if (spec.robotsTxtDisabled) (granted2, emptyFrontier)
-          else {
-            // full-REP gate: longest-match over the UA-selected group's
-            // Allow/Disallow rules (wildcards + end anchors) — see
-            // RobotsRules.allowedRows
-            val isBlocked = udf((path: String, rules: Seq[Row]) =>
-              rules != null && rules.nonEmpty &&
-                !RobotsRules.allowedRows(path, rules))
-            val j = granted2.join(broadcast(robotRules),
-              col("host") === col("r_host"), "left")
-            (j.filter(col("is_retry") ||
-                !isBlocked(col("path"), col("rules")))
-               .drop("r_host", "rules", "crawl_delay"),
-             j.filter(!col("is_retry") &&
-                isBlocked(col("path"), col("rules")))
-               .drop("r_host", "rules", "crawl_delay"))
-          }
+    /** The spec's cap tightened by robots Crawl-delay: ≤ max(1,
+      * floor(waveInterval / delay)) grants per wave. Rules are fetched
+      * lazily, so a host's FIRST wave runs uncapped, like the reference.
+      */
+    def crawlDelayCap(req: DataFrame): DataFrame = req
+      .join(broadcast(robotRules.select(col("r_host"), col("crawl_delay"))),
+        col("host") === col("r_host"), "left")
+      .withColumn("hcap",
+        least(lit(spec.hostTokensPerWave.toLong),
+          coalesce(
+            greatest(lit(1L),
+              floor(lit(spec.waveIntervalMs / 1000.0) /
+                col("crawl_delay")).cast("long")),
+            lit(spec.hostTokensPerWave.toLong))))
+      .drop("r_host", "crawl_delay")
 
-        auditInc += (robotsBlocked.select(col("wave"), lit("robots_forbidden"),
-          col("method"), lit(0), col("host"), col("url"), lit("")))
+    /** AIMD cap: tighten by the host's controller state; unobserved hosts
+      * run at the initial cap.
+      */
+    def aimdCap(req: DataFrame): DataFrame = hostCaps match {
+      case Some(caps) => req
+        .join(broadcast(caps), col("host") === col("a_host"), "left")
+        .withColumn("hcap", least(col("hcap"),
+          coalesce(col("acap"), lit(AdaptiveInitialCap))))
+        .drop("a_host", "acap")
+      case None =>
+        req.withColumn("hcap", least(col("hcap"), lit(AdaptiveInitialCap)))
+    }
 
-        // ---- cookie jar: apply accumulated per-host cookies --------------
-        // (client/client.go:250-272 — the http.Client jar; corpus-mode: the
-        // Cookie header the request would carry is exposed to parsers as
-        // meta("cookie"), and Set-Cookie responses feed the jar below)
-        // Deterministic wave clock for cookie expiry (the RFC2616 fake-clock
-        // pattern): receipt/expiry arithmetic is reproducible across runs.
-        val waveNowEpoch =
-          spec.cacheNowEpochSec + wave.toLong * spec.waveIntervalMs / 1000L
-        val withCookies =
-          if (!cookiesActive || !cookieJarNonEmpty) robotsOk
-          else {
-            // Split jar application (scale shape): HOST-ONLY cookies — the
-            // dominant population — stay on the per-host broadcast
-            // equi-join (their key domain IS the exact host). DOMAIN
-            // cookies shard on a derived registrable-domain-ish key:
-            // §5.1.3 domain-match (H == D or H ends with "."+D) forces H
-            // and D to share their trailing two labels, so keying BOTH
-            // sides by last-two-labels is a lossless bucketing — the
-            // domain slice grows per key instead of globbing into one
-            // unbounded collect_list row (round-4 verdict). A
-            // single-label Domain (TLD-wide — settable because the jar,
-            // like the reference's `cookiejar.New(nil)`, has no PSL) has
-            // no two-label key; that pathological slice rides the old
-            // bounded single-row broadcast, flag-gated so the common path
-            // never builds it. The header UDF applies the exact RFC
-            // filters per request (full domain-match incl. subdomains,
-            // path-match, Secure on https only, unexpired at the wave
-            // clock) over the concatenated slices and emits
-            // Go-jar-ordered name=value pairs — replacement was already
-            // applied at accumulation.
-            val jarStruct = struct(col("c_name"), col("c_domain"),
-              col("c_hostonly"), col("c_path"), col("c_value"),
-              col("c_secure"), col("c_expires"), col("c_wave"))
-            def lastTwo(c: Column): Column = {
-              val parts = split(c, "\\.")
-              when(size(parts) <= 2, c)
-                .otherwise(concat_ws(".", slice(parts, -2, 2)))
-            }
-            val nLabels = size(split(col("c_domain"), "\\."))
-            val hostAgg = cookieJar.filter(col("c_hostonly"))
-              .groupBy(col("c_domain").as("jh_host"))
-              .agg(collect_list(jarStruct).as("jar_h"))
-            val jarColType = hostAgg.schema("jar_h").dataType
-            val base = robotsOk
-              .join(broadcast(hostAgg), col("host") === col("jh_host"), "left")
-            val withDom =
-              if (!jarHasDomainCk)
-                base.withColumn("jar_d", lit(null).cast(jarColType))
-              else base.join(
-                broadcast(cookieJar
-                  .filter(!col("c_hostonly") && nLabels >= 2)
-                  .groupBy(lastTwo(col("c_domain")).as("jd_key"))
-                  .agg(collect_list(jarStruct).as("jar_d"))),
-                lastTwo(col("host")) === col("jd_key"), "left")
-            val withTld =
-              if (!jarHasTldCk)
-                withDom.withColumn("jar_t", lit(null).cast(jarColType))
-              else withDom.crossJoin(
-                broadcast(cookieJar
-                  .filter(!col("c_hostonly") && nLabels < 2)
-                  .agg(collect_list(jarStruct).as("jar_t"))))
-            val headerU = udf((url: String, host: String, path: String,
-                jarH: Seq[Row], jarD: Seq[Row], jarT: Seq[Row]) =>
-              Cookies.header(url, host, path, waveNowEpoch,
-                (if (jarH == null) Seq.empty else jarH) ++
-                  (if (jarD == null) Seq.empty else jarD) ++
-                  (if (jarT == null) Seq.empty else jarT)))
-            withTld
-              .withColumn("cookie_hdr",
-                headerU(col("url"), col("host"), col("path"),
-                  col("jar_h"), col("jar_d"), col("jar_t")))
-              .withColumn("meta",
-                when(col("cookie_hdr").isNotNull,
-                  map_concat(
-                    map_filter(col("meta"), (k, _) => k =!= "cookie"),
-                    map(lit("cookie"), col("cookie_hdr"))))
-                  // no applicable cookie → STRIP any cookie inherited via
-                  // meta propagation from the parent (the jar, not the
-                  // parent's request, owns the Cookie header; custom
-                  // middlewares still inject later in the chain)
-                  .otherwise(
-                    map_filter(col("meta"), (k, _) => k =!= "cookie")))
-              .drop("jh_host", "jar_h", "jd_key", "jar_d", "jar_t",
-                "cookie_hdr")
-          }
+    /** The per-host exact top-hcap, by priority (then delay, then rank);
+      * retries are always granted. Returns (granted, deferred).
+      */
+    def grant(req: DataFrame): (DataFrame, DataFrame) = {
+      val polOrder: Seq[Column] =
+        if (spec.requestDelayMs > 0)
+          Seq(col("priority").desc, col("delay_ms").asc, col("rank").asc)
+        else Seq(col("priority").desc, col("rank").asc)
+      val ordered =
+        if (spec.requestDelayMs > 0)
+          req.withColumn("delay_ms",
+            delayExpr(spec.requestDelayMs, spec.randomDelay))
+        else req
+      val top = TopK(ordered, Seq(col("host")), col("url"), SkewSaltBuckets,
+        polOrder, col("hcap"))
+      (top.kept.select(frontierCols: _*)
+         .union(frontier.filter(col("is_retry"))),
+       top.dropped.select(frontierCols: _*))
+    }
 
-        // ---- custom request middlewares (geziyor.go:128-130: appended
-        // after the built-in chain). A middleware may mutate columns (e.g.
-        // meta) and/or set `cancelled` = true (Request.Cancelled analog —
-        // dropped from the wave, audited).
-        val afterReqMw =
-          if (requestMiddlewares.isEmpty) withCookies
-          else {
-            val base = withCookies.withColumn("cancelled", lit(false))
-            val out = requestMiddlewares.foldLeft(base)((df, mw) => mw(df))
-            auditInc += (out.filter(col("cancelled"))
-              .select(col("wave"), lit("cancelled"), col("method"), lit(0),
-                col("host"), col("url"), lit("")))
-            out.filter(!col("cancelled")).drop("cancelled")
-          }
+    /** The wave-size cap: the exact global top-`cap` by rank. */
+    def capWave(granted: DataFrame, deferred: DataFrame,
+        cap: Long): (DataFrame, DataFrame) = {
+      val top = TopK(granted, Nil, col("url"), CapBuckets,
+        Seq(col("rank").asc), lit(cap))
+      (top.kept.select(frontierCols: _*),
+       deferred.union(top.dropped.select(frontierCols: _*)))
+    }
 
-        // ---- RFC2616 cache decision (cache/cache.go:182-265) -------------
-        // serve_cached rows never reach the fetch join (no re-fetch);
-        // revalidate rows carry the cached entry through the fetch for the
-        // validator/304 merge; gateway_504 (only-if-cached miss) is audited
-        // and dropped.
-        val (toFetch, cacheServed) =
-          if (!cacheActive)
-            (afterReqMw
-              .withColumn("k_headers",
-                lit(null).cast("map<string,string>"))
-              .withColumn("k_body", lit(null).cast("binary"))
-              .withColumn("k_ct", lit(null).cast("string"))
-              .withColumn("cache_action", lit("fetch")),
-             None)
-          else {
-            val cache = cacheDf.get.select(
-              col("url").as("k_url"),
-              col("headers").as("k_headers"),
-              col("body").as("k_body"),
-              col("content_type").as("k_ct"))
-            val tagged = afterReqMw
-              .join(cache, col("url") === col("k_url"), "left")
-              .drop("k_url")
-              .withColumn("cache_action",
-                when(col("k_headers").isNull,
-                  when(lit(reqHeaders.exists(h =>
-                      h._1.equalsIgnoreCase("Cache-Control") &&
-                        h._2.contains("only-if-cached"))),
-                    lit("gateway_504")).otherwise(lit("fetch")))
-                  .otherwise(
-                    // Dummy policy (cache/cache.go:136-173): a cached entry
-                    // is always served, never revalidated
-                    if (spec.cachePolicy == "dummy") lit("serve_cached")
-                    else decideU(col("method"), col("k_headers"))))
-            auditInc += (tagged.filter(col("cache_action") === "gateway_504")
-              .select(col("wave"), lit("gateway_504"), col("method"),
-                lit(504), col("host"), col("url"), lit("")))
-            (tagged.filter(col("cache_action") =!= "serve_cached" &&
-                col("cache_action") =!= "gateway_504"),
-             Some(tagged.filter(col("cache_action") === "serve_cached")))
-          }
+    // ---- robots ----------------------------------------------------------
+    /** Fetch rules for the wave's NEW hosts; returns their rules rows
+      * (None when no host is new). The robots URL takes the scheme of the
+      * host's first granted request (middleware/robotstxt.go:40).
+      */
+    def fetchRobots(granted: DataFrame): Option[DataFrame] = {
+      val newHosts = granted
+        .groupBy(col("host"))
+        .agg(min_by(
+          regexp_extract(col("url"), "^([A-Za-z][A-Za-z0-9+.-]*)://", 1),
+          col("rank")).as("scheme"))
+        .join(robotRules, col("host") === col("r_host"), "left_anti")
+        .withColumn("robots_url",
+          concat(when(col("scheme") === "", "http").otherwise(col("scheme")),
+            lit("://"), col("host"), lit("/robots.txt")))
+      // the tiny new-host set first: settled waves skip the corpus scan
+      val newHostsM = newHosts.localCheckpoint(true)
+      if (newHostsM.isEmpty) return None
+      // newHosts is the BROADCAST side of an inner join, so the corpus is
+      // never shuffled; hosts with no robots page come back as the left
+      // join's nulls below (allow-all, like a 404)
+      val hits = corpus
+        .join(broadcast(newHostsM), col("p_url") === col("robots_url"))
+        .select(col("host").as("h_hit"),
+          col("p_status").as("r_status"), col("p_html").as("r_body"))
+      // FromStatusAndBytes semantics honoring the crawl's UA: 2xx → parse
+      // groups + select the UA's group; 4xx / no page → allow-all (empty
+      // rules); 5xx → disallow-all.
+      val specUa = spec.userAgent
+      val parseRobotsU = udf((status: java.lang.Integer, b: Array[Byte]) =>
+        if (status == null) RobotsRules.Group(Seq.empty, None)
+        else RobotsRules.fromStatusGroup(status.intValue(),
+          if (b == null) ""
+          else new String(b, java.nio.charset.StandardCharsets.UTF_8),
+          specUa))
+      // ONE tiny materialization feeds the rules-cache delta, the counter
+      // rows and (with sitemap discovery) the Sitemap: pointers; the rules
+      // cache compacts every 8th delta (plan-width bound, like `seen`)
+      val smPtrsU = udf((status: java.lang.Integer, b: Array[Byte]) =>
+        if (status == null || status.intValue() < 200 ||
+            status.intValue() >= 300 || b == null) Seq.empty[String]
+        else RobotsRules.sitemaps(
+          new String(b, java.nio.charset.StandardCharsets.UTF_8)))
+      val smCol =
+        if (spec.sitemapDiscovery)
+          Seq(smPtrsU(col("r_status"), col("r_body")).as("sitemap_ptrs"))
+        else Nil
+      val newRulesFull = newHostsM
+        .join(broadcast(hits), col("host") === col("h_hit"), "left")
+        .withColumn("g", parseRobotsU(col("r_status"), col("r_body")))
+        .select(Seq(col("host"), col("robots_url"), col("r_status"),
+          col("g.rules").as("rules"),
+          col("g.crawlDelay").as("crawl_delay")) ++ smCol: _*)
+        .localCheckpoint(true)
+      // counter parity (metrics/metrics.go:31-33): one request row per new
+      // host, one response row per robots.txt served
+      auditInc += auditRows(newRulesFull, "robots_request",
+        method = lit("GET"), wave = lit(wave), url = col("robots_url"))
+      auditInc += auditRows(newRulesFull.filter(col("r_status").isNotNull),
+        "robots_response", status = col("r_status"), method = lit("GET"),
+        wave = lit(wave), url = col("robots_url"))
+      robotRules = robotRules.union(newRulesFull
+        .select(col("host").as("r_host"), col("rules"), col("crawl_delay")))
+      rulesDeltas += 1
+      if (rulesDeltas % 8 == 0)
+        robotRules = robotRules.localCheckpoint(true)
+      Some(newRulesFull)
+    }
 
-        // ---- fetch join with transparent redirect following -------------
-        var pending = toFetch
-          .withColumn("cur_url", col("url")).withColumn("hops", lit(0))
-          .localCheckpoint(true)
+    /** Sitemap autodiscovery (sitemaps.org): the new hosts' Sitemap:
+      * pointers are fetched from the corpus (broadcast pointer side, the
+      * robots fetch's join shape) and every urlset <loc> becomes a
+      * candidate link; parent_rank = -1 sorts them ahead of parsed links
+      * in the first-wins window.
+      */
+    def sitemapLinks(newRules: DataFrame): DataFrame = {
+      val ptrs = newRules.select(
+        posexplode(col("sitemap_ptrs")).as(Seq("sm_pos", "sm_url")))
+      val smDocs = corpus
+        .join(broadcast(ptrs), col("p_url") === col("sm_url"))
+        .select(col("sm_pos"), col("p_status").as("s_status"),
+          col("p_html").as("s_body"))
+      val locsU = udf((status: java.lang.Integer, b: Array[Byte]) =>
+        if (status == null || status.intValue() < 200 ||
+            status.intValue() >= 300 || b == null) Seq.empty[String]
+        else graft.sitemap.Sitemap.parse(
+          new String(b, java.nio.charset.StandardCharsets.UTF_8))
+          .map(_.loc))
+      smDocs
+        .select(col("sm_pos"),
+          posexplode(locsU(col("s_status"), col("s_body")))
+            .as(Seq("loc_pos", "url")))
+        .select(col("url"), lit(spec.parserId).as("parser_id"),
+          lit(-1L).as("parent_rank"),
+          (col("sm_pos") * 65536 + col("loc_pos")).as("link_pos"),
+          lit(1).as("depth"),
+          typedLit(Map.empty[String, String]).as("meta"))
+    }
 
-        // order/metrics/lineage read from the materialized pending set —
-        // no recompute of the politeness/robots pipeline
-        val orderInc = pending.select(col("wave"), col("rank"), col("url"))
-        order = order.union(orderInc)
-        metricsBuf.synchronized {
-          metricsBuf += ((wave, "frontier_size", frontierN))
-        }
-        // lineage scans only the just-checkpointed pending set — run it
-        // CONCURRENTLY with the fetch loop (its job back-fills executor
-        // slots the fetch join leaves idle) and fold the rows in before the
-        // wave closes
-        val lineageF = scala.concurrent.Future {
-          pending.groupBy(spark_partition_id().as("pid"))
-            .agg(count(lit(1)).as("n")).collect()
-        }(sideJobEc)
-        var fetched = pending.limit(0)
-          .withColumn("p_status", lit(null).cast("int"))
-          .withColumn("p_ct", lit(null).cast("string"))
-          .withColumn("p_html", lit(null).cast("binary"))
-          .withColumn("p_text", lit(null).cast("string"))
-          .withColumn("p_setck", lit(null).cast("string"))
-          .withColumn("p_etag", lit(null).cast("string"))
-          .withColumn("p_lastmod", lit(null).cast("string"))
-          .withColumn("p_latency", lit(null).cast("long"))
-          .withColumn("p_warc_ts", lit(null).cast("timestamp"))
-          .withColumn("redirect_exceeded", lit(false))
+    /** Full-REP gate (RobotsRules.allowedRows); blocked rows are audited
+      * and dropped.
+      */
+    def robotsGate(granted: DataFrame): DataFrame = {
+      val isBlocked = udf((path: String, rules: Seq[Row]) =>
+        rules != null && rules.nonEmpty &&
+          !RobotsRules.allowedRows(path, rules))
+      val j = granted.join(broadcast(robotRules),
+        col("host") === col("r_host"), "left")
+      val blocked = j.filter(!col("is_retry") &&
+          isBlocked(col("path"), col("rules")))
+        .drop("r_host", "rules", "crawl_delay")
+      auditInc += auditRows(blocked, "robots_forbidden")
+      j.filter(col("is_retry") || !isBlocked(col("path"), col("rules")))
+        .drop("r_host", "rules", "crawl_delay")
+    }
+
+    // ---- request chain ---------------------------------------------------
+    /** Apply the jar (client/client.go:250-272): the Cookie header a
+      * request would carry is exposed to parsers as meta("cookie").
+      * HOST-ONLY cookies join per host. DOMAIN cookies join on the last two
+      * labels, a lossless bucketing (§5.1.3 domain-match forces H and D to
+      * share them). A single-label (TLD-wide) Domain has no two-label key
+      * and rides one flag-gated single-row broadcast. The header UDF
+      * applies the exact RFC filters (domain/path-match, Secure, expiry at
+      * the wave clock) and emits Go-jar-ordered name=value pairs.
+      */
+    def applyCookies(req: DataFrame): DataFrame = {
+      val jarStruct = struct(col("c_name"), col("c_domain"),
+        col("c_hostonly"), col("c_path"), col("c_value"),
+        col("c_secure"), col("c_expires"), col("c_wave"))
+      def lastTwo(c: Column): Column = {
+        val parts = split(c, "\\.")
+        when(size(parts) <= 2, c)
+          .otherwise(concat_ws(".", slice(parts, -2, 2)))
+      }
+      val nLabels = size(split(col("c_domain"), "\\."))
+      val hostAgg = cookieJar.filter(col("c_hostonly"))
+        .groupBy(col("c_domain").as("jh_host"))
+        .agg(collect_list(jarStruct).as("jar_h"))
+      val jarColType = hostAgg.schema("jar_h").dataType
+      val base = req
+        .join(broadcast(hostAgg), col("host") === col("jh_host"), "left")
+      val withDom =
+        if (!jarHasDomainCk)
+          base.withColumn("jar_d", lit(null).cast(jarColType))
+        else base.join(
+          broadcast(cookieJar
+            .filter(!col("c_hostonly") && nLabels >= 2)
+            .groupBy(lastTwo(col("c_domain")).as("jd_key"))
+            .agg(collect_list(jarStruct).as("jar_d"))),
+          lastTwo(col("host")) === col("jd_key"), "left")
+      val withTld =
+        if (!jarHasTldCk)
+          withDom.withColumn("jar_t", lit(null).cast(jarColType))
+        else withDom.crossJoin(
+          broadcast(cookieJar
+            .filter(!col("c_hostonly") && nLabels < 2)
+            .agg(collect_list(jarStruct).as("jar_t"))))
+      val now = waveNowEpoch
+      val headerU = udf((url: String, host: String, path: String,
+          jarH: Seq[Row], jarD: Seq[Row], jarT: Seq[Row]) =>
+        Cookies.header(url, host, path, now,
+          (if (jarH == null) Seq.empty else jarH) ++
+            (if (jarD == null) Seq.empty else jarD) ++
+            (if (jarT == null) Seq.empty else jarT)))
+      withTld
+        .withColumn("cookie_hdr",
+          headerU(col("url"), col("host"), col("path"),
+            col("jar_h"), col("jar_d"), col("jar_t")))
+        .withColumn("meta",
+          when(col("cookie_hdr").isNotNull,
+            map_concat(
+              map_filter(col("meta"), (k, _) => k =!= "cookie"),
+              map(lit("cookie"), col("cookie_hdr"))))
+            // no applicable cookie → strip one inherited from the parent
+            .otherwise(
+              map_filter(col("meta"), (k, _) => k =!= "cookie")))
+        .drop("jh_host", "jar_h", "jd_key", "jar_d", "jar_t", "cookie_hdr")
+    }
+
+    /** Custom request middlewares (geziyor.go:128-130), after the
+      * built-ins; `cancelled` = true drops a request (audited).
+      */
+    def requestChain(req: DataFrame,
+        middlewares: Seq[DataFrame => DataFrame]): DataFrame = {
+      val out = middlewares.foldLeft(req.withColumn("cancelled", lit(false)))(
+        (df, mw) => mw(df))
+      auditInc += auditRows(out.filter(col("cancelled")), "cancelled")
+      out.filter(!col("cancelled")).drop("cancelled")
+    }
+
+    /** No cache: every request fetches, with empty cache columns. */
+    def noCache(req: DataFrame): DataFrame = req
+      .withColumn("k_headers", lit(null).cast("map<string,string>"))
+      .withColumn("k_body", lit(null).cast("binary"))
+      .withColumn("k_ct", lit(null).cast("string"))
+      .withColumn("cache_action", lit("fetch"))
+
+    /** RFC2616 cache decision (cache/cache.go:182-265). Returns (to fetch,
+      * served from cache); revalidate rows carry the cached entry to the
+      * 304 merge; gateway_504 (only-if-cached miss) is audited and dropped.
+      */
+    def cacheDecision(req: DataFrame): (DataFrame, Option[DataFrame]) = {
+      val reqHeaders = CrawlSpec.DefaultHeaders
+      val cache = cacheDf.get.select(
+        col("url").as("k_url"),
+        col("headers").as("k_headers"),
+        col("body").as("k_body"),
+        col("content_type").as("k_ct"))
+      val tagged = req
+        .join(cache, col("url") === col("k_url"), "left")
+        .drop("k_url")
+        .withColumn("cache_action",
+          when(col("k_headers").isNull,
+            when(lit(reqHeaders.exists(h =>
+                h._1.equalsIgnoreCase("Cache-Control") &&
+                  h._2.contains("only-if-cached"))),
+              lit("gateway_504")).otherwise(lit("fetch")))
+            .otherwise(
+              // Dummy policy (cache/cache.go:136-173): a cached entry is
+              // always served, never revalidated
+              if (spec.cachePolicy == "dummy") lit("serve_cached")
+              else decideUdf(spec.cacheNowEpochSec)(
+                col("method"), col("k_headers"))))
+      auditInc += auditRows(
+        tagged.filter(col("cache_action") === "gateway_504"),
+        "gateway_504", status = lit(504))
+      (tagged.filter(col("cache_action") =!= "serve_cached" &&
+          col("cache_action") =!= "gateway_504"),
+       Some(tagged.filter(col("cache_action") === "serve_cached")))
+    }
+
+    // ---- fetch -----------------------------------------------------------
+    /** Materialize the wave's requests; record the crawl order, the
+      * frontier_size metric and (concurrently) the per-partition lineage.
+      */
+    def dispatch(toFetch: DataFrame,
+        frontierN: Long): (DataFrame, Future[Array[Row]]) = {
+      val pending = toFetch
+        .withColumn("cur_url", col("url")).withColumn("hops", lit(0))
+        .localCheckpoint(true)
+      orderInc = pending.select(col("wave"), col("rank"), col("url"))
+      order = order.union(orderInc)
+      metricsBuf.synchronized {
+        metricsBuf += ((wave, "frontier_size", frontierN))
+      }
+      // lineage runs CONCURRENTLY with the fetch loop, awaited in account
+      val lineageF = Future {
+        pending.groupBy(spark_partition_id().as("pid"))
+          .agg(count(lit(1)).as("n")).collect()
+      }(sideJobEc)
+      (pending, lineageF)
+    }
+
+    /** Fetch join with transparent redirect following. */
+    def fetch(dispatched: DataFrame): DataFrame = {
+      var pending = dispatched
+      var fetched = withFetchCols(pending.limit(0))
+        .withColumn("redirect_exceeded", lit(false))
+      var hop = 0
+      while (hop <= spec.maxRedirect && !pending.isEmpty) {
+        // Materialize the join ONCE per hop; finals and the redirect
+        // continuation are filters over it. persist+count, NOT
+        // localCheckpoint: a LogicalRDD child under the `fetched` union
+        // trips Catalyst's Union.rewriteConstraints (key-not-found).
+        val j = pending.join(corpus, col("cur_url") === col("p_url"), "left")
+          .drop("p_url").persist(StorageLevel.MEMORY_AND_DISK)
+        j.count()
+        persisted += j
+        val isRedir = col("p_status").isin(RedirectStatuses.map(Integer.valueOf): _*) &&
+          col("p_loc").isNotNull
+        val finals = j.filter(!isRedir || lit(hop == spec.maxRedirect))
+          .withColumn("redirect_exceeded", isRedir)
           .drop("p_loc")
-        var hop = 0
-        while (hop <= spec.maxRedirect && !pending.isEmpty) {
-          // Materialize the fetch join ONCE per hop: the delivered rows
-          // (finals) and the redirect continuation are then cheap filters
-          // over the cached join. The r1-r5 shape executed the join TWICE
-          // per wave — once eagerly for the redirect probe's checkpoint and
-          // once more when the lazy `finals` union materialized downstream.
-          // persist+count, NOT localCheckpoint: downstream `fetched` unions
-          // filters of this frame, and a LogicalRDD child whose carried
-          // constraints mention pruned attributes trips Catalyst's
-          // Union.rewriteConstraints (key-not-found on the status attr);
-          // the InMemoryRelation path keeps the original plan's attributes.
-          val j = pending.join(corpus, col("cur_url") === col("p_url"), "left")
-            .drop("p_url").persist(StorageLevel.MEMORY_AND_DISK)
-          j.count()
-          persisted += j
-          val isRedir = col("p_status").isin(RedirectStatuses.map(Integer.valueOf): _*) &&
-            col("p_loc").isNotNull
-          val finals = j.filter(!isRedir || lit(hop == spec.maxRedirect))
-            .withColumn("redirect_exceeded", isRedir)
-            .drop("p_loc")
-          fetched = fetched.unionByName(finals)
-          pending =
-            if (hop == spec.maxRedirect) pending.limit(0)
-            else {
-              // Go http.Client redirect semantics (behind the reference's
-              // client/client.go:303-311): 301/302/303 rewrite a non-GET/
-              // HEAD method to GET and DROP the request body; 307/308
-              // preserve method + body through the hop.
-              val rewrite = col("p_status").isin(301, 302, 303) &&
-                col("method") =!= "GET" && col("method") =!= "HEAD"
-              j.filter(isRedir)
-                // evaluate the rewrite predicate ONCE against the original
-                // method (the method withColumn below would otherwise feed
-                // the already-rewritten GET into the meta step's predicate)
-                .withColumn("mrw", rewrite)
-                .withColumn("method",
-                  when(col("mrw"), lit("GET")).otherwise(col("method")))
-                .withColumn("meta",
-                  when(col("mrw"),
-                    map_filter(col("meta"), (k, _) => k =!= "body"))
-                    .otherwise(col("meta")))
-                .drop("mrw")
-                .withColumn("cur_url", col("p_loc"))
-                .withColumn("hops", col("hops") + 1)
-                .drop("p_status", "p_ct", "p_html", "p_text", "p_setck",
-                  "p_etag", "p_lastmod", "p_latency", "p_warc_ts", "p_loc")
-            }
-          hop += 1
-        }
-
-        // ---- validator / 304 merge for revalidations ----------------------
-        // (cache/cache.go:210-239: inject If-None-Match/If-Modified-Since;
-        // corpus-mode "304" = the live page still carries the cached entry's
-        // validators → keep the cached body, merge headers)
-        if (cacheActive) {
-          val hOf = (m: Column, k: String) => element_at(m, k)
-          val notModified = col("cache_action") === "revalidate" &&
-            col("p_status").isNotNull && (
-              (col("p_etag").isNotNull &&
-                col("p_etag") === hOf(col("k_headers"), "ETag")) ||
-              (col("p_lastmod").isNotNull &&
-                col("p_lastmod") === hOf(col("k_headers"), "Last-Modified")))
-          fetched = fetched
-            .withColumn("revalidated_304", notModified)
-            .withColumn("p_html",
-              when(notModified, col("k_body")).otherwise(col("p_html")))
-            .withColumn("p_ct",
-              when(notModified, col("k_ct")).otherwise(col("p_ct")))
-        } else {
-          fetched = fetched.withColumn("revalidated_304", lit(false))
-        }
-        // cache-served rows join the delivery stream without fetching
-        cacheServed.foreach { served =>
-          val asFetched = served
-            .withColumn("cur_url", col("url"))
-            .withColumn("hops", lit(0))
-            .withColumn("p_status", lit(200))
-            .withColumn("p_ct", col("k_ct"))
-            .withColumn("p_html", col("k_body"))
-            .withColumn("p_text", lit(null).cast("string"))
-            .withColumn("p_setck", lit(null).cast("string"))
-            .withColumn("p_etag", lit(null).cast("string"))
-            .withColumn("p_lastmod", lit(null).cast("string"))
-            .withColumn("p_latency", lit(null).cast("long"))
-            .withColumn("p_warc_ts", lit(null).cast("timestamp"))
-            .withColumn("redirect_exceeded", lit(false))
-            .withColumn("revalidated_304", lit(false))
-          fetched = fetched.unionByName(asFetched)
-          auditInc += (served.select(col("wave"), lit("cache_hit"),
-            col("method"), lit(200), col("host"), col("url"), lit("")))
-        }
-        auditInc += (fetched.filter(col("revalidated_304"))
-          .select(col("wave"), lit("revalidate_304"), col("method"),
-            col("p_status"), col("host"), col("url"), lit("")))
-
-        // fetched stays persisted even though its union children are narrow
-        // filters over the already-cached per-hop joins: the InMemoryRelation
-        // is ALSO the attribute barrier that keeps downstream localCheckpoint
-        // constraint snapshots stable — without it, optimizer-rewritten union
-        // attribute ids leak into LogicalRDD originConstraints and Catalyst's
-        // Union.rewriteConstraints throws key-not-found on later analysis
-        // (observed on the AIMD/randomized-parity paths). Fill cost is one
-        // pass over cached blocks, not a join re-execution.
-        fetched = fetched.persist(StorageLevel.MEMORY_AND_DISK)
-        persisted += fetched
-
-        // fetch misses = transport-error analog → ErrorFunc audit branch
-        val misses = fetched.filter(col("p_status").isNull)
-        auditInc += (misses.select(col("wave"), lit("fetch_miss"),
-          col("method"), lit(-1), col("host"), col("url"),
-          concat(lit("no such page: "), col("cur_url"))))
-        auditInc += (fetched.filter(col("redirect_exceeded"))
-          .select(col("wave"), lit("redirect_exceeded"), col("method"),
-            col("p_status"), col("host"), col("url"),
-            lit(s"stopped after ${spec.maxRedirect} redirects")))
-
-        // ---- AIMD controller update (CrawlSpec.adaptiveRate) -------------
-        // One map-side-combined aggregate over the persisted wave: a host
-        // is overloaded when ANY response was slower than the threshold or
-        // 5xx. Observed hosts move (halve / +2); unobserved hosts keep
-        // their cap. State stays one row per observed host.
-        if (spec.adaptiveRate) {
-          val overObs = fetched
-            .filter(col("p_status").isNotNull)
-            .groupBy(col("host"))
-            .agg(max(
-              when(col("p_latency").isNotNull &&
-                col("p_latency") > lit(spec.adaptiveLatencyMs), 1)
-                .when(col("p_status") >= 500, 1)
-                .otherwise(0)).as("over"))
-            .select(col("host").as("a_host"), col("over"))
-          val prev = hostCaps.getOrElse(
-            overObs.limit(0).select(col("a_host"),
-              lit(null).cast("long").as("acap")))
-          val init = lit(spec.adaptiveInitialCap.toLong)
-          hostCaps = Some(prev
-            .join(overObs, Seq("a_host"), "full_outer")
-            .select(col("a_host"),
-              when(col("over") === 1,
-                greatest(lit(1L),
-                  floor(coalesce(col("acap"), init) / 2).cast("long")))
-                .when(col("over") === 0,
-                  least(lit(spec.adaptiveMaxCap.toLong),
-                    coalesce(col("acap"), init) + 2))
-                .otherwise(col("acap")).as("acap"))
-            .localCheckpoint(true))
-        }
-
-        // ---- cookie jar: accumulate Set-Cookie responses ------------------
-        // RFC 6265 jar semantics (net/http CookieJar via
-        // client/client.go:250-272): parse attributes (Path with §5.1.4
-        // default, Max-Age over Expires, Secure), key by (host, name, path),
-        // latest wave replaces (ties broken by max value for determinism);
-        // Max-Age ≤ 0 / past Expires is an EVICTION of the keyed cookie.
-        // Cheap pre-test: on the (common) waves with zero Set-Cookie
-        // responses the jar machinery costs ONE early-exit filter scan of
-        // the persisted `fetched` — no parse UDF, no distinct shuffle, no
-        // merge window (round-4 per-wave overhead clawback).
-        if (cookiesActive &&
-            !fetched.filter(col("p_setck").isNotNull).isEmpty) {
-          val parseCkU = udf((setCookie: String, host: String, path: String) =>
-            Cookies.parse(setCookie, host, path, waveNowEpoch))
-          val newCk = fetched.filter(col("p_setck").isNotNull)
-            .select(parseCkU(col("p_setck"), col("host"), col("path")).as("ck"),
-              lit(wave).as("c_wave"))
-            .filter(col("ck").isNotNull)
-            .select(col("ck.domain").as("c_domain"),
-              col("ck.hostOnly").as("c_hostonly"),
-              col("ck.name").as("c_name"), col("ck.path").as("c_path"),
-              col("ck.value").as("c_value"), col("ck.secure").as("c_secure"),
-              col("ck.expiresAt").as("c_expires"),
-              col("ck.remove").as("c_remove"), col("c_wave"))
-            .distinct()
-          if (!newCk.isEmpty) {
-            val merged = cookieJar.withColumn("c_remove", lit(false))
-              .unionByName(newCk)
-              .withColumn("rn", row_number().over(
-                Window.partitionBy(col("c_domain"), col("c_name"), col("c_path"))
-                  .orderBy(col("c_wave").desc, col("c_value").desc)))
-              .filter(col("rn") === 1 && !col("c_remove") &&
-                // purge rows already expired at the wave clock — dead
-                // cookies would otherwise ride every snapshot rewrite
-                // forever on a long crawl (they were already invisible to
-                // header(), which re-checks expiry per request)
-                (col("c_expires") < 0 ||
-                  col("c_expires") > lit(waveNowEpoch)))
-              .drop("rn", "c_remove")
-            cookieJar = merged.localCheckpoint(true)
-            cookieJarNonEmpty = true
-            refreshJarFlags()
+        fetched = fetched.unionByName(finals)
+        pending =
+          if (hop == spec.maxRedirect) pending.limit(0)
+          else {
+            // Go http.Client (client/client.go:303-311): 301/302/303
+            // rewrite a non-GET/HEAD method to GET and drop the body
+            val rewrite = col("p_status").isin(301, 302, 303) &&
+              col("method") =!= "GET" && col("method") =!= "HEAD"
+            j.filter(isRedir)
+              // evaluated ONCE, against the original method
+              .withColumn("mrw", rewrite)
+              .withColumn("method",
+                when(col("mrw"), lit("GET")).otherwise(col("method")))
+              .withColumn("meta",
+                when(col("mrw"),
+                  map_filter(col("meta"), (k, _) => k =!= "body"))
+                  .otherwise(col("meta")))
+              .drop("mrw")
+              .withColumn("cur_url", col("p_loc"))
+              .withColumn("hops", col("hops") + 1)
+              .drop(FetchCols.map(_._1) :+ "p_loc": _*)
           }
-        }
+        hop += 1
+      }
+      fetched
+    }
 
-        // ---- retry re-enqueue -------------------------------------------
-        // Two transient-error families (client/client.go:94-121): transport
-        // errors (timeout analog: corpus latency_ms > requestTimeoutMs) and
-        // retryable status codes. BOTH retry up to retryTimes; exhaustion
-        // differs: a timeout never produced a response → ErrorFunc analog
-        // (fetch_timeout audit, nothing delivered), while an exhausted
-        // retryable STATUS response IS delivered to the parser
-        // (geziyor.go:233-263: only err != nil routes to ErrorFunc).
-        val retryCodes = spec.retryHttpCodes.toSeq.map(Integer.valueOf)
-        val timedOut =
-          if (spec.requestTimeoutMs > 0)
-            col("p_status").isNotNull && col("p_latency").isNotNull &&
-              col("p_latency") > lit(spec.requestTimeoutMs)
-          else lit(false)
-        val retryableStatus = col("p_status").isin(retryCodes: _*)
-        val retryable = fetched.filter(
-          (retryableStatus || timedOut) && !col("redirect_exceeded"))
-        val requeue = retryable.filter(col("retry") < spec.retryTimes)
-          .select(col("url"), col("host"), col("path"), col("depth"),
-            col("method"), col("meta"), (col("retry") + 1).as("retry"),
-            col("priority"), (col("wave") + 1).as("wave"), col("rank"),
-            col("parser_id"), lit(true).as("is_retry"))
-        auditInc += (retryable.filter(col("retry") < spec.retryTimes)
-          .select(col("wave"), lit("retry"), col("method"), col("p_status"),
-            col("host"), col("url"), concat(lit("attempt "), col("retry") + 1)))
-        auditInc += (retryable.filter(col("retry") >= spec.retryTimes &&
-            !timedOut)
-          .select(col("wave"), lit("retry_exhausted"), col("method"),
-            col("p_status"), col("host"), col("url"),
-            lit(s"gave up after ${spec.retryTimes} retries")))
-        auditInc += (retryable.filter(col("retry") >= spec.retryTimes &&
-            timedOut)
-          .select(col("wave"), lit("fetch_timeout"), col("method"), lit(-1),
-            col("host"), col("url"),
-            lit(s"timed out after ${spec.retryTimes} retries")))
+    /** Validator/304 merge (cache/cache.go:210-239): a live page still
+      * carrying the cached validators keeps the cached body.
+      */
+    def revalidate(fetched: DataFrame): DataFrame = {
+      val hOf = (m: Column, k: String) => element_at(m, k)
+      val notModified = col("cache_action") === "revalidate" &&
+        col("p_status").isNotNull && (
+          (col("p_etag").isNotNull &&
+            col("p_etag") === hOf(col("k_headers"), "ETag")) ||
+          (col("p_lastmod").isNotNull &&
+            col("p_lastmod") === hOf(col("k_headers"), "Last-Modified")))
+      fetched
+        .withColumn("revalidated_304", notModified)
+        .withColumn("p_html",
+          when(notModified, col("k_body")).otherwise(col("p_html")))
+        .withColumn("p_ct",
+          when(notModified, col("k_ct")).otherwise(col("p_ct")))
+    }
 
-        // ---- deliver responses → decode → parse --------------------------
-        // delivered = real responses that are not being retried this wave:
-        // clean statuses AND retry-exhausted retryable statuses; timeouts
-        // never deliver (transport error)
-        val responses0 = fetched.filter(col("p_status").isNotNull &&
-          !col("redirect_exceeded") && !timedOut &&
-          (!retryableStatus || col("retry") >= spec.retryTimes))
-        // Custom rendered action program: doRequestChrome runs the action
-        // list as part of the FETCH itself, before any response middleware
-        // (client/client.go:133-139,171-247). A replaced PreActions list
-        // owns capture — never captured ⇒ empty body; never navigated ⇒
-        // document response unset ⇒ StatusCode 0 (client.go:227-239).
-        // Pure per-row map inside the fetch projection — no extra shuffle;
-        // the audit's crawled row sees the post-program status, like the
-        // reference's delivered Response.
-        val responses1 = actionProg match {
-          case Some(prog) =>
-            val renderU = udf((u: String, t: String) => {
-              val r = Actions.render(u, t, prog)
-              (r.body, r.statusSet)
-            })
-            responses0
-              .withColumn("r_out", renderU(col("cur_url"), col("p_text")))
-              .withColumn("p_text", col("r_out._1"))
-              .withColumn("p_status",
-                when(col("r_out._2"), col("p_status")).otherwise(lit(0)))
-              .drop("r_out")
-          case None => responses0
-        }
-        // custom response middlewares (geziyor.go:121-126 appended chain)
-        val responses =
-          responseMiddlewares.foldLeft(responses1)((df, mw) => mw(df))
-        // Proxy identity in the audit (client/proxy.go:19-48; SURVEY §2.4):
-        // stable stateless assignment by url hash (the q34 scale face —
-        // portable md5 derivation, so the oracle can reproduce it).
+    /** Cache-served rows join the delivery stream without fetching. */
+    def serveCached(fetched: DataFrame, served: DataFrame): DataFrame = {
+      val asFetched = withFetchCols(
+          served.withColumn("cur_url", col("url")).withColumn("hops", lit(0)),
+          Map("p_status" -> lit(200), "p_ct" -> col("k_ct"),
+            "p_html" -> col("k_body")))
+        .withColumn("redirect_exceeded", lit(false))
+        .withColumn("revalidated_304", lit(false))
+      auditInc += auditRows(served, "cache_hit", status = lit(200))
+      fetched.unionByName(asFetched)
+    }
+
+    /** Persist the wave's fetched rows and audit the fetch outcomes. */
+    def settle(fetched0: DataFrame): DataFrame = {
+      auditInc += auditRows(fetched0.filter(col("revalidated_304")),
+        "revalidate_304", status = col("p_status"))
+      // The persist is also the attribute barrier that keeps downstream
+      // localCheckpoint constraints stable (without it Catalyst's
+      // Union.rewriteConstraints throws key-not-found on the AIMD and
+      // randomized-parity paths); filling it re-reads cached joins only.
+      val fetched = fetched0.persist(StorageLevel.MEMORY_AND_DISK)
+      persisted += fetched
+      // fetch miss = the transport-error (ErrorFunc) analog
+      auditInc += auditRows(fetched.filter(col("p_status").isNull),
+        "fetch_miss", status = lit(-1),
+        detail = concat(lit("no such page: "), col("cur_url")))
+      auditInc += auditRows(fetched.filter(col("redirect_exceeded")),
+        "redirect_exceeded", status = col("p_status"),
+        detail = lit(s"stopped after ${spec.maxRedirect} redirects"))
+      fetched
+    }
+
+    // ---- respond ---------------------------------------------------------
+    /** AIMD update: a host with ANY slow or 5xx response halves its cap,
+      * other observed hosts add 2; unobserved hosts keep theirs.
+      */
+    def updateAimd(fetched: DataFrame): Unit = {
+      val overObs = fetched
+        .filter(col("p_status").isNotNull)
+        .groupBy(col("host"))
+        .agg(max(
+          when(col("p_latency").isNotNull &&
+            col("p_latency") > lit(AdaptiveLatencyMs), 1)
+            .when(col("p_status") >= 500, 1)
+            .otherwise(0)).as("over"))
+        .select(col("host").as("a_host"), col("over"))
+      val prev = hostCaps.getOrElse(
+        overObs.limit(0).select(col("a_host"),
+          lit(null).cast("long").as("acap")))
+      val init = lit(AdaptiveInitialCap)
+      hostCaps = Some(prev
+        .join(overObs, Seq("a_host"), "full_outer")
+        .select(col("a_host"),
+          when(col("over") === 1,
+            greatest(lit(1L),
+              floor(coalesce(col("acap"), init) / 2).cast("long")))
+            .when(col("over") === 0,
+              least(lit(AdaptiveMaxCap), coalesce(col("acap"), init) + 2))
+            .otherwise(col("acap")).as("acap"))
+        .localCheckpoint(true))
+    }
+
+    /** Accumulate Set-Cookie responses (RFC 6265, client/client.go:
+      * 250-272): keyed by (domain, name, path), the latest wave replaces
+      * (ties: max value); Max-Age ≤ 0 / past Expires evicts. A wave with
+      * no Set-Cookie costs one early-exit filter scan.
+      */
+    def absorbCookies(fetched: DataFrame): Unit = {
+      if (fetched.filter(col("p_setck").isNotNull).isEmpty) return
+      val now = waveNowEpoch
+      val parseCkU = udf((setCookie: String, host: String, path: String) =>
+        Cookies.parse(setCookie, host, path, now))
+      val newCk = fetched.filter(col("p_setck").isNotNull)
+        .select(parseCkU(col("p_setck"), col("host"), col("path")).as("ck"),
+          lit(wave).as("c_wave"))
+        .filter(col("ck").isNotNull)
+        .select(col("ck.domain").as("c_domain"),
+          col("ck.hostOnly").as("c_hostonly"),
+          col("ck.name").as("c_name"), col("ck.path").as("c_path"),
+          col("ck.value").as("c_value"), col("ck.secure").as("c_secure"),
+          col("ck.expiresAt").as("c_expires"),
+          col("ck.remove").as("c_remove"), col("c_wave"))
+        .distinct()
+      if (!newCk.isEmpty) {
+        val merged = cookieJar.withColumn("c_remove", lit(false))
+          .unionByName(newCk)
+          .withColumn("rn", row_number().over(
+            Window.partitionBy(col("c_domain"), col("c_name"), col("c_path"))
+              .orderBy(col("c_wave").desc, col("c_value").desc)))
+          .filter(col("rn") === 1 && !col("c_remove") &&
+            // purge cookies already expired at the wave clock
+            (col("c_expires") < 0 || col("c_expires") > lit(now)))
+          .drop("rn", "c_remove")
+        cookieJar = merged.localCheckpoint(true)
+        cookieJarNonEmpty = true
+        refreshJarFlags()
+      }
+    }
+
+    private val timedOut: Column =
+      if (spec.requestTimeoutMs > 0)
+        col("p_status").isNotNull && col("p_latency").isNotNull &&
+          col("p_latency") > lit(spec.requestTimeoutMs)
+      else lit(false)
+
+    /** Retry re-enqueue and delivery; returns (delivered, requeued).
+      * Timeouts (latency_ms > requestTimeoutMs) and retryable statuses both
+      * retry up to retryTimes (client/client.go:94-121). An exhausted
+      * timeout delivers nothing (fetch_timeout, the ErrorFunc analog); an
+      * exhausted retryable STATUS is delivered (geziyor.go:233-263).
+      */
+    def respond(fetched: DataFrame): (DataFrame, DataFrame) = {
+      val retryCodes = spec.retryHttpCodes.toSeq.map(Integer.valueOf)
+      val retryableStatus = col("p_status").isin(retryCodes: _*)
+      val retryable = fetched.filter(
+        (retryableStatus || timedOut) && !col("redirect_exceeded"))
+      val again = col("retry") < spec.retryTimes
+      val exhausted = col("retry") >= spec.retryTimes
+      val requeue = retryable.filter(again)
+        .select(col("url"), col("host"), col("path"), col("depth"),
+          col("method"), col("meta"), (col("retry") + 1).as("retry"),
+          col("priority"), (col("wave") + 1).as("wave"), col("rank"),
+          col("parser_id"), lit(true).as("is_retry"))
+      auditInc += auditRows(retryable.filter(again), "retry",
+        status = col("p_status"),
+        detail = concat(lit("attempt "), col("retry") + 1))
+      auditInc += auditRows(retryable.filter(exhausted && !timedOut),
+        "retry_exhausted", status = col("p_status"),
+        detail = lit(s"gave up after ${spec.retryTimes} retries"))
+      auditInc += auditRows(retryable.filter(exhausted && timedOut),
+        "fetch_timeout", status = lit(-1),
+        detail = lit(s"timed out after ${spec.retryTimes} retries"))
+      val delivered = fetched.filter(col("p_status").isNotNull &&
+        !col("redirect_exceeded") && !timedOut &&
+        (!retryableStatus || exhausted))
+      (delivered, requeue)
+    }
+
+    /** Custom rendered action program, run as part of the fetch, before
+      * any response middleware (client/client.go:133-139,171-247): never
+      * captured ⇒ empty body; never navigated ⇒ StatusCode 0.
+      */
+    def runActions(delivered: DataFrame,
+        prog: Seq[Actions.Action]): DataFrame = {
+      val renderU = udf((u: String, t: String) => {
+        val r = Actions.render(u, t, prog)
+        (r.body, r.statusSet)
+      })
+      delivered
+        .withColumn("r_out", renderU(col("cur_url"), col("p_text")))
+        .withColumn("p_text", col("r_out._1"))
+        .withColumn("p_status",
+          when(col("r_out._2"), col("p_status")).otherwise(lit(0)))
+        .drop("r_out")
+    }
+
+    /** The `crawled` audit rows, stamped with the url-hash proxy
+      * (client/proxy.go:19-48, the q34 face). LogDisabled kills the log
+      * lines, not the counters: the crawled count goes to the metrics.
+      */
+    def logCrawled(responses: DataFrame): Unit =
+      if (!spec.logDisabled) {
         val crawlDetail =
           if (spec.proxyUrls.isEmpty) lit("")
           else {
@@ -1097,365 +1061,302 @@ object CrawlJob {
               element_at(array(spec.proxyUrls.map(lit): _*),
                 (pid + 1).cast("int")))
           }
-        if (!spec.logDisabled)
-          auditInc += (responses.select(col("wave"), lit("crawled"),
-            col("method"), col("p_status"), col("host"), col("url"),
-            crawlDetail))
-        else {
-          // LogDisabled kills the log lines, NOT the counters
-          // (metrics.go counters live outside LogStats) — keep the
-          // per-wave crawled count in the metrics table directly.
-          val crawledN = responses.count() // Spark action OUTSIDE the lock
-          metricsBuf.synchronized {
-            metricsBuf += ((wave, "crawled", crawledN))
-          }
+        auditInc += auditRows(responses, "crawled",
+          status = col("p_status"), detail = crawlDetail)
+      } else {
+        val crawledN = responses.count() // Spark action OUTSIDE the lock
+        metricsBuf.synchronized {
+          metricsBuf += ((wave, "crawled", crawledN))
         }
-
-        val reg = parsers
-        val maxBody = spec.maxBodySize
-        val parseHtmlDisabled = spec.parseHtmlDisabled
-        val charsetDetectDisabled = spec.charsetDetectDisabled
-        val sniffCt = spec.sniffContentType
-        // Rendered fetch mode (client/client.go:171-247): deliver the
-        // pre-rendered DOM (`text` variant, always utf-8 HTML) instead of
-        // the raw body — the corpus-mode analog of GetRendered.
-        val bodyCol =
-          if (actionProg.isDefined)
-            // custom program: the body IS whatever GetOuterHTML captured
-            // (possibly empty) — no raw-html fallback, like the reference
-            encode(coalesce(col("p_text"), lit("")), "UTF-8")
-          else if (spec.rendered)
-            when(col("p_text").isNotNull, encode(col("p_text"), "UTF-8"))
-              .otherwise(col("p_html"))
-          else col("p_html")
-        val ctCol =
-          if (actionProg.isDefined)
-            // document response never received ⇒ headers unset (res==nil)
-            when(col("p_status") === 0, lit(null).cast("string"))
-              .otherwise(lit("text/html; charset=utf-8"))
-          else if (spec.rendered)
-            when(col("p_text").isNotNull, lit("text/html; charset=utf-8"))
-              .otherwise(col("p_ct"))
-          else col("p_ct")
-        // ---- WARC archive output (opt-in): this wave's delivered
-        // responses become one ISO-28500 member file per partition under
-        // warcArchiveDir/wave-NNNN/ (WarcSink streams from the executors;
-        // warcDedup folds identical payloads into revisit records). One
-        // extra action per wave, only when the archive is requested.
-        spec.warcArchiveDir.foreach { wd =>
-          val captures = responses.select(
-            col("cur_url").as("url"),
-            coalesce(
-              date_format(col("p_warc_ts"), "yyyy-MM-dd'T'HH:mm:ss'Z'"),
-              lit("1970-01-01T00:00:00Z")).as("ts"),
-            coalesce(bodyCol, lit(Array.emptyByteArray)).as("payload"))
-          // every member opens with a warcinfo self-description (ISO 28500
-          // §6.2, the Common-Crawl member layout); dated by the
-          // deterministic wave clock
-          val infoDate = java.time.format.DateTimeFormatter.ISO_INSTANT
-            .format(java.time.Instant.ofEpochSecond(
-              spec.cacheNowEpochSec + wave.toLong * spec.waveIntervalMs / 1000L))
-          graft.sinks.WarcSink.write(captures, f"$wd%s/wave-$wave%04d",
-            dedup = spec.warcDedup, compress = spec.warcGzip,
-            info = Some((infoDate, Seq(
-              "software" -> "geziyorspark",
-              "format" -> "WARC File Format 1.0",
-              "wave" -> wave.toString))))
-        }
-
-        val parsed = responses
-          .select(col("url"), col("cur_url"), col("host"), col("depth"),
-            col("method"), col("meta"), col("wave"), col("rank"),
-            col("parser_id"), col("p_status"), ctCol.as("p_ct"),
-            bodyCol.as("p_html"))
-          .as[(String, String, String, Int, String, Map[String, String], Int,
-            Long, String, Int, String, Array[Byte])]
-          .mapPartitions { it =>
-            it.map { case (url, finalUrl, host, depth, method, meta, w, rank,
-                parserId, status, ct, html) =>
-              val body = CharsetDecode.truncate(html, maxBody)
-              // opt-in fallback for absent Content-Type headers: sniff the
-              // leading bytes (Latin-1 view — binary-safe) so a typeless
-              // HTML page still parses; a server-provided type always wins
-              // (reference parity: IsHTML is header-only,
-              // client/response.go:36-44)
-              val ctEff =
-                if (sniffCt && (ct == null || ct.isEmpty) &&
-                    body != null && body.nonEmpty)
-                  ContentSniff.sniff(new String(body, 0,
-                    math.min(body.length, ContentSniff.MaxSniff),
-                    java.nio.charset.StandardCharsets.ISO_8859_1))
-                else ct
-              val isHead = method == "HEAD"
-              val text =
-                if (isHead) ""
-                else if (charsetDetectDisabled) CharsetDecode.decodeRaw(body)
-                else CharsetDecode.decode(body, ctEff)
-              val html4Parse = CharsetDecode.isHtml(ctEff) && !parseHtmlDisabled
-              Parsers.safeParse(reg)(parserId, finalUrl, text, html4Parse, meta) match {
-                case Right(out) => (url, host, depth, meta, w, rank, parserId,
-                  out.records, out.links.map(d => (d.url, d.parserId)), null: String)
-                case Left(err) => (url, host, depth, meta, w, rank, parserId,
-                  Seq.empty[String], Seq.empty[(String, String)], err)
-              }
-            }
-          }
-          .toDF("url", "host", "depth", "meta", "wave", "rank", "parser_id",
-            "records", "links", "parse_error")
-          .persist(StorageLevel.MEMORY_AND_DISK)
-
-        auditInc += (parsed.filter(col("parse_error").isNotNull)
-          .select(col("wave"), lit("parse_error"), lit("GET"), lit(0),
-            col("host"), col("url"), col("parse_error")))
-
-        val recordsInc = parsed
-          .select(col("wave"), col("rank"),
-            posexplode(col("records")).as(Seq("seq", "json")))
-        records = records.union(recordsInc)
-
-        // ---- discovered links → next frontier ----------------------------
-        val candLinks = parsed
-          .select(col("rank").as("parent_rank"), col("depth"), col("meta"),
-            posexplode(col("links")).as(Seq("link_pos", "link")))
-          .select(col("link._1").as("url"), col("link._2").as("parser_id"),
-            col("parent_rank"), col("link_pos"),
-            (col("depth") + 1).as("depth"), col("meta"))
-        // sitemap-discovered locs (if any) enter the same candidate stream:
-        // same depth cap, domain filter, first-wins dedup, seen anti-join
-        val cand = sitemapCandW
-          .map(candLinks.unionByName(_)).getOrElse(candLinks)
-          .filter(col("depth") <= spec.maxDepth)
-          .withColumn("host", hostOfU(col("url")))
-          .withColumn("path", pathOfU(col("url")))
-
-        val (candAllowed, candRejected) =
-          if (spec.allowedDomains.isEmpty) (cand, cand.limit(0))
-          else (cand.filter(col("host").isin(spec.allowedDomains: _*)),
-            cand.filter(!col("host").isin(spec.allowedDomains: _*)))
-        auditInc += (candRejected
-          .select(lit(wave), lit("rejected_domain"), lit("GET"), lit(0),
-            col("host"), col("url"), lit("")))
-
-        // intra-wave first-wins dedup (duplicate_requests.go:18 LoadOrStore)
-        val dw = Window.partitionBy(col("url"))
-          .orderBy(col("parent_rank").asc, col("link_pos").asc)
-        val candDeduped = candAllowed
-          .withColumn("rn", row_number().over(dw))
-          .filter(col("rn") === 1).drop("rn")
-
-        // seen-set anti-join (GETs only; URLRevisitEnabled disables).
-        // bloomDedup = the 10^10-scale path: broadcast Bloom prefilter, then
-        // exact anti-join only over the maybe-seen rows.
-        // Checkpointed ONCE: both consumers (seen increment + next-frontier
-        // ranking) read the materialized result — without this the
-        // dedup-window + anti-join pipeline ran twice per wave (profiled as
-        // the two dominant per-wave stages).
-        val candNew = {
-          val cn =
-            if (spec.urlRevisitEnabled) candDeduped
-            else if (spec.bloomDedup) sketch.filterNew(candDeduped, seen)
-            else candDeduped.join(seen, Seq("url"), "left_anti")
-          cn.localCheckpoint(true)
-        }
-        // candNew is materialized, so no job still reads the broadcast this
-        // replaces; a no-op unless the Bloom probe above bootstrapped it
-        sketch.mergeIncrement(candNew.select(col("url")))
-
-        // ---- crawl-trap budget gate (CrawlSpec.trapTemplateBudget) -------
-        // Cap each (host, digit-run path template) at `budget` frontier
-        // entries, crawl-lifetime. Split by the running granted-count state:
-        //  - SATURATED templates (n_prev >= budget) cap their urls with a
-        //    plain filter — no window, the steady-state cost of a detected
-        //    trap is one broadcast-join predicate per wave;
-        //  - ACTIVE templates rank their candidates deterministically
-        //    (parent_rank, link_pos, url) and keep n_prev + rank <= budget.
-        // Capped urls are audited and still flow into `seen`/sketches below
-        // (candNew is the seen increment), so they stay suppressed forever.
-        // The state table is one row per DISTINCT template ever granted —
-        // bounded and broadcastable at any crawl scale.
-        val candGranted = spec.trapTemplateBudget match {
-          case Some(budget) =>
-            val withT = candNew.withColumn("template",
-              regexp_replace(col("path"), "[0-9]+", "N"))
-            val counts = trapCounts.getOrElse {
-              spark.createDataFrame(
-                spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-                org.apache.spark.sql.types.StructType(Seq(
-                  org.apache.spark.sql.types.StructField("host",
-                    org.apache.spark.sql.types.StringType),
-                  org.apache.spark.sql.types.StructField("template",
-                    org.apache.spark.sql.types.StringType),
-                  org.apache.spark.sql.types.StructField("n_prev",
-                    org.apache.spark.sql.types.LongType))))
-            }
-            val joined = withT
-              .join(broadcast(counts), Seq("host", "template"), "left")
-              .withColumn("n_prev", coalesce(col("n_prev"), lit(0L)))
-            val saturated = joined.filter(col("n_prev") >= budget)
-            val active = joined.filter(col("n_prev") < budget)
-            val tw = Window.partitionBy(col("host"), col("template"))
-              .orderBy(col("parent_rank").asc, col("link_pos").asc,
-                col("url").asc)
-            val rankedT = active.withColumn("t_rn",
-              row_number().over(tw).cast("long"))
-            val granted = rankedT
-              .filter(col("n_prev") + col("t_rn") <= budget)
-              .drop("t_rn")
-            val capped = rankedT
-              .filter(col("n_prev") + col("t_rn") > budget)
-              .drop("t_rn")
-              .unionByName(saturated)
-            auditInc += (capped.select(lit(wave), lit("trap_capped"),
-              lit("GET"), lit(0), col("host"), col("url"), col("template")))
-            val newCounts = granted.groupBy(col("host"), col("template"))
-              .agg(count(lit(1)).as("n_inc"))
-            trapCounts = Some(counts
-              .join(newCounts, Seq("host", "template"), "full_outer")
-              .select(col("host"), col("template"),
-                (coalesce(col("n_prev"), lit(0L)) +
-                  coalesce(col("n_inc"), lit(0L))).as("n_prev"))
-              .localCheckpoint(true))
-            granted.drop("template", "n_prev")
-          case None => candNew
-        }
-
-        // deterministic discovery rank (sync-order mode; geziyor.go:225-227).
-        // Next-wave ranks are made unique across the three sources by group
-        // offsets: deferred (oldest pending) < retries < new discoveries —
-        // so the (wave, rank) record key is always a total order.
-        // discovery rank: sync-order mode = one global window (exact
-        // reference order, parity/test mode); scale mode (DEFAULT) =
-        // bucketed windows (unique + deterministic, P-way parallel, not a
-        // global total order)
-        val RankBuckets = 1024
-        // sync mode assigns an exact global discovery rank (one extra
-        // window); scale mode skips the discovery window ENTIRELY — the
-        // frontier-assembly window below orders new discoveries directly by
-        // (parent_rank, link_pos), so only ONE bucketed window runs per
-        // wave (profiled: the second window was a top per-wave cost)
-        val ranked0 =
-          if (spec.syncOrder) {
-            val rw = Window.orderBy(col("parent_rank").asc, col("link_pos").asc)
-            candGranted.withColumn("rank", row_number().over(rw).cast("long"))
-          } else candGranted.withColumn("rank", lit(0L))
-        val nextFrontier = ranked0
-          .select(col("url"), col("host"), col("path"), col("depth"),
-            lit("GET").as("method"), col("meta"), lit(0).as("retry"),
-            lit(0).as("priority"), lit(wave + 1).as("wave"), col("rank"),
-            col("parser_id"), lit(false).as("is_retry"),
-            col("parent_rank").as("ord_a"),
-            col("link_pos").cast("long").as("ord_b"))
-
-        // candNew is unique per wave and anti-joined against seen, so the
-        // increment needs no distinct — and it's a projection of the
-        // already-checkpointed candNew, so this is free
-        val seenInc = coldSeedSeen match {
-          case Some(seeds) =>
-            coldSeedSeen = None // seeds belong to the FIRST committed delta
-            seeds.union(candNew.select(col("url")))
-          case None => candNew.select(col("url"))
-        }
-        seen = seen.union(candNew.select(col("url")))
-        // bound the in-loop union chain (round-3 verdict: a 1,000-wave crawl
-        // otherwise carries a 1,000-way union through every anti-join's
-        // analysis): compact every 8 waves — plan width stays ≤ 8 children
-        // at an amortized O(|seen|/8 waves) copy cost. On a cluster this is
-        // the state-table compaction; StateStore's resume reads already do
-        // the equivalent single multi-path scan.
-        if ((wave + 1) % 8 == 0) seen = seen.localCheckpoint(true)
-        // assembly order keys: deferred/retries by their carried rank, new
-        // discoveries by (parent_rank, link_pos) — unique within a wave in
-        // both modes, so the assigned ranks are deterministic
-        val assembled = deferred2.withColumn("wave", col("wave") + 1)
-          .withColumn("grp", lit(0))
-          .withColumn("ord_a", col("rank")).withColumn("ord_b", lit(0L))
-          .unionByName(requeue.withColumn("grp", lit(1))
-            .withColumn("ord_a", col("rank")).withColumn("ord_b", lit(0L)))
-          .unionByName(nextFrontier.withColumn("grp", lit(2)))
-        // next-frontier assembly and the audit fold are independent (both
-        // read only cached/checkpointed frames) — materialize them
-        // CONCURRENTLY; the frontier future is awaited right after the
-        // audit checkpoint completes
-        val frontierF = scala.concurrent.Future {
-          {
-            if (spec.syncOrder) {
-              val fw = Window.orderBy(col("grp").asc, col("rank").asc)
-              assembled.withColumn("rank", row_number().over(fw).cast("long"))
-            } else {
-              val bw = Window
-                .partitionBy(pmod(hash(col("url")), lit(RankBuckets)))
-                .orderBy(col("grp").asc, col("ord_a").asc, col("ord_b").asc)
-              assembled.withColumn("rank",
-                pmod(hash(col("url")), lit(RankBuckets)).cast("long") *
-                  lit(1L << 40) + row_number().over(bw).cast("long"))
-            }
-          }.drop("grp", "ord_a", "ord_b")
-            .localCheckpoint(true)
-        }(sideJobEc)
-        // normalize column names: the audit branches select lit() columns
-        // whose auto-names would otherwise leak into the delta parquet.
-        // Materialize the wave's increment NOW, while granted2/fetched are
-        // still cached: the audit branches re-run the gate/retry joins, and
-        // deferring them to the end-of-crawl checkpoint (the r4 shape)
-        // recomputed every wave's joins from UNPERSISTED inputs — profiled
-        // as the dominant outside-loop cost on q17/q18. This also bounds
-        // the audit plan to a union of materialized frames (the same
-        // plan-width argument as the seen-chain compaction).
-        val auditIncDf = {
-          val raw = auditInc.reduce(_ union _).toDF(emptyAudit.columns: _*)
-          // size-adaptive task count (guide §2.2 fewer-larger-partitions):
-          // the ~10 audit branches are filters over cached frames whose
-          // union otherwise fans one tiny checkpoint job out into hundreds
-          // of near-empty tasks; below the threshold the branches collapse
-          // into 4 tasks with identical rows. Big waves keep their natural
-          // parallelism.
-          (if (frontierN < 100000L) raw.coalesce(4) else raw)
-            .localCheckpoint(true)
-        }
-        metricsBuf.synchronized { audit = audit.union(auditIncDf) }
-        frontier = scala.concurrent.Await.result(
-          frontierF, scala.concurrent.duration.Duration.Inf)
-        lineageBuf ++= scala.concurrent.Await.result(
-            lineageF, scala.concurrent.duration.Duration.Inf)
-          .map(r => (wave, r.getInt(0), r.getLong(1)))
-
-        persisted += parsed
-        granted2.unpersist()
-        deferred2.unpersist()
-
-        // Snapshot tables (bounded by live state) are rewritten whole;
-        // accumulator tables commit ONLY this wave's increment — resume
-        // unions the committed increments (StateStore scaladoc). Write
-        // volume per wave is O(wave output), not O(crawl history).
-        stateDir.foreach { dir =>
-          StateStore.commitWave(dir, wave,
-            snapshots = Map(
-              "frontier" -> frontier,
-              "robot_rules" -> robotRules, "cookies" -> cookieJar),
-            deltas = Map(
-              "seen" -> seenInc, "records" -> recordsInc,
-              "audit" -> auditIncDf, "crawl_order" -> orderInc))
-        }
-        wave += 1
       }
+
+    // Rendered fetch mode (client/client.go:171-247): deliver the
+    // pre-rendered `text` DOM instead of the raw body.
+    private val bodyCol: Column =
+      if (actionProg.isDefined)
+        // custom program: the body is what it captured, maybe empty
+        encode(coalesce(col("p_text"), lit("")), "UTF-8")
+      else if (spec.rendered)
+        when(col("p_text").isNotNull, encode(col("p_text"), "UTF-8"))
+          .otherwise(col("p_html"))
+      else col("p_html")
+    private val ctCol: Column =
+      if (actionProg.isDefined)
+        // document response never received ⇒ headers unset (res==nil)
+        when(col("p_status") === 0, lit(null).cast("string"))
+          .otherwise(lit("text/html; charset=utf-8"))
+      else if (spec.rendered)
+        when(col("p_text").isNotNull, lit("text/html; charset=utf-8"))
+          .otherwise(col("p_ct"))
+      else col("p_ct")
+
+    /** WARC archive: the wave's delivered responses become one ISO-28500
+      * member per partition under `dir`/wave-NNNN/.
+      */
+    def archive(responses: DataFrame, dir: String): Unit = {
+      val captures = responses.select(
+        col("cur_url").as("url"),
+        coalesce(
+          date_format(col("p_warc_ts"), "yyyy-MM-dd'T'HH:mm:ss'Z'"),
+          lit("1970-01-01T00:00:00Z")).as("ts"),
+        coalesce(bodyCol, lit(Array.emptyByteArray)).as("payload"))
+      // each member opens with a warcinfo record (ISO 28500 §6.2)
+      val infoDate = java.time.format.DateTimeFormatter.ISO_INSTANT
+        .format(java.time.Instant.ofEpochSecond(waveNowEpoch))
+      graft.sinks.WarcSink.write(captures, f"$dir%s/wave-$wave%04d",
+        dedup = WarcDedup, compress = WarcGzip,
+        info = Some((infoDate, Seq(
+          "software" -> "geziyorspark",
+          "format" -> "WARC File Format 1.0",
+          "wave" -> wave.toString))))
     }
 
-    // single final materialization of the accumulated outputs, then release
-    // the per-wave caches they were computed from
-    records = records.localCheckpoint(true)
-    locally {
-      val a = audit.localCheckpoint(true) // action outside the lock
-      metricsBuf.synchronized { audit = a }
+    // ---- extract ---------------------------------------------------------
+    /** Decode + parse the delivered responses (persisted); audit parse
+      * errors and append the wave's records.
+      */
+    def extract(responses: DataFrame,
+        parsers: Map[String, Parser]): DataFrame = {
+      val reg = parsers
+      val maxBody = spec.maxBodySize
+      val parseHtmlDisabled = spec.parseHtmlDisabled
+      val charsetDetectDisabled = spec.charsetDetectDisabled
+      val sniffCt = spec.sniffContentType
+      val parsed = responses
+        .select(col("url"), col("cur_url"), col("host"), col("depth"),
+          col("method"), col("meta"), col("wave"), col("rank"),
+          col("parser_id"), col("p_status"), ctCol.as("p_ct"),
+          bodyCol.as("p_html"))
+        .as[(String, String, String, Int, String, Map[String, String], Int,
+          Long, String, Int, String, Array[Byte])]
+        .mapPartitions { it =>
+          it.map { case (url, finalUrl, host, depth, method, meta, w, rank,
+              parserId, status, ct, html) =>
+            val body = CharsetDecode.truncate(html, maxBody)
+            // opt-in: sniff a missing Content-Type from the leading bytes;
+            // a server-provided type always wins
+            val ctEff =
+              if (sniffCt && (ct == null || ct.isEmpty) &&
+                  body != null && body.nonEmpty)
+                ContentSniff.sniff(new String(body, 0,
+                  math.min(body.length, ContentSniff.MaxSniff),
+                  java.nio.charset.StandardCharsets.ISO_8859_1))
+              else ct
+            val isHead = method == "HEAD"
+            val text =
+              if (isHead) ""
+              else if (charsetDetectDisabled) CharsetDecode.decodeRaw(body)
+              else CharsetDecode.decode(body, ctEff)
+            val html4Parse = CharsetDecode.isHtml(ctEff) && !parseHtmlDisabled
+            Parsers.safeParse(reg)(parserId, finalUrl, text, html4Parse, meta) match {
+              case Right(out) => (url, host, depth, meta, w, rank, parserId,
+                out.records, out.links.map(d => (d.url, d.parserId)), null: String)
+              case Left(err) => (url, host, depth, meta, w, rank, parserId,
+                Seq.empty[String], Seq.empty[(String, String)], err)
+            }
+          }
+        }
+        .toDF("url", "host", "depth", "meta", "wave", "rank", "parser_id",
+          "records", "links", "parse_error")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      persisted += parsed
+      auditInc += auditRows(parsed.filter(col("parse_error").isNotNull),
+        "parse_error", method = lit("GET"), detail = col("parse_error"))
+      recordsInc = parsed
+        .select(col("wave"), col("rank"),
+          posexplode(col("records")).as(Seq("seq", "json")))
+      records = records.union(recordsInc)
+      parsed
     }
-    order = order.localCheckpoint(true)
-    persisted.foreach(_.unpersist())
 
-    val metrics = liveMetrics()
-    val lineage = lineageBuf.toSeq.toDF("wave", "partition_id", "n_rows")
-    CrawlResult(records, audit, seen, order, metrics, lineage, wave)
-    } finally {
-      sketch.close()
-      metricsServer.foreach(_.stop())
+    /** Discovered links and sitemap locs past the depth cap and
+      * AllowedDomains (audited rejected_domain).
+      */
+    def links(parsed: DataFrame, sitemapCand: Option[DataFrame]): DataFrame = {
+      val candLinks = parsed
+        .select(col("rank").as("parent_rank"), col("depth"), col("meta"),
+          posexplode(col("links")).as(Seq("link_pos", "link")))
+        .select(col("link._1").as("url"), col("link._2").as("parser_id"),
+          col("parent_rank"), col("link_pos"),
+          (col("depth") + 1).as("depth"), col("meta"))
+      val cand = sitemapCand
+        .map(candLinks.unionByName(_)).getOrElse(candLinks)
+        .filter(col("depth") <= spec.maxDepth)
+        .withColumn("host", hostOfU(col("url")))
+        .withColumn("path", pathOfU(col("url")))
+      val (candAllowed, candRejected) =
+        if (spec.allowedDomains.isEmpty) (cand, cand.limit(0))
+        else (cand.filter(col("host").isin(spec.allowedDomains: _*)),
+          cand.filter(!col("host").isin(spec.allowedDomains: _*)))
+      auditInc += auditRows(candRejected, "rejected_domain",
+        method = lit("GET"), wave = lit(wave))
+      candAllowed
     }
+
+    // ---- dedup -----------------------------------------------------------
+    /** Intra-wave first-wins dedup (duplicate_requests.go:18), then the
+      * seen-set anti-join (bloomDedup: Bloom prefilter first;
+      * URLRevisitEnabled: none). Checkpointed once for both consumers.
+      */
+    def dedup(cand: DataFrame): DataFrame = {
+      val dw = Window.partitionBy(col("url"))
+        .orderBy(col("parent_rank").asc, col("link_pos").asc)
+      val candDeduped = cand
+        .withColumn("rn", row_number().over(dw))
+        .filter(col("rn") === 1).drop("rn")
+      val candNew = {
+        val cn =
+          if (spec.urlRevisitEnabled) candDeduped
+          else if (spec.bloomDedup) sketch.filterNew(candDeduped, seen)
+          else candDeduped.join(seen, Seq("url"), "left_anti")
+        cn.localCheckpoint(true)
+      }
+      // candNew is materialized, so no job still reads the old broadcast
+      sketch.mergeIncrement(candNew.select(col("url")))
+      candNew
+    }
+
+    /** Crawl-trap budget: cap each (host, digit-run path template) at
+      * `budget` frontier entries per run. Saturated templates are a plain
+      * filter; active ones rank (parent_rank, link_pos, url) and keep
+      * n_prev + rank <= budget. Capped urls are audited and stay in `seen`.
+      */
+    def trapGate(candNew: DataFrame, budget: Int): DataFrame = {
+      val withT = candNew.withColumn("template",
+        regexp_replace(col("path"), "[0-9]+", "N"))
+      val counts = trapCounts.getOrElse {
+        import org.apache.spark.sql.types._
+        spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+          StructType(Seq(StructField("host", StringType),
+            StructField("template", StringType),
+            StructField("n_prev", LongType))))
+      }
+      val joined = withT
+        .join(broadcast(counts), Seq("host", "template"), "left")
+        .withColumn("n_prev", coalesce(col("n_prev"), lit(0L)))
+      val saturated = joined.filter(col("n_prev") >= budget)
+      val active = joined.filter(col("n_prev") < budget)
+      val tw = Window.partitionBy(col("host"), col("template"))
+        .orderBy(col("parent_rank").asc, col("link_pos").asc, col("url").asc)
+      val rankedT = active.withColumn("t_rn",
+        row_number().over(tw).cast("long"))
+      val granted = rankedT
+        .filter(col("n_prev") + col("t_rn") <= budget)
+        .drop("t_rn")
+      val capped = rankedT
+        .filter(col("n_prev") + col("t_rn") > budget)
+        .drop("t_rn")
+        .unionByName(saturated)
+      auditInc += auditRows(capped, "trap_capped", method = lit("GET"),
+        wave = lit(wave), detail = col("template"))
+      val newCounts = granted.groupBy(col("host"), col("template"))
+        .agg(count(lit(1)).as("n_inc"))
+      trapCounts = Some(counts
+        .join(newCounts, Seq("host", "template"), "full_outer")
+        .select(col("host"), col("template"),
+          (coalesce(col("n_prev"), lit(0L)) +
+            coalesce(col("n_inc"), lit(0L))).as("n_prev"))
+        .localCheckpoint(true))
+      granted.drop("template", "n_prev")
+    }
+
+    // ---- assemble --------------------------------------------------------
+    /** Next frontier = deferred < retries < new discoveries, ranked on the
+      * side pool; also grows `seen`. Returns (next frontier, seen delta).
+      * Sync-order mode (geziyor.go:225-227) ranks discoveries globally;
+      * scale mode orders them by (parent_rank, link_pos) inside the one
+      * bucketed assembly window.
+      */
+    def assemble(candGranted: DataFrame, candNew: DataFrame,
+        deferred: DataFrame,
+        requeue: DataFrame): (Future[DataFrame], DataFrame) = {
+      val ranked0 =
+        if (spec.syncOrder) {
+          val rw = Window.orderBy(col("parent_rank").asc, col("link_pos").asc)
+          candGranted.withColumn("rank", row_number().over(rw).cast("long"))
+        } else candGranted.withColumn("rank", lit(0L))
+      val nextFrontier = ranked0
+        .select(col("url"), col("host"), col("path"), col("depth"),
+          lit("GET").as("method"), col("meta"), lit(0).as("retry"),
+          lit(0).as("priority"), lit(wave + 1).as("wave"), col("rank"),
+          col("parser_id"), lit(false).as("is_retry"),
+          col("parent_rank").as("ord_a"),
+          col("link_pos").cast("long").as("ord_b"))
+
+      // candNew is unique and anti-joined against seen: no distinct needed
+      val seenInc = coldSeedSeen match {
+        case Some(seeds) =>
+          coldSeedSeen = None // seeds belong to the FIRST committed delta
+          seeds.union(candNew.select(col("url")))
+        case None => candNew.select(col("url"))
+      }
+      seen = seen.union(candNew.select(col("url")))
+      // compact every 8 waves: the union chain's plan width stays ≤ 8
+      if ((wave + 1) % 8 == 0) seen = seen.localCheckpoint(true)
+      val assembled = deferred.withColumn("wave", col("wave") + 1)
+        .withColumn("grp", lit(0))
+        .withColumn("ord_a", col("rank")).withColumn("ord_b", lit(0L))
+        .unionByName(requeue.withColumn("grp", lit(1))
+          .withColumn("ord_a", col("rank")).withColumn("ord_b", lit(0L)))
+        .unionByName(nextFrontier.withColumn("grp", lit(2)))
+      // runs CONCURRENTLY with the audit fold (both read cached frames)
+      val frontierF = Future {
+        {
+          if (spec.syncOrder) {
+            val fw = Window.orderBy(col("grp").asc, col("rank").asc)
+            assembled.withColumn("rank", row_number().over(fw).cast("long"))
+          } else assembled.withColumn("rank",
+            bucketRank(col("grp").asc, col("ord_a").asc, col("ord_b").asc))
+        }.drop("grp", "ord_a", "ord_b")
+          .localCheckpoint(true)
+      }(sideJobEc)
+      (frontierF, seenInc)
+    }
+
+    // ---- account ---------------------------------------------------------
+    /** Fold the wave's audit increment, then take the next frontier and the
+      * lineage rows from their side jobs.
+      */
+    def account(frontierN: Long, frontierF: Future[DataFrame],
+        lineageF: Future[Array[Row]]): Unit = {
+      // Column names normalized for the delta parquet; materialized NOW,
+      // while granted/fetched are still cached.
+      val raw = auditInc.reduce(_ union _).toDF(emptyAudit.columns: _*)
+      // small waves collapse the ~10 branches into 4 tasks
+      auditIncDf = (if (frontierN < 100000L) raw.coalesce(4) else raw)
+        .localCheckpoint(true)
+      metricsBuf.synchronized { audit = audit.union(auditIncDf) }
+      frontier = Await.result(frontierF, Duration.Inf)
+      lineageBuf ++= Await.result(lineageF, Duration.Inf)
+        .map(r => (wave, r.getInt(0), r.getLong(1)))
+    }
+
+    /** Snapshot tables are rewritten whole; accumulators commit only this
+      * wave's increment (StateStore scaladoc).
+      */
+    def commit(dir: String, seenInc: DataFrame): Unit =
+      StateStore.commitWave(dir, wave,
+        snapshots = Map(
+          "frontier" -> frontier,
+          "robot_rules" -> robotRules, "cookies" -> cookieJar),
+        deltas = Map(
+          "seen" -> seenInc, "records" -> recordsInc,
+          "audit" -> auditIncDf, "crawl_order" -> orderInc))
+  }
+
+  /** RFC2616 serve decision over the cached entry's headers
+    * (Freshness.decide), at the injected clock.
+    */
+  private def decideUdf(nowEpochSec: Long) = {
+    val now = Instant.ofEpochSecond(nowEpochSec)
+    val reqHeaders = CrawlSpec.DefaultHeaders
+    udf((method: String, cached: Map[String, String]) =>
+      Freshness.decide(method, reqHeaders, Option(cached), now) match {
+        case Freshness.ServeCached => "serve_cached"
+        case _: Freshness.Revalidate => "revalidate"
+        case Freshness.FetchAndStore => "fetch"
+        case Freshness.FetchNoStore => "fetch_no_store"
+        case Freshness.GatewayTimeout504 => "gateway_504"
+      })
   }
 }

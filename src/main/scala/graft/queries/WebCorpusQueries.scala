@@ -380,11 +380,10 @@ object WebCorpusQueries {
     * — the layout a search shard memory-maps.
     *
     * Scale: df is a term-keyed count with map-side combine (no buffer).
-    * The postings HEAD is computed with the engine's exact two-phase
-    * salted-ranking recipe (the politeness-window shape): phase 1 keeps the
-    * 8 smallest doc_ids per (term, salt-of-doc) bucket — the global head-8
-    * is provably a subset of the per-salt survivors — and phase 2 ranks
-    * only ≤ 8·64 bounded survivors per term, so NO aggregation buffer ever
+    * The postings HEAD is the engine's exact two-phase salted top-k
+    * (graft.pipeline.TopK, the politeness grant's operator): the 8 smallest
+    * doc_ids per term over 64 doc-salt buckets, so phase 2 ranks only
+    * ≤ 8·64 bounded survivors per term and NO aggregation buffer ever
     * holds an unbounded posting list (the r5 verdict's q96 OOM shape: a
     * stop-word term's full 10^10-doc list in ONE collect_list buffer). The
     * final collect_list is bounded at 8 elements by construction.
@@ -397,16 +396,8 @@ object WebCorpusQueries {
           explode(split(trim(col("text")), " ")).as("term"))
         .distinct()
       val dfCount = w.groupBy(col("term")).agg(count(lit(1)).as("df"))
-      val salted = w
-        .withColumn("salt", pmod(hash(col("doc_id")), lit(64)))
-        .withColumn("r1", row_number().over(
-          Window.partitionBy(col("term"), col("salt"))
-            .orderBy(col("doc_id").asc)))
-        .filter(col("r1") <= 8).drop("r1", "salt")
-      val head8 = salted
-        .withColumn("rn", row_number().over(
-          Window.partitionBy(col("term")).orderBy(col("doc_id").asc)))
-        .filter(col("rn") <= 8)
+      val head8 = graft.pipeline.TopK(w, Seq(col("term")), col("doc_id"), 64,
+          Seq(col("doc_id").asc), lit(8)).kept
         .groupBy(col("term"))
         .agg(sort_array(collect_list(col("doc_id"))).as("p"))
       dfCount.join(head8, Seq("term"))

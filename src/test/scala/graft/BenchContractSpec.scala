@@ -52,4 +52,19 @@ class BenchContractSpec extends AnyFunSuite {
     assert((parsed \ "queries").values.asInstanceOf[Map[String, _]].isEmpty)
     assert((parsed \ "queries_omitted").values.asInstanceOf[BigInt] == 56)
   }
+
+  test("a query that throws is recorded as an error, not as a timing") {
+    Bench.recordQuery("q_contract_ok_face")(())
+    Bench.recordQuery("q_contract_boom_face")(
+      throw new IllegalStateException("boom \"quoted\"\nsecond line"))
+    val (times, errors) = Bench.querySnapshot()
+    assert(times.map(_._1).contains("q_contract_ok_face"))
+    assert(!times.map(_._1).contains("q_contract_boom_face"))
+    val want = "java.lang.IllegalStateException: boom \"quoted\"\nsecond line"
+    assert(errors.toMap.get("q_contract_boom_face").contains(want))
+    // BENCH_LAST.json's query_errors object round-trips the message
+    val parsed = JsonMethods.parse(Bench.errorsJson(errors))
+    assert((parsed \ "q_contract_boom_face").values ==
+      want.replace('\n', ' '))
+  }
 }

@@ -300,4 +300,42 @@ class CrawlJobSpec extends AnyFunSuite {
     val res = CrawlJob.run(spark, spec, pagesDf)
     assert(auditKinds(res)("fetch_miss") == 1)
   }
+
+  test("job-count guard: the flagship quotes crawl starts no more Spark jobs") {
+    // Ceiling = the count at the commit before the wave loop was split into
+    // stages: this crawl, with the fixture corpus already cached, started
+    // 307 jobs there (counted as below, local[4], AQE on; the same count in
+    // two separate JVMs). A change that cuts jobs lowers it; nothing may
+    // raise it.
+    val FlagshipJobCeiling = 307
+    val spec = CrawlSpec(startUrls = Seq(SiteFixtures.QuotesBase),
+      parserId = "quotes", syncOrder = true, maxWaves = 20)
+    pagesDf.count()
+    val sc = spark.sparkContext
+    val Marker = "job-count-guard-marker"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties)
+            .exists(_.getProperty("spark.job.description") == Marker))
+          markerSeen.countDown()
+        else if (markerSeen.getCount > 0) jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    val res = try {
+      val r = CrawlJob.run(spark, spec, pagesDf)
+      // the bus delivers in order: once the marker job's start arrives,
+      // every job the crawl started has been counted
+      sc.setJobDescription(Marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      r
+    } finally sc.removeSparkListener(listener)
+    assert(res.waves == 10)
+    assert(jobs.get <= FlagshipJobCeiling,
+      s"the flagship crawl started ${jobs.get} Spark jobs, " +
+        s"ceiling $FlagshipJobCeiling")
+  }
 }
