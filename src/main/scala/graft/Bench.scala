@@ -46,6 +46,14 @@ object Bench {
 
   private val NumHosts = 100000
 
+  /** Where a run writes and what its executor JVMs load: both resolved
+    * against the working directory, so a run from a copy of the repo
+    * writes into that copy.
+    */
+  private[graft] def classesDir: String =
+    new java.io.File("target/scala-2.13/classes").getAbsolutePath
+  private val BenchLast = "BENCH_LAST.json"
+
   /** Deterministic Zipf(s≈1)-skewed frontier: p(host x) ∝ 1/x via
     * host = floor(H^u), u ~ uniform from a hash of the page id.
     */
@@ -329,8 +337,7 @@ object Bench {
       .master(master)
       .config("spark.executor.memory",
         sys.env.getOrElse("SPARK_GRAFT_EXEC_MEM", "16g"))
-      .config("spark.executor.extraClassPath",
-        "/root/repo/target/scala-2.13/classes")
+      .config("spark.executor.extraClassPath", classesDir)
       .config("spark.executor.extraJavaOptions",
         "-XX:+UseParallelGC")
       .appName(s"graft-bench-$cores")
@@ -421,7 +428,7 @@ object Bench {
     // BENCH_LAST.json, so a driver stdout-parsing quirk can never lose the
     // round's bench evidence.
     try {
-      val w = new java.io.PrintWriter("/root/repo/BENCH_LAST.json", "UTF-8")
+      val w = new java.io.PrintWriter(BenchLast, "UTF-8")
       try w.println(fullLine) finally w.close()
     } catch { case _: Throwable => () }
     // STDOUT line: the driver retains only the LAST ~2,000 chars of stdout —

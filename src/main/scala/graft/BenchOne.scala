@@ -27,8 +27,7 @@ object BenchOne {
       .appName("graft-bench-one")
       .config("spark.executor.memory",
         sys.env.getOrElse("SPARK_GRAFT_EXEC_MEM", "9g"))
-      .config("spark.executor.extraClassPath",
-        "/root/repo/target/scala-2.13/classes")
+      .config("spark.executor.extraClassPath", Bench.classesDir)
       // pre-touched initial heap: allocation faults land at executor START
       // (before the untimed warm-up) instead of inside timed windows — this
       // microVM pays heavy host-side fault costs under load

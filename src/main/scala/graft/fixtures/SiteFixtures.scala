@@ -412,6 +412,31 @@ object SiteFixtures {
     hub +: about +: (cals ++ deep)
   }
 
+  /** Robots rules fetched in the wave a host is first GRANTED, not the wave
+    * it first enters the frontier: the hub links three hosts in rank order
+    * a (3 pages + a disallowed /secret), b (no robots.txt) and c (a page +
+    * a disallowed /secret), so a wave cap defers b and c past the wave
+    * their urls are discovered. Not part of `allPages`.
+    */
+  def deferredRobotsPages: Seq[Page] = {
+    def p(url: String, body: String, ct: String = "text/html; charset=utf-8") = {
+      val html =
+        if (ct.startsWith("text/html")) s"<html><body>$body</body></html>"
+        else body
+      Page(url, ts(900), html.getBytes(StandardCharsets.UTF_8), html, "en",
+        200, ct, null)
+    }
+    val targets = Seq("a.example.com/1", "a.example.com/2", "a.example.com/3",
+      "a.example.com/secret", "b.example.com/1", "c.example.com/1",
+      "c.example.com/secret").map("http://" + _)
+    val deny = "User-agent: *\nDisallow: /secret\n"
+    p("http://hub.example.com/",
+      targets.map(u => s"""<a href="$u">x</a>""").mkString) +:
+      p("http://a.example.com/robots.txt", deny, ct = "text/plain") +:
+      p("http://c.example.com/robots.txt", deny, ct = "text/plain") +:
+      targets.map(u => p(u, "<p>leaf</p>"))
+  }
+
   def allPages: Seq[Page] =
     quotesPages ++ booksPages ++ megaPages ++ redirectPages ++ flakyPages ++
       charsetPages ++ cookiePages ++ jsPages ++ securePages ++ rotatePages ++

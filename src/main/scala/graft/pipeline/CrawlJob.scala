@@ -1,11 +1,13 @@
 package graft.pipeline
 
 import java.time.Instant
-import scala.concurrent.{Await, Future}
+import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Observation, Row, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.storage.StorageLevel
 import graft.model.CrawlSpec
 import graft.rfc2616.Freshness
@@ -45,24 +47,17 @@ import graft.url.UrlOps
   *    on a single partition;
   *  - robots rules and the cookie jar are one row per host → broadcast;
   *  - per-wave `localCheckpoint` truncates lineage so plan analysis stays
-  *    O(1) in wave count (on a cluster: reliable checkpoint / state table).
+  *    O(1) in wave count (on a cluster: reliable checkpoint / state table);
+  *  - the loop's bookkeeping counts are observed (`Dataset.observe`) inside
+  *    jobs the wave already runs, never asked for by a job of their own:
+  *    the frontier's size and its rows of hosts without robots rules ride
+  *    the frontier checkpoint, the dispatched rows and their per-partition
+  *    lineage ride the dispatch checkpoint, each redirect hop's follow-up
+  *    rows and Set-Cookie rows ride the hop's materialising aggregate.
+  *
+  * Every job carries the Spark job description `wave=N stage=S`.
   */
 object CrawlJob {
-
-  /** Small daemon pool for overlapping INDEPENDENT per-wave Spark actions
-    * (guide §2.6: actions are only sequential because the driver calls them
-    * sequentially). Used for side observations (lineage collect, audit
-    * fold) that share no state with the critical frontier chain; every
-    * future is Await-ed inside the same wave, so no work ever crosses a
-    * wave boundary.
-    */
-  private val sideJobEc: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutor(
-      java.util.concurrent.Executors.newFixedThreadPool(2, r => {
-        val t = new Thread(r, "crawl-side-job")
-        t.setDaemon(true)
-        t
-      }))
 
   final case class CrawlResult(
       records: DataFrame,    // wave, rank, seq, json
@@ -74,6 +69,27 @@ object CrawlJob {
       waves: Int)
 
   private val RedirectStatuses = Seq(301, 302, 303, 307, 308)
+
+  private val JobDescription = "spark.job.description"
+
+  /** Rows per partition of the frame it observes (the lineage table): the
+    * partition is the task's own, so observed just before a checkpoint it
+    * is the checkpointed partition.
+    */
+  private object PartitionRows
+      extends Aggregator[Int, Map[Int, Long], Map[Int, Long]] {
+    def zero: Map[Int, Long] = Map.empty
+    def reduce(b: Map[Int, Long], a: Int): Map[Int, Long] = {
+      val p = TaskContext.getPartitionId()
+      b.updated(p, b.getOrElse(p, 0L) + 1)
+    }
+    def merge(a: Map[Int, Long], b: Map[Int, Long]): Map[Int, Long] =
+      b.foldLeft(a) { case (m, (p, n)) => m.updated(p, m.getOrElse(p, 0L) + n) }
+    def finish(b: Map[Int, Long]): Map[Int, Long] = b
+    def bufferEncoder: Encoder[Map[Int, Long]] = ExpressionEncoder()
+    def outputEncoder: Encoder[Map[Int, Long]] = ExpressionEncoder()
+  }
+  private val partitionRows = udaf(PartitionRows)
 
   // TopK salt buckets of the politeness grant and the global wave cap;
   // url-hash buckets of the scale-mode rank (see bucketRank)
@@ -147,14 +163,26 @@ object CrawlJob {
       requestMiddlewares: Seq[DataFrame => DataFrame] = Nil,
       responseMiddlewares: Seq[DataFrame => DataFrame] = Nil,
       cacheDf: Option[DataFrame] = None): CrawlResult = {
-    val st = new WaveState(spark, spec, pages, cacheDf)
-
+    val sc = spark.sparkContext
+    val callerDescription = sc.getLocalProperty(JobDescription)
+    // the crawl's own side thread: the next frontier's assembly runs on it,
+    // overlapped with the audit fold
+    val sidePool = java.util.concurrent.Executors.newSingleThreadExecutor(r => {
+      val t = new Thread(r, "crawl-side-job")
+      t.setDaemon(true)
+      t
+    })
+    val st = new WaveState(spark, spec, pages, cacheDf,
+      ExecutionContext.fromExecutor(sidePool))
+    var metricsServer = Option.empty[graft.metrics.MetricsServer.Handle]
+    try {
     // ---- resume or cold start -------------------------------------------
+    st.stage("start")
     stateDir.flatMap(StateStore.latestCommitted) match {
       case Some(w) => st.resume(stateDir.get, w)
       case None => st.coldStart(seedsDf)
     }
-    val metricsServer = graft.metrics.MetricsServer.start(
+    metricsServer = graft.metrics.MetricsServer.start(
       spec.metricsType, () => st.liveMetrics(), spec.metricsPort)
     // Per-host wave cap: the spec's hostTokensPerWave, optionally
     // tightened by robots Crawl-delay and by the AIMD controller.
@@ -171,17 +199,13 @@ object CrawlJob {
     val waveCap = math.min(spec.concurrentRequests.toLong, rpsCap)
 
     var done = false
-    st.frontier = st.frontier.localCheckpoint(true)
-    try {
+    st.adoptFrontier(st.checkpointFrontier(st.frontier))
     while (!done && st.wave < spec.maxWaves) {
-      // ONE count action doubles as the emptiness probe AND the
-      // frontier_size metric (frontier is checkpointed, so the count scans
-      // cached partitions)
-      val frontierN = st.frontier.count()
-      if (frontierN == 0) { done = true }
+      // the frontier checkpoint observed its own size: no probe job
+      if (st.frontierN == 0) { done = true }
       else {
         st.auditInc.clear()
-        // ---- gate -------------------------------------------------------
+        st.stage("gate")
         val (hostGranted, hostDeferred) =
           if (!hostCapped) (st.frontier, st.emptyFrontier)
           else {
@@ -194,9 +218,12 @@ object CrawlJob {
           if (waveCap >= Int.MaxValue) (hostGranted, hostDeferred)
           else st.capWave(hostGranted, hostDeferred, waveCap)
 
-        // ---- robots -----------------------------------------------------
+        st.stage("robots")
+        // granted ⊆ frontier: a frontier whose hosts all have rules grants
+        // no new host, so the robots fetch is skipped exactly
         val newRules =
-          if (spec.robotsTxtDisabled) None else st.fetchRobots(granted)
+          if (spec.robotsTxtDisabled || st.frontierUnruled == 0) None
+          else st.fetchRobots(granted)
         val sitemapCand =
           if (spec.sitemapDiscovery) newRules.map(st.sitemapLinks) else None
         granted.persist(StorageLevel.MEMORY_AND_DISK)
@@ -204,7 +231,7 @@ object CrawlJob {
         val allowed =
           if (spec.robotsTxtDisabled) granted else st.robotsGate(granted)
 
-        // ---- request chain ----------------------------------------------
+        st.stage("request")
         val withCookies =
           if (st.cookiesActive && st.cookieJarNonEmpty) st.applyCookies(allowed)
           else allowed
@@ -215,40 +242,39 @@ object CrawlJob {
           if (st.cacheActive) st.cacheDecision(requested)
           else (st.noCache(requested), None)
 
-        // ---- fetch ------------------------------------------------------
-        val (pending, lineageF) = st.dispatch(toFetch, frontierN)
-        val fetchedNew = st.fetch(pending)
+        st.stage("fetch")
+        val (pending, pendingN) = st.dispatch(toFetch)
+        val (fetchedNew, setCookieN) = st.fetch(pending, pendingN)
         val fetchedRev =
           if (st.cacheActive) st.revalidate(fetchedNew)
           else fetchedNew.withColumn("revalidated_304", lit(false))
         val fetched = st.settle(
           cacheServed.fold(fetchedRev)(st.serveCached(fetchedRev, _)))
 
-        // ---- respond ----------------------------------------------------
+        st.stage("respond")
         if (spec.adaptiveRate) st.updateAimd(fetched)
-        if (st.cookiesActive) st.absorbCookies(fetched)
+        if (st.cookiesActive && setCookieN > 0) st.absorbCookies(fetched)
         val (delivered, requeue) = st.respond(fetched)
         val rendered = st.actionProg.fold(delivered)(st.runActions(delivered, _))
-        val responses =
-          responseMiddlewares.foldLeft(rendered)((df, mw) => mw(df))
-        st.logCrawled(responses)
+        val responses = st.logCrawled(
+          responseMiddlewares.foldLeft(rendered)((df, mw) => mw(df)))
         spec.warcArchiveDir.foreach(st.archive(responses, _))
 
-        // ---- extract ----------------------------------------------------
+        st.stage("extract")
         val parsed = st.extract(responses, parsers)
         val cand = st.links(parsed, sitemapCand)
 
-        // ---- dedup ------------------------------------------------------
+        st.stage("dedup")
         val candNew = st.dedup(cand)
         val candGranted =
           spec.trapTemplateBudget.fold(candNew)(st.trapGate(candNew, _))
 
-        // ---- assemble ---------------------------------------------------
+        st.stage("assemble")
         val (frontierF, seenInc) =
           st.assemble(candGranted, candNew, deferred, requeue)
 
-        // ---- account ----------------------------------------------------
-        st.account(frontierN, frontierF, lineageF)
+        st.stage("account")
+        st.account(frontierF)
         granted.unpersist()
         deferred.unpersist()
         stateDir.foreach(st.commit(_, seenInc))
@@ -258,6 +284,7 @@ object CrawlJob {
 
     // single final materialization of the accumulated outputs, then release
     // the per-wave caches they were computed from
+    st.stage("fold")
     st.records = st.records.localCheckpoint(true)
     locally {
       val a = st.audit.localCheckpoint(true) // action outside the lock
@@ -274,6 +301,8 @@ object CrawlJob {
     } finally {
       st.sketch.close()
       metricsServer.foreach(_.stop())
+      sidePool.shutdown()
+      sc.setJobDescription(callerDescription)
     }
   }
 
@@ -282,7 +311,7 @@ object CrawlJob {
     * field would drag this (unserializable) holder into every task.
     */
   private final class WaveState(spark: SparkSession, spec: CrawlSpec,
-      pages: DataFrame, cacheDf: Option[DataFrame]) {
+      pages: DataFrame, cacheDf: Option[DataFrame], sideEc: ExecutionContext) {
     import spark.implicits._
 
     private val hostOfU = udf((u: String) => UrlOps.hostOf(u))
@@ -345,11 +374,17 @@ object CrawlJob {
     // ---- crawl state ----------------------------------------------------
     var wave = 0
     var frontier: DataFrame = emptyFrontier
+    // observed by the frontier's checkpoint: its rows, and its rows whose
+    // host has no robots rules yet
+    var frontierN = 0L
+    var frontierUnruled = 0L
     var seen: DataFrame = emptyFrontier.select(col("url"))
     var records: DataFrame = emptyRecords
     var audit: DataFrame = emptyAudit
     var order: DataFrame = emptyOrder
     private var robotRules = emptyRules // (r_host, rules) for hosts seen so far
+    // robotRules' hosts, driver-side (broadcast to the frontier checkpoint)
+    private var ruledHosts = Set.empty[String]
     private var rulesDeltas = 0 // non-empty robots deltas since last compaction
     private var cookieJar = emptyCookies // accumulated Set-Cookies
     var cookieJarNonEmpty = false
@@ -379,6 +414,34 @@ object CrawlJob {
     private var orderInc: DataFrame = emptyOrder
     private var recordsInc: DataFrame = emptyRecords
     private var auditIncDf: DataFrame = emptyAudit
+    // LogDisabled: the wave's delivered-response count
+    private var crawledObs: Option[Observation] = None
+
+    /** Label the jobs this thread starts from here on. */
+    def stage(name: String): Unit =
+      spark.sparkContext.setJobDescription(s"wave=$wave stage=$name")
+
+    /** Checkpoint a frontier. Its row count and its count of rows whose
+      * host has no robots rules yet are observed in the checkpoint's own
+      * job. Returns (frontier, rows, unruled rows).
+      */
+    def checkpointFrontier(df: DataFrame): (DataFrame, Long, Long) = {
+      val obs = Observation()
+      val ruled = spark.sparkContext.broadcast(ruledHosts)
+      try {
+        val isRuled = udf((h: String) => h != null && ruled.value.contains(h))
+        val cp = df.observe(obs, count(lit(1)).as("rows"),
+          count_if(!isRuled(col("host"))).as("unruled")).localCheckpoint(true)
+        val m = obs.get
+        (cp, m("rows").asInstanceOf[Long], m("unruled").asInstanceOf[Long])
+      } finally ruled.destroy()
+    }
+
+    def adoptFrontier(f: (DataFrame, Long, Long)): Unit = {
+      frontier = f._1
+      frontierN = f._2
+      frontierUnruled = f._3
+    }
 
     // deterministic wave clock for cookie expiry and WARC dates
     private def waveNowEpoch: Long =
@@ -441,6 +504,9 @@ object CrawlJob {
         cookieJarNonEmpty = !cookieJar.isEmpty
         if (cookieJarNonEmpty) refreshJarFlags()
       }
+      if (!spec.robotsTxtDisabled)
+        ruledHosts = robotRules.select(col("r_host"))
+          .filter(col("r_host").isNotNull).as[String].collect().toSet
       wave = w + 1
     }
 
@@ -585,9 +651,15 @@ object CrawlJob {
         .withColumn("robots_url",
           concat(when(col("scheme") === "", "http").otherwise(col("scheme")),
             lit("://"), col("host"), lit("/robots.txt")))
-      // the tiny new-host set first: settled waves skip the corpus scan
-      val newHostsM = newHosts.localCheckpoint(true)
-      if (newHostsM.isEmpty) return None
+      // the tiny new-host set first, its size and hosts observed by its
+      // checkpoint: a wave with no new host skips the corpus scan
+      val obs = Observation()
+      val newHostsM = newHosts
+        .observe(obs, count(lit(1)).as("rows"),
+          collect_list(col("host")).as("hosts"))
+        .localCheckpoint(true)
+      val newHostsSeen = obs.get
+      if (newHostsSeen("rows").asInstanceOf[Long] == 0L) return None
       // newHosts is the BROADCAST side of an inner join, so the corpus is
       // never shuffled; hosts with no robots page come back as the left
       // join's nulls below (allow-all, like a 404)
@@ -633,6 +705,7 @@ object CrawlJob {
         wave = lit(wave), url = col("robots_url"))
       robotRules = robotRules.union(newRulesFull
         .select(col("host").as("r_host"), col("rules"), col("crawl_delay")))
+      ruledHosts ++= newHostsSeen("hosts").asInstanceOf[collection.Seq[String]]
       rulesDeltas += 1
       if (rulesDeltas % 8 == 0)
         robotRules = robotRules.localCheckpoint(true)
@@ -804,44 +877,56 @@ object CrawlJob {
 
     // ---- fetch -----------------------------------------------------------
     /** Materialize the wave's requests; record the crawl order, the
-      * frontier_size metric and (concurrently) the per-partition lineage.
+      * frontier_size metric and the per-partition lineage. The row count
+      * and the lineage are observed by the checkpoint's own job. Returns
+      * (requests, their count).
       */
-    def dispatch(toFetch: DataFrame,
-        frontierN: Long): (DataFrame, Future[Array[Row]]) = {
+    def dispatch(toFetch: DataFrame): (DataFrame, Long) = {
+      val obs = Observation()
       val pending = toFetch
         .withColumn("cur_url", col("url")).withColumn("hops", lit(0))
+        .observe(obs, count(lit(1)).as("rows"),
+          partitionRows(lit(1)).as("parts"))
         .localCheckpoint(true)
+      val m = obs.get
       orderInc = pending.select(col("wave"), col("rank"), col("url"))
       order = order.union(orderInc)
       metricsBuf.synchronized {
         metricsBuf += ((wave, "frontier_size", frontierN))
       }
-      // lineage runs CONCURRENTLY with the fetch loop, awaited in account
-      val lineageF = Future {
-        pending.groupBy(spark_partition_id().as("pid"))
-          .agg(count(lit(1)).as("n")).collect()
-      }(sideJobEc)
-      (pending, lineageF)
+      lineageBuf ++= m("parts").asInstanceOf[collection.Map[Int, Long]]
+        .toSeq.sorted.map { case (p, n) => (wave, p, n) }
+      (pending, m("rows").asInstanceOf[Long])
     }
 
-    /** Fetch join with transparent redirect following. */
-    def fetch(dispatched: DataFrame): DataFrame = {
+    /** Fetch join with transparent redirect following. Returns (fetched
+      * rows, those carrying a Set-Cookie).
+      */
+    def fetch(dispatched: DataFrame, dispatchedN: Long): (DataFrame, Long) = {
       var pending = dispatched
+      var pendingN = dispatchedN
+      var setCookieN = 0L
       var fetched = withFetchCols(pending.limit(0))
         .withColumn("redirect_exceeded", lit(false))
       var hop = 0
-      while (hop <= spec.maxRedirect && !pending.isEmpty) {
+      while (hop <= spec.maxRedirect && pendingN > 0) {
         // Materialize the join ONCE per hop; finals and the redirect
-        // continuation are filters over it. persist+count, NOT
+        // continuation are filters over it. persist + an aggregate, NOT
         // localCheckpoint: a LogicalRDD child under the `fetched` union
-        // trips Catalyst's Union.rewriteConstraints (key-not-found).
+        // trips Catalyst's Union.rewriteConstraints (key-not-found). The
+        // aggregate that fills the persist also counts the next hop's
+        // rows and this hop's final rows with a Set-Cookie.
         val j = pending.join(corpus, col("cur_url") === col("p_url"), "left")
           .drop("p_url").persist(StorageLevel.MEMORY_AND_DISK)
-        j.count()
         persisted += j
         val isRedir = col("p_status").isin(RedirectStatuses.map(Integer.valueOf): _*) &&
           col("p_loc").isNotNull
-        val finals = j.filter(!isRedir || lit(hop == spec.maxRedirect))
+        val isFinal = !isRedir || lit(hop == spec.maxRedirect)
+        val counts = j.agg(count_if(isRedir),
+          count_if(isFinal && col("p_setck").isNotNull)).head()
+        pendingN = if (hop == spec.maxRedirect) 0L else counts.getLong(0)
+        setCookieN += counts.getLong(1)
+        val finals = j.filter(isFinal)
           .withColumn("redirect_exceeded", isRedir)
           .drop("p_loc")
         fetched = fetched.unionByName(finals)
@@ -868,7 +953,7 @@ object CrawlJob {
           }
         hop += 1
       }
-      fetched
+      (fetched, setCookieN)
     }
 
     /** Validator/304 merge (cache/cache.go:210-239): a live page still
@@ -954,11 +1039,10 @@ object CrawlJob {
 
     /** Accumulate Set-Cookie responses (RFC 6265, client/client.go:
       * 250-272): keyed by (domain, name, path), the latest wave replaces
-      * (ties: max value); Max-Age ≤ 0 / past Expires evicts. A wave with
-      * no Set-Cookie costs one early-exit filter scan.
+      * (ties: max value); Max-Age ≤ 0 / past Expires evicts. Called only
+      * for a wave whose fetch counted a Set-Cookie.
       */
     def absorbCookies(fetched: DataFrame): Unit = {
-      if (fetched.filter(col("p_setck").isNotNull).isEmpty) return
       val now = waveNowEpoch
       val parseCkU = udf((setCookie: String, host: String, path: String) =>
         Cookies.parse(setCookie, host, path, now))
@@ -1048,9 +1132,11 @@ object CrawlJob {
 
     /** The `crawled` audit rows, stamped with the url-hash proxy
       * (client/proxy.go:19-48, the q34 face). LogDisabled kills the log
-      * lines, not the counters: the crawled count goes to the metrics.
+      * lines, not the counters: the crawled count goes to the metrics,
+      * observed by the first job that runs the responses (the parse
+      * persist's). Returns the responses.
       */
-    def logCrawled(responses: DataFrame): Unit =
+    def logCrawled(responses: DataFrame): DataFrame =
       if (!spec.logDisabled) {
         val crawlDetail =
           if (spec.proxyUrls.isEmpty) lit("")
@@ -1063,11 +1149,11 @@ object CrawlJob {
           }
         auditInc += auditRows(responses, "crawled",
           status = col("p_status"), detail = crawlDetail)
+        responses
       } else {
-        val crawledN = responses.count() // Spark action OUTSIDE the lock
-        metricsBuf.synchronized {
-          metricsBuf += ((wave, "crawled", crawledN))
-        }
+        val obs = Observation()
+        crawledObs = Some(obs)
+        responses.observe(obs, count(lit(1)).as("rows"))
       }
 
     // Rendered fetch mode (client/client.go:171-247): deliver the
@@ -1269,7 +1355,7 @@ object CrawlJob {
       */
     def assemble(candGranted: DataFrame, candNew: DataFrame,
         deferred: DataFrame,
-        requeue: DataFrame): (Future[DataFrame], DataFrame) = {
+        requeue: DataFrame): (Future[(DataFrame, Long, Long)], DataFrame) = {
       val ranked0 =
         if (spec.syncOrder) {
           val rw = Window.orderBy(col("parent_rank").asc, col("link_pos").asc)
@@ -1300,25 +1386,25 @@ object CrawlJob {
           .withColumn("ord_a", col("rank")).withColumn("ord_b", lit(0L)))
         .unionByName(nextFrontier.withColumn("grp", lit(2)))
       // runs CONCURRENTLY with the audit fold (both read cached frames)
+      val description = spark.sparkContext.getLocalProperty(JobDescription)
       val frontierF = Future {
-        {
+        spark.sparkContext.setJobDescription(description)
+        checkpointFrontier({
           if (spec.syncOrder) {
             val fw = Window.orderBy(col("grp").asc, col("rank").asc)
             assembled.withColumn("rank", row_number().over(fw).cast("long"))
           } else assembled.withColumn("rank",
             bucketRank(col("grp").asc, col("ord_a").asc, col("ord_b").asc))
-        }.drop("grp", "ord_a", "ord_b")
-          .localCheckpoint(true)
-      }(sideJobEc)
+        }.drop("grp", "ord_a", "ord_b"))
+      }(sideEc)
       (frontierF, seenInc)
     }
 
     // ---- account ---------------------------------------------------------
-    /** Fold the wave's audit increment, then take the next frontier and the
-      * lineage rows from their side jobs.
+    /** Fold the wave's audit increment and record the observed crawled
+      * count, then take the next frontier from its side job.
       */
-    def account(frontierN: Long, frontierF: Future[DataFrame],
-        lineageF: Future[Array[Row]]): Unit = {
+    def account(frontierF: Future[(DataFrame, Long, Long)]): Unit = {
       // Column names normalized for the delta parquet; materialized NOW,
       // while granted/fetched are still cached.
       val raw = auditInc.reduce(_ union _).toDF(emptyAudit.columns: _*)
@@ -1326,9 +1412,12 @@ object CrawlJob {
       auditIncDf = (if (frontierN < 100000L) raw.coalesce(4) else raw)
         .localCheckpoint(true)
       metricsBuf.synchronized { audit = audit.union(auditIncDf) }
-      frontier = Await.result(frontierF, Duration.Inf)
-      lineageBuf ++= Await.result(lineageF, Duration.Inf)
-        .map(r => (wave, r.getInt(0), r.getLong(1)))
+      crawledObs.foreach { obs =>
+        val crawledN = obs.get("rows").asInstanceOf[Long]
+        metricsBuf.synchronized { metricsBuf += ((wave, "crawled", crawledN)) }
+      }
+      crawledObs = None
+      adoptFrontier(Await.result(frontierF, Duration.Inf))
     }
 
     /** Snapshot tables are rewritten whole; accumulators commit only this

@@ -302,40 +302,96 @@ class CrawlJobSpec extends AnyFunSuite {
   }
 
   test("job-count guard: the flagship quotes crawl starts no more Spark jobs") {
-    // Ceiling = the count at the commit before the wave loop was split into
-    // stages: this crawl, with the fixture corpus already cached, started
-    // 307 jobs there (counted as below, local[4], AQE on; the same count in
-    // two separate JVMs). A change that cuts jobs lowers it; nothing may
-    // raise it.
-    val FlagshipJobCeiling = 307
+    // Ceiling = the count measured as below (local[4], AQE on, the fixture
+    // corpus already cached) once the wave loop's count and emptiness
+    // probes were folded into jobs it already runs: 190 jobs, the same in
+    // two separate JVMs (307 before). A change that cuts jobs lowers it;
+    // nothing may raise it.
+    val FlagshipJobCeiling = 190
     val spec = CrawlSpec(startUrls = Seq(SiteFixtures.QuotesBase),
       parserId = "quotes", syncOrder = true, maxWaves = 20)
     pagesDf.count()
     val sc = spark.sparkContext
-    val Marker = "job-count-guard-marker"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    org.apache.spark.SparkTestBus.drain(sc)
+    // each job's description; each Dataset action's name
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val actions = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(e.properties)
-            .exists(_.getProperty("spark.job.description") == Marker))
-          markerSeen.countDown()
-        else if (markerSeen.getCount > 0) jobs.incrementAndGet()
+        jobs.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    val actionListener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(action: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        actions.add(action)
+      def onFailure(action: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
     }
     sc.addSparkListener(listener)
+    spark.listenerManager.register(actionListener)
     val res = try {
       val r = CrawlJob.run(spark, spec, pagesDf)
-      // the bus delivers in order: once the marker job's start arrives,
-      // every job the crawl started has been counted
-      sc.setJobDescription(Marker)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      org.apache.spark.SparkTestBus.drain(sc)
       r
-    } finally sc.removeSparkListener(listener)
+    } finally {
+      sc.removeSparkListener(listener)
+      spark.listenerManager.unregister(actionListener)
+    }
     assert(res.waves == 10)
-    assert(jobs.get <= FlagshipJobCeiling,
-      s"the flagship crawl started ${jobs.get} Spark jobs, " +
+    val all = jobs.toArray(Array.empty[String]).toSeq
+    assert(all.size <= FlagshipJobCeiling,
+      s"the flagship crawl started ${all.size} Spark jobs, " +
         s"ceiling $FlagshipJobCeiling")
+    // every job is labelled with its wave and stage, side thread included
+    val Label = """wave=(\d+) stage=(\w+)""".r
+    val labelled = all.map {
+      case Label(w, stage) => (w.toInt, stage)
+      case d => fail(s"a crawl job has description '$d'")
+    }
+    // once the seed host has its rules, a wave starts no robots job
+    val settled = labelled.filter { case (w, _) => w >= 1 && w <= 9 }
+    assert(settled.nonEmpty)
+    assert(!settled.exists(_._2 == "robots"), settled.filter(_._2 == "robots"))
+    // and no wave probes a count or an emptiness with an action of its own
+    val names = actions.toArray(Array.empty[String]).toSeq
+    assert(names.contains("localCheckpoint"), names)
+    assert(!names.exists(a => a == "count" || a == "isEmpty"), names)
+  }
+
+  test("robots rules arrive in the wave a deferred host is first granted") {
+    // a, b and c enter the frontier together in wave 1; the caps defer b
+    // and c (all their urls) past it. Each host's robots_request (and, with
+    // a robots.txt, robots_response) row lands in the wave its first url
+    // is granted, and the blocked /secret urls are audited in the wave
+    // they are granted, also in waves whose hosts all have rules.
+    val pages = SiteFixtures.pagesDf(spark, SiteFixtures.deferredRobotsPages)
+    def robotsRows(spec: CrawlSpec): Seq[(Int, String, String)] =
+      CrawlJob.run(spark, spec, pages).audit
+        .filter(col("kind").startsWith("robots_"))
+        .select("wave", "kind", "url").collect()
+        .map(r => (r.getInt(0), r.getString(1), r.getString(2))).toSeq.sorted
+    val base = CrawlSpec(startUrls = Seq("http://hub.example.com/"),
+      parserId = "all_links", syncOrder = true, maxWaves = 10)
+    def req(w: Int, h: String) =
+      (w, "robots_request", s"http://$h.example.com/robots.txt")
+    def resp(w: Int, h: String) =
+      (w, "robots_response", s"http://$h.example.com/robots.txt")
+    def forbidden(w: Int, h: String) =
+      (w, "robots_forbidden", s"http://$h.example.com/secret")
+    // global cap 2: wave 1 grants a/1, a/2; wave 2 a/3, a/secret; wave 3
+    // b/1, c/1; wave 4 c/secret
+    assert(robotsRows(base.copy(concurrentRequests = 2)) == Seq(
+      req(0, "hub"), req(1, "a"), resp(1, "a"), forbidden(2, "a"),
+      req(3, "b"), req(3, "c"), resp(3, "c"), forbidden(4, "c")).sorted)
+    // one grant per host, then global cap 2: wave 1 grants a/1, b/1 (c/1
+    // loses the cap); wave 2 a/2, c/1; wave 3 a/3, c/secret; wave 4
+    // a/secret
+    assert(robotsRows(base.copy(hostTokensPerWave = 1,
+        concurrentRequests = 2)) == Seq(
+      req(0, "hub"), req(1, "a"), resp(1, "a"), req(1, "b"),
+      req(2, "c"), resp(2, "c"), forbidden(3, "c"), forbidden(4, "a")).sorted)
   }
 }

@@ -49,6 +49,31 @@ class ResumeSpec extends AnyFunSuite {
     assert(resumed.crawlOrder.filter(col("wave") < 3).count() == partialOrder)
   }
 
+  test("kill just before a deferred host is first granted, resume: " +
+      "identical to an uninterrupted run") {
+    // Wave 3 is the first to grant b and c (the global cap deferred them
+    // since wave 1), so the resumed crawl's first wave must fetch their
+    // robots rules, knowing only the committed rules of hub and a.
+    val pages = SiteFixtures.pagesDf(spark, SiteFixtures.deferredRobotsPages)
+    val full = CrawlSpec(startUrls = Seq("http://hub.example.com/"),
+      parserId = "all_links", syncOrder = true, concurrentRequests = 2,
+      maxWaves = 10)
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).toSeq.sorted
+    val direct = CrawlJob.run(spark, full, pages)
+    val dir = Files.createTempDirectory("graft-state-robots").toString
+    CrawlJob.run(spark, full.copy(maxWaves = 3), pages, stateDir = Some(dir))
+    assert(StateStore.latestCommitted(dir).contains(2))
+    val resumed = CrawlJob.run(spark, full, pages, stateDir = Some(dir))
+    assert(direct.audit.filter(col("kind") === "robots_request" &&
+      col("wave") === 3).count() == 2)
+    assert(rows(resumed.records) == rows(direct.records))
+    assert(rows(resumed.audit) == rows(direct.audit))
+    assert(rows(resumed.crawlOrder) == rows(direct.crawlOrder))
+    assert(rows(resumed.seen) == rows(direct.seen))
+    assert(resumed.waves == direct.waves)
+  }
+
   test("delta commits: wave N writes ONLY wave-N increments for accumulators") {
     val dir = Files.createTempDirectory("graft-state-delta").toString
     val spec = CrawlSpec(startUrls = Seq(SiteFixtures.QuotesBase),
