@@ -2,6 +2,8 @@ package graft
 
 import java.util.concurrent.atomic.AtomicBoolean
 import scala.util.control.NonFatal
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -779,8 +781,19 @@ object Bench {
         }
         SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
           // each query needs budget headroom; record skips explicitly
-          if (remaining > 25) recordQuery(name)(fn(spark, sfDir).count())
-          else putRaw("queries_truncated", "true")
+          if (remaining > 25) {
+            val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+            val compileNs = CodeGenerator.compileTime
+            recordQuery(name)(fn(spark, sfDir).count())
+            // the flagship crawl's Janino compiles: a compile regression
+            // shows here before it shows in a wall time
+            if (name == "q17_crawl_quotes_e2e") {
+              put("q17_codegen_compiles",
+                CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles, "%.0f")
+              put("q17_codegen_compile_s",
+                (CodeGenerator.compileTime - compileNs) / 1e9)
+            }
+          } else putRaw("queries_truncated", "true")
         }
       } finally { spark.stop(); cleanupLocalDir() }
     }

@@ -3,12 +3,11 @@ package graft.pipeline
 import java.time.Instant
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
-import org.apache.spark.TaskContext
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Observation, Row, SparkSession}
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, RddRelation, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.{Aggregator, Window}
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.expressions.Window
 import graft.model.CrawlSpec
 import graft.rfc2616.Freshness
 import graft.state.StateStore
@@ -46,14 +45,17 @@ import graft.url.UrlOps
   *    (syncOrder=false) no per-wave window ever ranks an unbounded input
   *    on a single partition;
   *  - robots rules and the cookie jar are one row per host → broadcast;
-  *  - per-wave `localCheckpoint` truncates lineage so plan analysis stays
-  *    O(1) in wave count (on a cluster: reliable checkpoint / state table);
-  *  - the loop's bookkeeping counts are observed (`Dataset.observe`) inside
-  *    jobs the wave already runs, never asked for by a job of their own:
-  *    the frontier's size and its rows of hosts without robots rules ride
-  *    the frontier checkpoint, the dispatched rows and their per-partition
-  *    lineage ride the dispatch checkpoint, each redirect hop's follow-up
-  *    rows and Set-Cookie rows ride the hop's materialising aggregate.
+  *  - per-wave checkpoints truncate lineage so plan analysis stays O(1)
+  *    in wave count (on a cluster: reliable checkpoint / state table);
+  *  - the loop's bookkeeping counts are counted by the jobs that
+  *    materialize its checkpoints ([[WaveState.materialize]]), never asked
+  *    for by a job of their own: the frontier's size, its rows of hosts
+  *    without robots rules and its waves ride the frontier checkpoint, the
+  *    dispatched rows and their per-partition lineage the dispatch
+  *    checkpoint, each redirect hop's follow-up rows and Set-Cookie rows
+  *    the hop's;
+  *  - every settled wave plans the same code (see [[WaveState]]), so its
+  *    generated classes stay in Spark's codegen cache from wave to wave.
   *
   * Every job carries the Spark job description `wave=N stage=S`.
   */
@@ -71,25 +73,6 @@ object CrawlJob {
   private val RedirectStatuses = Seq(301, 302, 303, 307, 308)
 
   private val JobDescription = "spark.job.description"
-
-  /** Rows per partition of the frame it observes (the lineage table): the
-    * partition is the task's own, so observed just before a checkpoint it
-    * is the checkpointed partition.
-    */
-  private object PartitionRows
-      extends Aggregator[Int, Map[Int, Long], Map[Int, Long]] {
-    def zero: Map[Int, Long] = Map.empty
-    def reduce(b: Map[Int, Long], a: Int): Map[Int, Long] = {
-      val p = TaskContext.getPartitionId()
-      b.updated(p, b.getOrElse(p, 0L) + 1)
-    }
-    def merge(a: Map[Int, Long], b: Map[Int, Long]): Map[Int, Long] =
-      b.foldLeft(a) { case (m, (p, n)) => m.updated(p, m.getOrElse(p, 0L) + n) }
-    def finish(b: Map[Int, Long]): Map[Int, Long] = b
-    def bufferEncoder: Encoder[Map[Int, Long]] = ExpressionEncoder()
-    def outputEncoder: Encoder[Map[Int, Long]] = ExpressionEncoder()
-  }
-  private val partitionRows = udaf(PartitionRows)
 
   // TopK salt buckets of the politeness grant and the global wave cap;
   // url-hash buckets of the scale-mode rank (see bucketRank)
@@ -149,9 +132,25 @@ object CrawlJob {
   /** Audit rows (wave, kind, method, status, host, url, detail). */
   private def auditRows(df: DataFrame, kind: String,
       status: Column = lit(0), detail: Column = lit(""),
-      method: Column = col("method"), wave: Column = col("wave"),
-      url: Column = col("url")): DataFrame =
-    df.select(wave, lit(kind), method, status, col("host"), url, detail)
+      method: Column = col("method"), url: Column = col("url")): DataFrame =
+    df.select(col("wave"), lit(kind), method, status, col("host"), url,
+      detail)
+
+  /** Audit rows of several kinds from ONE scan of `df`: a row yields one
+    * audit row per (kind, condition, status, detail) whose condition holds,
+    * in the order given. One projection plus an explode, where a union of
+    * filters would compile and scan once per kind.
+    */
+  private def auditKinds(df: DataFrame,
+      kinds: Seq[(String, Column, Column, Column)]): DataFrame =
+    df.select(explode(array(kinds.map { case (kind, cond, status, detail) =>
+        when(cond, struct(col("wave").as("wave"), lit(kind).as("kind"),
+          col("method").as("method"), status.as("status"),
+          col("host").as("host"), col("url").as("url"),
+          detail.as("detail")))
+      }: _*)).as("a"))
+      .filter(col("a").isNotNull)
+      .select(col("a.*"))
 
   def run(
       spark: SparkSession,
@@ -199,9 +198,8 @@ object CrawlJob {
     val waveCap = math.min(spec.concurrentRequests.toLong, rpsCap)
 
     var done = false
-    st.adoptFrontier(st.checkpointFrontier(st.frontier))
     while (!done && st.wave < spec.maxWaves) {
-      // the frontier checkpoint observed its own size: no probe job
+      // the frontier checkpoint counted its own rows: no probe job
       if (st.frontierN == 0) { done = true }
       else {
         st.auditInc.clear()
@@ -214,9 +212,18 @@ object CrawlJob {
               if (honorDelay) st.crawlDelayCap(req) else st.tokenCap(req)
             st.grant(if (spec.adaptiveRate) st.aimdCap(capped) else capped)
           }
-        val (granted, deferred) =
+        val (granted0, deferred0) =
           if (waveCap >= Int.MaxValue) (hostGranted, hostDeferred)
           else st.capWave(hostGranted, hostDeferred, waveCap)
+        // a top-k's outputs are read by several stages: kept for the wave.
+        // An uncapped wave's are the checkpointed frontier and an empty
+        // frame already.
+        val ranked =
+          if (hostCapped || waveCap < Int.MaxValue)
+            Seq(st.keep(granted0), st.keep(deferred0))
+          else Nil
+        val Seq(granted, deferred) =
+          if (ranked.isEmpty) Seq(granted0, deferred0) else ranked.map(_._1)
 
         st.stage("robots")
         // granted ⊆ frontier: a frontier whose hosts all have rules grants
@@ -226,8 +233,6 @@ object CrawlJob {
           else st.fetchRobots(granted)
         val sitemapCand =
           if (spec.sitemapDiscovery) newRules.map(st.sitemapLinks) else None
-        granted.persist(StorageLevel.MEMORY_AND_DISK)
-        deferred.persist(StorageLevel.MEMORY_AND_DISK)
         val allowed =
           if (spec.robotsTxtDisabled) granted else st.robotsGate(granted)
 
@@ -248,8 +253,9 @@ object CrawlJob {
         val fetchedRev =
           if (st.cacheActive) st.revalidate(fetchedNew)
           else fetchedNew.withColumn("revalidated_304", lit(false))
-        val fetched = st.settle(
-          cacheServed.fold(fetchedRev)(st.serveCached(fetchedRev, _)))
+        // filters over the hops' kept joins: read by the parse, the audit
+        // and the requeue, never persisted again
+        val fetched = cacheServed.fold(fetchedRev)(st.serveCached(fetchedRev, _))
 
         st.stage("respond")
         if (spec.adaptiveRate) st.updateAimd(fetched)
@@ -275,15 +281,15 @@ object CrawlJob {
 
         st.stage("account")
         st.account(frontierF)
-        granted.unpersist()
-        deferred.unpersist()
+        ranked.foreach(_._2.unpersist())
         stateDir.foreach(st.commit(_, seenInc))
         st.wave += 1
       }
     }
 
-    // single final materialization of the accumulated outputs, then release
-    // the per-wave caches they were computed from
+    // single final materialization of the accumulated outputs; the kept
+    // relations they were computed from are released like checkpoints, by
+    // Spark's cleaner once unreferenced (`seen` still reads some of them)
     st.stage("fold")
     st.records = st.records.localCheckpoint(true)
     locally {
@@ -291,7 +297,6 @@ object CrawlJob {
       st.metricsBuf.synchronized { st.audit = a }
     }
     st.order = st.order.localCheckpoint(true)
-    st.persisted.foreach(_.unpersist())
 
     import spark.implicits._
     val metrics = st.liveMetrics()
@@ -309,6 +314,20 @@ object CrawlJob {
   /** The crawl's state across waves (the wave loop's variables) and its
     * stages. UDF bodies below capture only local vals: a closure over a
     * field would drag this (unserializable) holder into every task.
+    *
+    * Plans stay the same from wave to wave, so a settled wave generates
+    * the code of the wave before it and compiles nothing:
+    *  - no per-wave plan inlines a driver value that changes from wave to
+    *    wave (the wave number, the wave clock): such a value travels as
+    *    data, or inside a UDF's closure, which codegen references instead
+    *    of inlining;
+    *  - every frontier row of wave w has `wave == w` (seeds start at 0;
+    *    deferred, requeued and discovered rows all take their parent's
+    *    `wave` + 1), so rows derived from the frontier carry their wave in
+    *    that column; the frontier checkpoint checks it at no extra job;
+    *  - growing state (`seen`) is one relation of fixed plan shape, and
+    *    stages read kept relations ([[keep]]) rather than persists, whose
+    *    scans each compile their own columnar reader.
     */
   private final class WaveState(spark: SparkSession, spec: CrawlSpec,
       pages: DataFrame, cacheDf: Option[DataFrame], sideEc: ExecutionContext) {
@@ -378,7 +397,9 @@ object CrawlJob {
     // host has no robots rules yet
     var frontierN = 0L
     var frontierUnruled = 0L
-    var seen: DataFrame = emptyFrontier.select(col("url"))
+    // the seen table: one relation over the checkpointed increments
+    private val seenRel = new graft.state.SeenSet.Relation(spark)
+    def seen: DataFrame = seenRel.df
     var records: DataFrame = emptyRecords
     var audit: DataFrame = emptyAudit
     var order: DataFrame = emptyOrder
@@ -404,37 +425,68 @@ object CrawlJob {
     // per-wave counters + per-partition lineage of the granted set
     val metricsBuf = scala.collection.mutable.ArrayBuffer.empty[(Int, String, Long)]
     val lineageBuf = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Long)]
-    // Per-wave persists live until the end of the crawl: the accumulators
-    // union LAZY references into them, folded ONCE at loop exit.
-    val persisted = scala.collection.mutable.ArrayBuffer
-      .empty[org.apache.spark.sql.Dataset[_]]
 
     // ---- this wave's increments ------------------------------------------
     val auditInc = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     private var orderInc: DataFrame = emptyOrder
     private var recordsInc: DataFrame = emptyRecords
     private var auditIncDf: DataFrame = emptyAudit
-    // LogDisabled: the wave's delivered-response count
-    private var crawledObs: Option[Observation] = None
 
     /** Label the jobs this thread starts from here on. */
     def stage(name: String): Unit =
       spark.sparkContext.setJobDescription(s"wave=$wave stage=$name")
 
-    /** Checkpoint a frontier. Its row count and its count of rows whose
-      * host has no robots rules yet are observed in the checkpoint's own
-      * job. Returns (frontier, rows, unruled rows).
+    /** Checkpoint the frontier of wave `w`. The job that materializes it
+      * counts its rows, its rows whose host has no robots rules yet and its
+      * rows whose `wave` is not `w`, which fail the crawl. Returns
+      * (frontier, rows, unruled rows).
       */
-    def checkpointFrontier(df: DataFrame): (DataFrame, Long, Long) = {
-      val obs = Observation()
+    def checkpointFrontier(df: DataFrame, w: Int): (DataFrame, Long, Long) = {
       val ruled = spark.sparkContext.broadcast(ruledHosts)
+      val hostAt = df.schema.fieldIndex("host")
+      val waveAt = df.schema.fieldIndex("wave")
       try {
-        val isRuled = udf((h: String) => h != null && ruled.value.contains(h))
-        val cp = df.observe(obs, count(lit(1)).as("rows"),
-          count_if(!isRuled(col("host"))).as("unruled")).localCheckpoint(true)
-        val m = obs.get
-        (cp, m("rows").asInstanceOf[Long], m("unruled").asInstanceOf[Long])
+        // per partition: rows, unruled rows, rows of another wave
+        val (cp, parts) = materialize(df) { rows =>
+          var n, unruled, foreign = 0L
+          rows.foreach { r =>
+            n += 1
+            if (r.isNullAt(hostAt) ||
+                !ruled.value.contains(r.getUTF8String(hostAt).toString))
+              unruled += 1
+            if (r.getInt(waveAt) != w) foreign += 1
+          }
+          (n, unruled, foreign)
+        }
+        if (parts.map(_._3).sum > 0)
+          throw new IllegalStateException(s"the frontier of wave $w holds " +
+            s"${parts.map(_._3).sum} rows of another wave")
+        (cp, parts.map(_._1).sum, parts.map(_._2).sum)
       } finally ruled.destroy()
+    }
+
+    /** `df`'s rows as ONE leaf relation over an RDD-level local checkpoint,
+      * computed by the first job that reads them. Unlike a persist, a scan
+      * of it compiles no columnar reader and no batch filter, and AQE starts
+      * no job to fill it; unlike `Dataset.localCheckpoint`, it carries no
+      * constraints of `df`'s plan. Planning runs `df`'s exchanges (AQE).
+      */
+    def keep(df: DataFrame): (DataFrame, RDD[InternalRow]) = {
+      val qe = df.queryExecution
+      val rows = qe.toRdd.map(_.copy()).localCheckpoint()
+      (RddRelation(spark, qe.analyzed.output.map(_.newInstance()), rows,
+        qe.optimizedPlan.stats.sizeInBytes), rows)
+    }
+
+    /** [[keep]], filled now by ONE job that also returns `f` of each
+      * partition's rows: a checkpoint that observes its own rows.
+      */
+    def materialize[A: scala.reflect.ClassTag](df: DataFrame)(
+        f: Iterator[InternalRow] => A): (DataFrame, Array[A]) = {
+      val (rel, rows) = keep(df)
+      // an empty plan may have no partition: no job to run
+      (rel, if (rows.partitions.isEmpty) Array.empty[A]
+        else spark.sparkContext.runJob(rows, f))
     }
 
     def adoptFrontier(f: (DataFrame, Long, Long)): Unit = {
@@ -484,7 +536,7 @@ object CrawlJob {
             "resuming would silently lose the seen set and all records — " +
             "re-run the crawl from scratch or migrate the checkpoint " +
             "(copy wave=N/<table> to delta/<table>/wave=N)")
-      seen = seenDeltas.getOrElse(emptyFrontier.select(col("url")))
+      seenDeltas.foreach(seenRel.add)
       records = StateStore.readDeltas(spark, dir, "records", w)
         .getOrElse(emptyRecords)
       audit = StateStore.readDeltas(spark, dir, "audit", w)
@@ -504,10 +556,15 @@ object CrawlJob {
         cookieJarNonEmpty = !cookieJar.isEmpty
         if (cookieJarNonEmpty) refreshJarFlags()
       }
+      if (StateStore.hasTable(dir, w, "host_caps"))
+        hostCaps = Some(StateStore.read(spark, dir, w, "host_caps"))
+      if (StateStore.hasTable(dir, w, "trap_counts"))
+        trapCounts = Some(StateStore.read(spark, dir, w, "trap_counts"))
       if (!spec.robotsTxtDisabled)
         ruledHosts = robotRules.select(col("r_host"))
           .filter(col("r_host").isNotNull).as[String].collect().toSet
       wave = w + 1
+      adoptFrontier(checkpointFrontier(frontier, wave))
     }
 
     /** Seeds pass AllowedDomains + dedup exactly like discovered urls (the
@@ -563,12 +620,14 @@ object CrawlJob {
         else seedsRaw.filter(col("host").isin(spec.allowedDomains: _*))
       // only GETs are deduped / enter the seen set
       // (middleware/duplicate_requests.go:17)
-      frontier = seedsAllowed.filter(col("method") === "GET")
-        .dropDuplicates("url")
-        .unionByName(seedsAllowed.filter(col("method") =!= "GET"))
-      seen = seedsAllowed.filter(col("method") === "GET")
-        .dropDuplicates("url").select(col("url"))
-      coldSeedSeen = Some(seen)
+      adoptFrontier(checkpointFrontier(
+        seedsAllowed.filter(col("method") === "GET")
+          .dropDuplicates("url")
+          .unionByName(seedsAllowed.filter(col("method") =!= "GET")), 0))
+      // the checkpointed frontier's GETs are the deduped seeds
+      val seeds = frontier.filter(col("method") === "GET").select(col("url"))
+      seenRel.add(seeds)
+      coldSeedSeen = Some(seeds)
     }
 
     // ---- gate ------------------------------------------------------------
@@ -646,20 +705,19 @@ object CrawlJob {
         .groupBy(col("host"))
         .agg(min_by(
           regexp_extract(col("url"), "^([A-Za-z][A-Za-z0-9+.-]*)://", 1),
-          col("rank")).as("scheme"))
+          col("rank")).as("scheme"), min(col("wave")).as("wave"))
         .join(robotRules, col("host") === col("r_host"), "left_anti")
         .withColumn("robots_url",
           concat(when(col("scheme") === "", "http").otherwise(col("scheme")),
             lit("://"), col("host"), lit("/robots.txt")))
-      // the tiny new-host set first, its size and hosts observed by its
-      // checkpoint: a wave with no new host skips the corpus scan
-      val obs = Observation()
-      val newHostsM = newHosts
-        .observe(obs, count(lit(1)).as("rows"),
-          collect_list(col("host")).as("hosts"))
-        .localCheckpoint(true)
-      val newHostsSeen = obs.get
-      if (newHostsSeen("rows").asInstanceOf[Long] == 0L) return None
+      // the tiny new-host set first, its hosts listed by the job that
+      // materializes it: a wave with no new host skips the corpus scan
+      val hostAt = newHosts.schema.fieldIndex("host")
+      val (newHostsM, parts) = materialize(newHosts)(_.map(r =>
+        if (r.isNullAt(hostAt)) null else r.getUTF8String(hostAt).toString
+      ).toVector)
+      val newHostList = parts.toSeq.flatten
+      if (newHostList.isEmpty) return None
       // newHosts is the BROADCAST side of an inner join, so the corpus is
       // never shuffled; hosts with no robots page come back as the left
       // join's nulls below (allow-all, like a 404)
@@ -679,7 +737,7 @@ object CrawlJob {
           specUa))
       // ONE tiny materialization feeds the rules-cache delta, the counter
       // rows and (with sitemap discovery) the Sitemap: pointers; the rules
-      // cache compacts every 8th delta (plan-width bound, like `seen`)
+      // cache compacts every 8th delta (plan-width bound)
       val smPtrsU = udf((status: java.lang.Integer, b: Array[Byte]) =>
         if (status == null || status.intValue() < 200 ||
             status.intValue() >= 300 || b == null) Seq.empty[String]
@@ -692,20 +750,20 @@ object CrawlJob {
       val newRulesFull = newHostsM
         .join(broadcast(hits), col("host") === col("h_hit"), "left")
         .withColumn("g", parseRobotsU(col("r_status"), col("r_body")))
-        .select(Seq(col("host"), col("robots_url"), col("r_status"),
+        .select(Seq(col("wave"), col("host"), col("robots_url"), col("r_status"),
           col("g.rules").as("rules"),
           col("g.crawlDelay").as("crawl_delay")) ++ smCol: _*)
         .localCheckpoint(true)
       // counter parity (metrics/metrics.go:31-33): one request row per new
       // host, one response row per robots.txt served
       auditInc += auditRows(newRulesFull, "robots_request",
-        method = lit("GET"), wave = lit(wave), url = col("robots_url"))
+        method = lit("GET"), url = col("robots_url"))
       auditInc += auditRows(newRulesFull.filter(col("r_status").isNotNull),
         "robots_response", status = col("r_status"), method = lit("GET"),
-        wave = lit(wave), url = col("robots_url"))
+        url = col("robots_url"))
       robotRules = robotRules.union(newRulesFull
         .select(col("host").as("r_host"), col("rules"), col("crawl_delay")))
-      ruledHosts ++= newHostsSeen("hosts").asInstanceOf[collection.Seq[String]]
+      ruledHosts ++= newHostList.filter(_ != null)
       rulesDeltas += 1
       if (rulesDeltas % 8 == 0)
         robotRules = robotRules.localCheckpoint(true)
@@ -719,11 +777,11 @@ object CrawlJob {
       * in the first-wins window.
       */
     def sitemapLinks(newRules: DataFrame): DataFrame = {
-      val ptrs = newRules.select(
+      val ptrs = newRules.select(col("wave"),
         posexplode(col("sitemap_ptrs")).as(Seq("sm_pos", "sm_url")))
       val smDocs = corpus
         .join(broadcast(ptrs), col("p_url") === col("sm_url"))
-        .select(col("sm_pos"), col("p_status").as("s_status"),
+        .select(col("wave"), col("sm_pos"), col("p_status").as("s_status"),
           col("p_html").as("s_body"))
       val locsU = udf((status: java.lang.Integer, b: Array[Byte]) =>
         if (status == null || status.intValue() < 200 ||
@@ -732,10 +790,10 @@ object CrawlJob {
           new String(b, java.nio.charset.StandardCharsets.UTF_8))
           .map(_.loc))
       smDocs
-        .select(col("sm_pos"),
+        .select(col("wave"), col("sm_pos"),
           posexplode(locsU(col("s_status"), col("s_body")))
             .as(Seq("loc_pos", "url")))
-        .select(col("url"), lit(spec.parserId).as("parser_id"),
+        .select(col("wave"), col("url"), lit(spec.parserId).as("parser_id"),
           lit(-1L).as("parent_rank"),
           (col("sm_pos") * 65536 + col("loc_pos")).as("link_pos"),
           lit(1).as("depth"),
@@ -877,26 +935,22 @@ object CrawlJob {
 
     // ---- fetch -----------------------------------------------------------
     /** Materialize the wave's requests; record the crawl order, the
-      * frontier_size metric and the per-partition lineage. The row count
-      * and the lineage are observed by the checkpoint's own job. Returns
-      * (requests, their count).
+      * frontier_size metric and the per-partition lineage. The materializing
+      * job counts each partition's rows. Returns (requests, their count).
       */
     def dispatch(toFetch: DataFrame): (DataFrame, Long) = {
-      val obs = Observation()
-      val pending = toFetch
+      val (pending, parts) = materialize(toFetch
         .withColumn("cur_url", col("url")).withColumn("hops", lit(0))
-        .observe(obs, count(lit(1)).as("rows"),
-          partitionRows(lit(1)).as("parts"))
-        .localCheckpoint(true)
-      val m = obs.get
+      )(_.size.toLong)
       orderInc = pending.select(col("wave"), col("rank"), col("url"))
       order = order.union(orderInc)
       metricsBuf.synchronized {
         metricsBuf += ((wave, "frontier_size", frontierN))
       }
-      lineageBuf ++= m("parts").asInstanceOf[collection.Map[Int, Long]]
-        .toSeq.sorted.map { case (p, n) => (wave, p, n) }
-      (pending, m("rows").asInstanceOf[Long])
+      lineageBuf ++= parts.zipWithIndex.collect {
+        case (n, p) if n > 0 => (wave, p, n)
+      }
+      (pending, parts.sum)
     }
 
     /** Fetch join with transparent redirect following. Returns (fetched
@@ -906,30 +960,40 @@ object CrawlJob {
       var pending = dispatched
       var pendingN = dispatchedN
       var setCookieN = 0L
-      var fetched = withFetchCols(pending.limit(0))
-        .withColumn("redirect_exceeded", lit(false))
+      var fetched = Option.empty[DataFrame]
       var hop = 0
       while (hop <= spec.maxRedirect && pendingN > 0) {
         // Materialize the join ONCE per hop; finals and the redirect
-        // continuation are filters over it. persist + an aggregate, NOT
-        // localCheckpoint: a LogicalRDD child under the `fetched` union
-        // trips Catalyst's Union.rewriteConstraints (key-not-found). The
-        // aggregate that fills the persist also counts the next hop's
-        // rows and this hop's final rows with a Set-Cookie.
-        val j = pending.join(corpus, col("cur_url") === col("p_url"), "left")
-          .drop("p_url").persist(StorageLevel.MEMORY_AND_DISK)
-        persisted += j
+        // continuation are filters over it. The job that materializes it
+        // also counts the next hop's rows and this hop's final rows with a
+        // Set-Cookie. A kept relation, NOT Dataset.localCheckpoint: a
+        // checkpoint's plan constraints under the `fetched` union trip
+        // Catalyst's Union.rewriteConstraints (key-not-found).
+        val joined = pending.join(corpus, col("cur_url") === col("p_url"), "left")
+          .drop("p_url")
+        val statusAt = joined.schema.fieldIndex("p_status")
+        val locAt = joined.schema.fieldIndex("p_loc")
+        val setckAt = joined.schema.fieldIndex("p_setck")
+        val lastHop = hop == spec.maxRedirect
+        val (j, counts) = materialize(joined) { rows =>
+          var redirects, setCookies = 0L
+          rows.foreach { r =>
+            val redir = !r.isNullAt(statusAt) && !r.isNullAt(locAt) &&
+              RedirectStatuses.contains(r.getInt(statusAt))
+            if (redir) redirects += 1
+            if ((!redir || lastHop) && !r.isNullAt(setckAt)) setCookies += 1
+          }
+          (redirects, setCookies)
+        }
         val isRedir = col("p_status").isin(RedirectStatuses.map(Integer.valueOf): _*) &&
           col("p_loc").isNotNull
-        val isFinal = !isRedir || lit(hop == spec.maxRedirect)
-        val counts = j.agg(count_if(isRedir),
-          count_if(isFinal && col("p_setck").isNotNull)).head()
-        pendingN = if (hop == spec.maxRedirect) 0L else counts.getLong(0)
-        setCookieN += counts.getLong(1)
+        val isFinal = !isRedir || lit(lastHop)
+        pendingN = if (lastHop) 0L else counts.map(_._1).sum
+        setCookieN += counts.map(_._2).sum
         val finals = j.filter(isFinal)
           .withColumn("redirect_exceeded", isRedir)
           .drop("p_loc")
-        fetched = fetched.unionByName(finals)
+        fetched = Some(fetched.fold(finals)(_.unionByName(finals)))
         pending =
           if (hop == spec.maxRedirect) pending.limit(0)
           else {
@@ -953,7 +1017,8 @@ object CrawlJob {
           }
         hop += 1
       }
-      (fetched, setCookieN)
+      (fetched.getOrElse(withFetchCols(dispatched.limit(0))
+        .withColumn("redirect_exceeded", lit(false))), setCookieN)
     }
 
     /** Validator/304 merge (cache/cache.go:210-239): a live page still
@@ -985,26 +1050,6 @@ object CrawlJob {
         .withColumn("revalidated_304", lit(false))
       auditInc += auditRows(served, "cache_hit", status = lit(200))
       fetched.unionByName(asFetched)
-    }
-
-    /** Persist the wave's fetched rows and audit the fetch outcomes. */
-    def settle(fetched0: DataFrame): DataFrame = {
-      auditInc += auditRows(fetched0.filter(col("revalidated_304")),
-        "revalidate_304", status = col("p_status"))
-      // The persist is also the attribute barrier that keeps downstream
-      // localCheckpoint constraints stable (without it Catalyst's
-      // Union.rewriteConstraints throws key-not-found on the AIMD and
-      // randomized-parity paths); filling it re-reads cached joins only.
-      val fetched = fetched0.persist(StorageLevel.MEMORY_AND_DISK)
-      persisted += fetched
-      // fetch miss = the transport-error (ErrorFunc) analog
-      auditInc += auditRows(fetched.filter(col("p_status").isNull),
-        "fetch_miss", status = lit(-1),
-        detail = concat(lit("no such page: "), col("cur_url")))
-      auditInc += auditRows(fetched.filter(col("redirect_exceeded")),
-        "redirect_exceeded", status = col("p_status"),
-        detail = lit(s"stopped after ${spec.maxRedirect} redirects"))
-      fetched
     }
 
     // ---- respond ---------------------------------------------------------
@@ -1046,9 +1091,11 @@ object CrawlJob {
       val now = waveNowEpoch
       val parseCkU = udf((setCookie: String, host: String, path: String) =>
         Cookies.parse(setCookie, host, path, now))
+      // purge cookies already expired at the wave clock
+      val liveU = udf((expires: Long) => expires < 0 || expires > now)
       val newCk = fetched.filter(col("p_setck").isNotNull)
         .select(parseCkU(col("p_setck"), col("host"), col("path")).as("ck"),
-          lit(wave).as("c_wave"))
+          col("wave").as("c_wave"))
         .filter(col("ck").isNotNull)
         .select(col("ck.domain").as("c_domain"),
           col("ck.hostOnly").as("c_hostonly"),
@@ -1064,8 +1111,7 @@ object CrawlJob {
             Window.partitionBy(col("c_domain"), col("c_name"), col("c_path"))
               .orderBy(col("c_wave").desc, col("c_value").desc)))
           .filter(col("rn") === 1 && !col("c_remove") &&
-            // purge cookies already expired at the wave clock
-            (col("c_expires") < 0 || col("c_expires") > lit(now)))
+            liveU(col("c_expires")))
           .drop("rn", "c_remove")
         cookieJar = merged.localCheckpoint(true)
         cookieJarNonEmpty = true
@@ -1079,33 +1125,39 @@ object CrawlJob {
           col("p_latency") > lit(spec.requestTimeoutMs)
       else lit(false)
 
-    /** Retry re-enqueue and delivery; returns (delivered, requeued).
-      * Timeouts (latency_ms > requestTimeoutMs) and retryable statuses both
-      * retry up to retryTimes (client/client.go:94-121). An exhausted
-      * timeout delivers nothing (fetch_timeout, the ErrorFunc analog); an
-      * exhausted retryable STATUS is delivered (geziyor.go:233-263).
+    /** Retry re-enqueue and delivery; returns (delivered, requeued), and
+      * audits the fetch outcomes. Timeouts (latency_ms > requestTimeoutMs)
+      * and retryable statuses both retry up to retryTimes
+      * (client/client.go:94-121). An exhausted timeout delivers nothing
+      * (fetch_timeout, the ErrorFunc analog); an exhausted retryable STATUS
+      * is delivered (geziyor.go:233-263).
       */
     def respond(fetched: DataFrame): (DataFrame, DataFrame) = {
       val retryCodes = spec.retryHttpCodes.toSeq.map(Integer.valueOf)
       val retryableStatus = col("p_status").isin(retryCodes: _*)
-      val retryable = fetched.filter(
-        (retryableStatus || timedOut) && !col("redirect_exceeded"))
+      val isRetryable =
+        (retryableStatus || timedOut) && !col("redirect_exceeded")
       val again = col("retry") < spec.retryTimes
       val exhausted = col("retry") >= spec.retryTimes
-      val requeue = retryable.filter(again)
+      val requeue = fetched.filter(isRetryable && again)
         .select(col("url"), col("host"), col("path"), col("depth"),
           col("method"), col("meta"), (col("retry") + 1).as("retry"),
           col("priority"), (col("wave") + 1).as("wave"), col("rank"),
           col("parser_id"), lit(true).as("is_retry"))
-      auditInc += auditRows(retryable.filter(again), "retry",
-        status = col("p_status"),
-        detail = concat(lit("attempt "), col("retry") + 1))
-      auditInc += auditRows(retryable.filter(exhausted && !timedOut),
-        "retry_exhausted", status = col("p_status"),
-        detail = lit(s"gave up after ${spec.retryTimes} retries"))
-      auditInc += auditRows(retryable.filter(exhausted && timedOut),
-        "fetch_timeout", status = lit(-1),
-        detail = lit(s"timed out after ${spec.retryTimes} retries"))
+      auditInc += auditKinds(fetched, Seq(
+        ("revalidate_304", col("revalidated_304"), col("p_status"), lit("")),
+        // fetch miss = the transport-error (ErrorFunc) analog
+        ("fetch_miss", col("p_status").isNull, lit(-1),
+          concat(lit("no such page: "), col("cur_url"))),
+        ("redirect_exceeded", col("redirect_exceeded"), col("p_status"),
+          lit(s"stopped after ${spec.maxRedirect} redirects")),
+        ("retry", isRetryable && again, col("p_status"),
+          concat(lit("attempt "), col("retry") + 1)),
+        ("retry_exhausted", isRetryable && exhausted && !timedOut,
+          col("p_status"),
+          lit(s"gave up after ${spec.retryTimes} retries")),
+        ("fetch_timeout", isRetryable && exhausted && timedOut, lit(-1),
+          lit(s"timed out after ${spec.retryTimes} retries"))))
       val delivered = fetched.filter(col("p_status").isNotNull &&
         !col("redirect_exceeded") && !timedOut &&
         (!retryableStatus || exhausted))
@@ -1132,29 +1184,23 @@ object CrawlJob {
 
     /** The `crawled` audit rows, stamped with the url-hash proxy
       * (client/proxy.go:19-48, the q34 face). LogDisabled kills the log
-      * lines, not the counters: the crawled count goes to the metrics,
-      * observed by the first job that runs the responses (the parse
-      * persist's). Returns the responses.
+      * lines, not the counters: `account` counts these rows into the
+      * metrics and drops them from the audit. Returns the responses.
       */
-    def logCrawled(responses: DataFrame): DataFrame =
-      if (!spec.logDisabled) {
-        val crawlDetail =
-          if (spec.proxyUrls.isEmpty) lit("")
-          else {
-            val pid = conv(substring(md5(col("url")), 1, 4), 16, 10)
-              .cast("long") % spec.proxyUrls.size
-            concat(lit("proxy="), pid, lit(":"),
-              element_at(array(spec.proxyUrls.map(lit): _*),
-                (pid + 1).cast("int")))
-          }
-        auditInc += auditRows(responses, "crawled",
-          status = col("p_status"), detail = crawlDetail)
-        responses
-      } else {
-        val obs = Observation()
-        crawledObs = Some(obs)
-        responses.observe(obs, count(lit(1)).as("rows"))
-      }
+    def logCrawled(responses: DataFrame): DataFrame = {
+      val crawlDetail =
+        if (spec.proxyUrls.isEmpty) lit("")
+        else {
+          val pid = conv(substring(md5(col("url")), 1, 4), 16, 10)
+            .cast("long") % spec.proxyUrls.size
+          concat(lit("proxy="), pid, lit(":"),
+            element_at(array(spec.proxyUrls.map(lit): _*),
+              (pid + 1).cast("int")))
+        }
+      auditInc += auditRows(responses, "crawled",
+        status = col("p_status"), detail = crawlDetail)
+      responses
+    }
 
     // Rendered fetch mode (client/client.go:171-247): deliver the
     // pre-rendered `text` DOM instead of the raw body.
@@ -1198,8 +1244,8 @@ object CrawlJob {
     }
 
     // ---- extract ---------------------------------------------------------
-    /** Decode + parse the delivered responses (persisted); audit parse
-      * errors and append the wave's records.
+    /** Decode + parse the delivered responses (kept); audit parse errors
+      * and append the wave's records.
       */
     def extract(responses: DataFrame,
         parsers: Map[String, Parser]): DataFrame = {
@@ -1208,7 +1254,7 @@ object CrawlJob {
       val parseHtmlDisabled = spec.parseHtmlDisabled
       val charsetDetectDisabled = spec.charsetDetectDisabled
       val sniffCt = spec.sniffContentType
-      val parsed = responses
+      val parsedRows = responses
         .select(col("url"), col("cur_url"), col("host"), col("depth"),
           col("method"), col("meta"), col("wave"), col("rank"),
           col("parser_id"), col("p_status"), ctCol.as("p_ct"),
@@ -1244,8 +1290,7 @@ object CrawlJob {
         }
         .toDF("url", "host", "depth", "meta", "wave", "rank", "parser_id",
           "records", "links", "parse_error")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      persisted += parsed
+      val parsed = keep(parsedRows)._1
       auditInc += auditRows(parsed.filter(col("parse_error").isNotNull),
         "parse_error", method = lit("GET"), detail = col("parse_error"))
       recordsInc = parsed
@@ -1260,23 +1305,23 @@ object CrawlJob {
       */
     def links(parsed: DataFrame, sitemapCand: Option[DataFrame]): DataFrame = {
       val candLinks = parsed
-        .select(col("rank").as("parent_rank"), col("depth"), col("meta"),
-          posexplode(col("links")).as(Seq("link_pos", "link")))
+        .select(col("wave"), col("rank").as("parent_rank"), col("depth"),
+          col("meta"), posexplode(col("links")).as(Seq("link_pos", "link")))
         .select(col("link._1").as("url"), col("link._2").as("parser_id"),
           col("parent_rank"), col("link_pos"),
-          (col("depth") + 1).as("depth"), col("meta"))
+          (col("depth") + 1).as("depth"), col("meta"), col("wave"))
       val cand = sitemapCand
         .map(candLinks.unionByName(_)).getOrElse(candLinks)
         .filter(col("depth") <= spec.maxDepth)
         .withColumn("host", hostOfU(col("url")))
         .withColumn("path", pathOfU(col("url")))
-      val (candAllowed, candRejected) =
-        if (spec.allowedDomains.isEmpty) (cand, cand.limit(0))
-        else (cand.filter(col("host").isin(spec.allowedDomains: _*)),
-          cand.filter(!col("host").isin(spec.allowedDomains: _*)))
-      auditInc += auditRows(candRejected, "rejected_domain",
-        method = lit("GET"), wave = lit(wave))
-      candAllowed
+      if (spec.allowedDomains.isEmpty) cand
+      else {
+        val allowed = col("host").isin(spec.allowedDomains: _*)
+        auditInc += auditRows(cand.filter(!allowed), "rejected_domain",
+          method = lit("GET"))
+        cand.filter(allowed)
+      }
     }
 
     // ---- dedup -----------------------------------------------------------
@@ -1334,7 +1379,7 @@ object CrawlJob {
         .drop("t_rn")
         .unionByName(saturated)
       auditInc += auditRows(capped, "trap_capped", method = lit("GET"),
-        wave = lit(wave), detail = col("template"))
+        detail = col("template"))
       val newCounts = granted.groupBy(col("host"), col("template"))
         .agg(count(lit(1)).as("n_inc"))
       trapCounts = Some(counts
@@ -1348,23 +1393,20 @@ object CrawlJob {
 
     // ---- assemble --------------------------------------------------------
     /** Next frontier = deferred < retries < new discoveries, ranked on the
-      * side pool; also grows `seen`. Returns (next frontier, seen delta).
-      * Sync-order mode (geziyor.go:225-227) ranks discoveries globally;
-      * scale mode orders them by (parent_rank, link_pos) inside the one
-      * bucketed assembly window.
+      * side pool by ONE window over (group, order a, order b), where
+      * discoveries order by (parent_rank, link_pos) and the others by their
+      * rank; also grows `seen`. Returns (next frontier, seen delta).
+      * Sync-order mode (geziyor.go:225-227) ranks globally; scale mode
+      * ranks inside the bucketed window of [[bucketRank]].
       */
     def assemble(candGranted: DataFrame, candNew: DataFrame,
         deferred: DataFrame,
         requeue: DataFrame): (Future[(DataFrame, Long, Long)], DataFrame) = {
-      val ranked0 =
-        if (spec.syncOrder) {
-          val rw = Window.orderBy(col("parent_rank").asc, col("link_pos").asc)
-          candGranted.withColumn("rank", row_number().over(rw).cast("long"))
-        } else candGranted.withColumn("rank", lit(0L))
-      val nextFrontier = ranked0
+      val nextFrontier = candGranted
         .select(col("url"), col("host"), col("path"), col("depth"),
           lit("GET").as("method"), col("meta"), lit(0).as("retry"),
-          lit(0).as("priority"), lit(wave + 1).as("wave"), col("rank"),
+          lit(0).as("priority"), (col("wave") + 1).as("wave"),
+          lit(0L).as("rank"),
           col("parser_id"), lit(false).as("is_retry"),
           col("parent_rank").as("ord_a"),
           col("link_pos").cast("long").as("ord_b"))
@@ -1376,9 +1418,7 @@ object CrawlJob {
           seeds.union(candNew.select(col("url")))
         case None => candNew.select(col("url"))
       }
-      seen = seen.union(candNew.select(col("url")))
-      // compact every 8 waves: the union chain's plan width stays ≤ 8
-      if ((wave + 1) % 8 == 0) seen = seen.localCheckpoint(true)
+      seenRel.add(candNew)
       val assembled = deferred.withColumn("wave", col("wave") + 1)
         .withColumn("grp", lit(0))
         .withColumn("ord_a", col("rank")).withColumn("ord_b", lit(0L))
@@ -1387,47 +1427,54 @@ object CrawlJob {
         .unionByName(nextFrontier.withColumn("grp", lit(2)))
       // runs CONCURRENTLY with the audit fold (both read cached frames)
       val description = spark.sparkContext.getLocalProperty(JobDescription)
+      val next = wave + 1
       val frontierF = Future {
         spark.sparkContext.setJobDescription(description)
-        checkpointFrontier({
-          if (spec.syncOrder) {
-            val fw = Window.orderBy(col("grp").asc, col("rank").asc)
-            assembled.withColumn("rank", row_number().over(fw).cast("long"))
-          } else assembled.withColumn("rank",
-            bucketRank(col("grp").asc, col("ord_a").asc, col("ord_b").asc))
-        }.drop("grp", "ord_a", "ord_b"))
+        val order = Seq(col("grp").asc, col("ord_a").asc, col("ord_b").asc)
+        checkpointFrontier(assembled.withColumn("rank",
+            if (spec.syncOrder)
+              row_number().over(Window.orderBy(order: _*)).cast("long")
+            else bucketRank(order: _*))
+          .drop("grp", "ord_a", "ord_b"), next)
       }(sideEc)
       (frontierF, seenInc)
     }
 
     // ---- account ---------------------------------------------------------
-    /** Fold the wave's audit increment and record the observed crawled
-      * count, then take the next frontier from its side job.
+    /** Fold the wave's audit increment (with logDisabled, its crawled
+      * rows become the crawled metric, counted by the fold's own job), then
+      * take the next frontier from its side job.
       */
     def account(frontierF: Future[(DataFrame, Long, Long)]): Unit = {
       // Column names normalized for the delta parquet; materialized NOW,
-      // while granted/fetched are still cached.
+      // while granted is still cached.
       val raw = auditInc.reduce(_ union _).toDF(emptyAudit.columns: _*)
-      // small waves collapse the ~10 branches into 4 tasks
-      auditIncDf = (if (frontierN < 100000L) raw.coalesce(4) else raw)
-        .localCheckpoint(true)
-      metricsBuf.synchronized { audit = audit.union(auditIncDf) }
-      crawledObs.foreach { obs =>
-        val crawledN = obs.get("rows").asInstanceOf[Long]
-        metricsBuf.synchronized { metricsBuf += ((wave, "crawled", crawledN)) }
+      val crawledKind = org.apache.spark.unsafe.types.UTF8String
+        .fromString("crawled")
+      // small waves collapse the branches into 4 tasks
+      val (inc, crawled) = materialize(
+        if (frontierN < 100000L) raw.coalesce(4) else raw)(
+        _.count(_.getUTF8String(1) == crawledKind).toLong)
+      auditIncDf =
+        if (spec.logDisabled) inc.filter(col("kind") =!= "crawled") else inc
+      metricsBuf.synchronized {
+        audit = audit.union(auditIncDf)
+        if (spec.logDisabled) metricsBuf += ((wave, "crawled", crawled.sum))
       }
-      crawledObs = None
       adoptFrontier(Await.result(frontierF, Duration.Inf))
     }
 
     /** Snapshot tables are rewritten whole; accumulators commit only this
-      * wave's increment (StateStore scaladoc).
+      * wave's increment (StateStore scaladoc). The AIMD caps and the trap
+      * counts are snapshots too, once their feature has started them.
       */
     def commit(dir: String, seenInc: DataFrame): Unit =
       StateStore.commitWave(dir, wave,
         snapshots = Map(
           "frontier" -> frontier,
-          "robot_rules" -> robotRules, "cookies" -> cookieJar),
+          "robot_rules" -> robotRules, "cookies" -> cookieJar) ++
+          hostCaps.map("host_caps" -> _) ++
+          trapCounts.map("trap_counts" -> _),
         deltas = Map(
           "seen" -> seenInc, "records" -> recordsInc,
           "audit" -> auditIncDf, "crawl_order" -> orderInc))

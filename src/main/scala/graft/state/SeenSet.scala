@@ -1,8 +1,12 @@
 package graft.state
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, RddRelation}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.util.sketch.BloomFilter
 
 /** URL-seen dedup at 10^10-URL scale (SURVEY.md §2.2 — the engine's
@@ -77,7 +81,8 @@ object SeenSet {
     val mightContain = udf(MightContain(bc))
     val definitelyNew = cand.filter(!mightContain(col("url")))
     val maybeSeen = cand.filter(mightContain(col("url")))
-    definitelyNew.union(maybeSeen.join(seen, Seq("url"), "left_anti"))
+    // by name: the USING anti-join moves `url` to the front
+    definitelyNew.unionByName(maybeSeen.join(seen, Seq("url"), "left_anti"))
   }
 
   /** The Bloom prefilter of one crawl or one stream, from bootstrap to
@@ -147,6 +152,35 @@ object SeenSet {
       if (bc != null) bc.destroy()
       bc = df.sparkSession.sparkContext.broadcast(bloom)
     }
+  }
+
+  /** The seen table of one crawl as ONE relation over its increments:
+    * their url rows are unioned at the RDD level, so every plan that reads
+    * the table (the dedup anti-join, the Bloom build) has the same shape
+    * however many waves it holds, and no job ever compacts it. Each
+    * increment is computed once, by the first job that reads it, and kept
+    * (RDD localCheckpoint); building the relation runs no job.
+    */
+  final class Relation(spark: org.apache.spark.sql.SparkSession) {
+    private var parts = Vector.empty[RDD[InternalRow]]
+    private var sizeInBytes = BigInt(0)
+    private var current = build()
+
+    /** The urls of every increment added so far (one `url` column). */
+    def df: DataFrame = current
+
+    /** Append the urls of `inc` (a frame with a `url` column). */
+    def add(inc: DataFrame): Unit = {
+      val qe = inc.select(col("url")).queryExecution
+      parts :+= qe.toRdd.map(_.copy()).localCheckpoint()
+      // the union's estimate, as Spark would sum it for a Union plan
+      sizeInBytes += qe.optimizedPlan.stats.sizeInBytes
+      current = build()
+    }
+
+    private def build(): DataFrame =
+      RddRelation(spark, Seq(AttributeReference("url", StringType)()),
+        spark.sparkContext.union(parts), sizeInBytes.max(1))
   }
 
   // ---- cuckoo variant ----------------------------------------------------

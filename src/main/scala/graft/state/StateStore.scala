@@ -10,9 +10,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * real Iceberg later.
   *
   * Two table families (Iceberg-style snapshot semantics):
-  *  - SNAPSHOT tables (frontier, robot_rules, cookies): current-state
-  *    tables rewritten whole per wave at `{dir}/wave={N}/{table}` — they
-  *    are bounded by the live frontier / host count, not crawl history.
+  *  - SNAPSHOT tables (frontier, robot_rules, cookies, host_caps,
+  *    trap_counts): current-state tables rewritten whole per wave at
+  *    `{dir}/wave={N}/{table}` — they are bounded by the live frontier /
+  *    host / template count, not crawl history.
   *  - DELTA tables (records, audit, crawl_order, seen): append-only
   *    accumulators. Each wave commits ONLY its own increment under
   *    `{dir}/delta/{table}/wave={N}`; a reader unions the committed

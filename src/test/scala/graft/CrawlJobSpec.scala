@@ -8,11 +8,11 @@ import graft.pipeline.CrawlJob
 import graft.sinks.{JArr, JInt, JObj, JStr, Json}
 
 class CrawlJobSpec extends AnyFunSuite {
-  test("long crawls: seen plan width stays bounded (8-wave compaction)") {
-    // 40-wave chain crawl: page i links only to page i+1. Without the
-    // in-loop compaction (round-3 verdict item), `seen` would be a 40-way
-    // union through every wave's anti-join analysis; with compaction every
-    // 8 waves the final plan carries at most ~1 checkpoint + 8 increments.
+  test("long crawls: seen stays one relation however many waves") {
+    // 40-wave chain crawl: page i links only to page i+1. A union of the
+    // per-wave increments would be a 40-way union through every wave's
+    // anti-join analysis, and would shift the anti-join's codegen stage
+    // ids every wave; `seen` is one leaf over their RDD-level union.
     val chain = (0 until 45).map { i =>
       val html =
         s"""<html><body><a href="/p/${i + 1}">n</a></body></html>"""
@@ -31,7 +31,7 @@ class CrawlJobSpec extends AnyFunSuite {
         case u: org.apache.spark.sql.catalyst.plans.logical.Union => u
       }.map(_.children.size).sum
     val width = countUnions(res.seen.queryExecution.logical)
-    assert(width <= 12, s"seen union width $width — compaction regressed")
+    assert(width == 0, s"seen is a union of $width plans")
   }
 
   private lazy val spark = SparkTestBase.spark
@@ -303,11 +303,11 @@ class CrawlJobSpec extends AnyFunSuite {
 
   test("job-count guard: the flagship quotes crawl starts no more Spark jobs") {
     // Ceiling = the count measured as below (local[4], AQE on, the fixture
-    // corpus already cached) once the wave loop's count and emptiness
-    // probes were folded into jobs it already runs: 190 jobs, the same in
-    // two separate JVMs (307 before). A change that cuts jobs lowers it;
-    // nothing may raise it.
-    val FlagshipJobCeiling = 190
+    // corpus already cached) once the wave loop's checkpoints became kept
+    // relations filled by one counting job each: 128 jobs, the same in
+    // separate JVMs (307, then 190 before). A change that cuts jobs lowers
+    // it; nothing may raise it.
+    val FlagshipJobCeiling = 128
     val spec = CrawlSpec(startUrls = Seq(SiteFixtures.QuotesBase),
       parserId = "quotes", syncOrder = true, maxWaves = 20)
     pagesDf.count()
@@ -359,6 +359,41 @@ class CrawlJobSpec extends AnyFunSuite {
     val names = actions.toArray(Array.empty[String]).toSeq
     assert(names.contains("localCheckpoint"), names)
     assert(!names.exists(a => a == "count" || a == "isEmpty"), names)
+  }
+
+  test("compile-count guard: settled waves of a second flagship crawl " +
+      "compile (almost) nothing") {
+    // Every settled wave plans the same code, few enough classes to stay in
+    // Spark's default codegen cache (SparkTestBase keeps its size), so once
+    // a crawl has run, waves 2-9 of the next reuse the classes of the waves
+    // before them. Measured as below (local[4], AQE on, the fixture corpus
+    // cached): 0 compiles in waves 2-9, against 589 when every wave
+    // inlined its number and the seen union grew a child per wave.
+    val SettledCompileCeiling = 40
+    val spec = CrawlSpec(startUrls = Seq(SiteFixtures.QuotesBase),
+      parserId = "quotes", syncOrder = true, maxWaves = 20)
+    pagesDf.count()
+    val Label = """wave=(\d+) stage=(\w+)""".r
+    def byWave(cs: Seq[CodegenCensus.Compile]): Seq[(Int, String)] =
+      cs.collect { case CodegenCensus.Compile(Label(w, _), body) =>
+        (w.toInt, body) }
+    val first = byWave(CodegenCensus.record(spark)(
+      CrawlJob.run(spark, spec, pagesDf))._2)
+    val (res, compiles) =
+      CodegenCensus.record(spark)(CrawlJob.run(spark, spec, pagesDf))
+    assert(res.waves == 10)
+    val second = byWave(compiles)
+    val settled = second.filter { case (w, _) => w >= 2 && w <= 9 }
+    assert(settled.size <= SettledCompileCeiling,
+      s"waves 2-9 of the second crawl compiled ${settled.size} classes, " +
+        s"ceiling $SettledCompileCeiling")
+    // a class a settled wave compiles was compiled by another wave too
+    // (evicted, then reused), never code of that one wave only
+    val waves = (first.map { case (w, b) => (-1 - w, b) } ++ second)
+      .groupBy(_._2).map { case (b, ws) => b -> ws.map(_._1).toSet }
+    val once = settled.map(_._2).distinct.filter(b => waves(b).size == 1)
+    assert(once.isEmpty, s"${once.size} classes compiled in one wave only: " +
+      once.map(_.linesIterator.slice(4, 6).mkString(" ")).mkString(" | "))
   }
 
   test("robots rules arrive in the wave a deferred host is first granted") {

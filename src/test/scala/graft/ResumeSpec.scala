@@ -74,6 +74,67 @@ class ResumeSpec extends AnyFunSuite {
     assert(resumed.waves == direct.waves)
   }
 
+  /** Kill the crawl after every wave but its last and resume it: each
+    * resumed crawl ends with the records, audit, crawl order and seen set
+    * of the uninterrupted one.
+    */
+  private def killAtEveryWave(spec: CrawlSpec,
+      pages: org.apache.spark.sql.DataFrame): Unit = {
+    def rows(r: CrawlJob.CrawlResult): Seq[Seq[String]] =
+      Seq(r.records, r.audit, r.crawlOrder, r.seen)
+        .map(_.collect().map(_.toString).toSeq.sorted)
+    val direct = CrawlJob.run(spark, spec, pages)
+    val want = rows(direct)
+    assert(direct.waves > 2)
+    for (k <- 1 until direct.waves) {
+      val dir = Files.createTempDirectory(s"graft-state-kill$k").toString
+      CrawlJob.run(spark, spec.copy(maxWaves = k), pages, stateDir = Some(dir))
+      assert(StateStore.latestCommitted(dir).contains(k - 1))
+      val resumed = CrawlJob.run(spark, spec, pages, stateDir = Some(dir))
+      assert(rows(resumed) == want, s"killed after wave ${k - 1}")
+      assert(resumed.waves == direct.waves)
+    }
+  }
+
+  test("adaptiveRate: killed at every wave boundary, resume keeps the " +
+      "AIMD host caps") {
+    import spark.implicits._
+    // a slow host's cap halves every wave, a fast host's grows: a resumed
+    // crawl that forgot the caps would grant both the initial cap again
+    def site(host: String, latency: Long) =
+      (s"http://$host/", 200, (1 to 20).map(i => s"""<a href="/p/$i">x</a>""")
+        .mkString("<html><body>", "", "</body></html>"), latency) +:
+        (1 to 20).map(i => (s"http://$host/p/$i", 200,
+          s"<html><body><p>leaf $i</p></body></html>", latency))
+    val corpus = (site("slow.example.com", 5000L) ++
+        site("fast.example.com", 50L))
+      .map { case (u, st, html, lat) =>
+        (u, st, "text/html; charset=utf-8", Option.empty[String],
+          html.getBytes("UTF-8"), lat)
+      }
+      .toDF("url", "status", "content_type", "location", "html", "latency_ms")
+    killAtEveryWave(CrawlSpec(
+      startUrls = Seq("http://slow.example.com/", "http://fast.example.com/"),
+      parserId = "all_links", robotsTxtDisabled = true,
+      adaptiveRate = true, maxWaves = 6), corpus)
+  }
+
+  test("trapTemplateBudget: killed at every wave boundary, resume keeps " +
+      "the per-template counts") {
+    // a 9-page chain on one template: the budget stops it after 3 grants;
+    // a resumed crawl that forgot the counts would grant 3 more
+    val chain = (1 to 9).map { i =>
+      val html = s"""<html><body><a href="/cal/${i + 1}">n</a></body></html>"""
+      SiteFixtures.Page(s"http://cal.example.com/cal/$i",
+        java.sql.Timestamp.valueOf("1997-01-01 00:00:00"),
+        html.getBytes(java.nio.charset.StandardCharsets.UTF_8), html, "en",
+        200, "text/html; charset=utf-8", null)
+    }
+    killAtEveryWave(CrawlSpec(startUrls = Seq("http://cal.example.com/cal/1"),
+      parserId = "all_links", maxWaves = 12, trapTemplateBudget = Some(3)),
+      SiteFixtures.pagesDf(spark, chain))
+  }
+
   test("delta commits: wave N writes ONLY wave-N increments for accumulators") {
     val dir = Files.createTempDirectory("graft-state-delta").toString
     val spec = CrawlSpec(startUrls = Seq(SiteFixtures.QuotesBase),
