@@ -3,14 +3,12 @@ package graft.pipeline
 import java.time.Instant
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, RddRelation, Row, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.model.CrawlSpec
 import graft.rfc2616.Freshness
-import graft.state.StateStore
+import graft.state.{Kept, StateStore}
 import graft.url.UrlOps
 
 /** The crawl engine: Geziyor's whole goroutine pipeline re-expressed as a
@@ -45,11 +43,12 @@ import graft.url.UrlOps
   *    (syncOrder=false) no per-wave window ever ranks an unbounded input
   *    on a single partition;
   *  - robots rules and the cookie jar are one row per host → broadcast;
-  *  - per-wave checkpoints truncate lineage so plan analysis stays O(1)
-  *    in wave count (on a cluster: reliable checkpoint / state table);
-  *  - the loop's bookkeeping counts are counted by the jobs that
-  *    materialize its checkpoints ([[WaveState.materialize]]), never asked
-  *    for by a job of their own: the frontier's size, its rows of hosts
+  *  - state that outlives its wave is [[graft.state.Kept]], which cuts
+  *    lineage so plan analysis stays O(1) in wave count (on a cluster:
+  *    reliable checkpoint / state table);
+  *  - the loop's bookkeeping counts are counted by the jobs that fill its
+  *    kept snapshots ([[graft.state.Kept.fill]]), never asked for by a
+  *    job of their own: the frontier's size, its rows of hosts
   *    without robots rules and its waves ride the frontier checkpoint, the
   *    dispatched rows and their per-partition lineage the dispatch
   *    checkpoint, each redirect hop's follow-up rows and Set-Cookie rows
@@ -216,14 +215,14 @@ object CrawlJob {
           if (waveCap >= Int.MaxValue) (hostGranted, hostDeferred)
           else st.capWave(hostGranted, hostDeferred, waveCap)
         // a top-k's outputs are read by several stages: kept for the wave.
-        // An uncapped wave's are the checkpointed frontier and an empty
-        // frame already.
+        // An uncapped wave's are the kept frontier and an empty frame
+        // already.
         val ranked =
           if (hostCapped || waveCap < Int.MaxValue)
-            Seq(st.keep(granted0), st.keep(deferred0))
+            Seq(Kept(granted0), Kept(deferred0))
           else Nil
         val Seq(granted, deferred) =
-          if (ranked.isEmpty) Seq(granted0, deferred0) else ranked.map(_._1)
+          if (ranked.isEmpty) Seq(granted0, deferred0) else ranked.map(_.df)
 
         st.stage("robots")
         // granted ⊆ frontier: a frontier whose hosts all have rules grants
@@ -281,28 +280,23 @@ object CrawlJob {
 
         st.stage("account")
         st.account(frontierF)
-        ranked.foreach(_._2.unpersist())
+        ranked.foreach(_.rdd.unpersist())
         stateDir.foreach(st.commit(_, seenInc))
         st.wave += 1
       }
     }
 
-    // single final materialization of the accumulated outputs; the kept
-    // relations they were computed from are released like checkpoints, by
-    // Spark's cleaner once unreferenced (`seen` still reads some of them)
+    // the outputs are materialized when returned: one job fills the
+    // increments no wave has read, so none holds the kept relations it was
+    // computed from (`parsed`, `pending`, `candNew`)
     st.stage("fold")
-    st.records = st.records.localCheckpoint(true)
-    locally {
-      val a = st.audit.localCheckpoint(true) // action outside the lock
-      st.metricsBuf.synchronized { st.audit = a }
-    }
-    st.order = st.order.localCheckpoint(true)
+    Kept.fill(st.records, st.audit, st.order, st.seen)
 
     import spark.implicits._
     val metrics = st.liveMetrics()
     val lineage = st.lineageBuf.toSeq.toDF("wave", "partition_id", "n_rows")
-    CrawlResult(st.records, st.audit, st.seen, st.order, metrics, lineage,
-      st.wave)
+    CrawlResult(st.records.df, st.audit.df, st.seen.df, st.order.df, metrics,
+      lineage, st.wave)
     } finally {
       st.sketch.close()
       metricsServer.foreach(_.stop())
@@ -315,6 +309,24 @@ object CrawlJob {
     * stages. UDF bodies below capture only local vals: a closure over a
     * field would drag this (unserializable) holder into every task.
     *
+    * Every table that outlives the stage computing it is [[Kept]], in one
+    * of two forms:
+    *  - snapshots, replaced each wave: the frontier, the dispatched
+    *    requests, each redirect hop's join, the robots new-host rows and
+    *    their rules, the parse output, the new urls (`candNew`), the AIMD
+    *    caps, the trap counts and the cookie jar. A snapshot whose count
+    *    the loop reads is filled by the one job that counts it;
+    *  - accumulators, grown by one kept increment a wave: `seen`,
+    *    `records`, `audit`, `order` and the robots rules. Each is one leaf
+    *    relation however many waves it holds; the final fold fills the
+    *    increments no wave has read.
+    *
+    * One release rule: kept rows go when nothing references them, by
+    * Spark's cleaner. The exception is a capped wave's granted and deferred
+    * frames, which are as large as the frontier and are unpersisted as the
+    * wave ends, so everything read from them is filled within the wave.
+    * The exception stays: the cleaner would free them only at the next GC.
+    *
     * Plans stay the same from wave to wave, so a settled wave generates
     * the code of the wave before it and compiles nothing:
     *  - no per-wave plan inlines a driver value that changes from wave to
@@ -325,9 +337,9 @@ object CrawlJob {
     *    deferred, requeued and discovered rows all take their parent's
     *    `wave` + 1), so rows derived from the frontier carry their wave in
     *    that column; the frontier checkpoint checks it at no extra job;
-    *  - growing state (`seen`) is one relation of fixed plan shape, and
-    *    stages read kept relations ([[keep]]) rather than persists, whose
-    *    scans each compile their own columnar reader.
+    *  - growing state is one relation of fixed plan shape, and stages
+    *    read kept relations rather than persists, whose scans each compile
+    *    their own columnar reader.
     */
   private final class WaveState(spark: SparkSession, spec: CrawlSpec,
       pages: DataFrame, cacheDf: Option[DataFrame], sideEc: ExecutionContext) {
@@ -374,9 +386,6 @@ object CrawlJob {
       .toDF("wave", "rank", "seq", "json")
     private val emptyOrder =
       Seq.empty[(Int, Long, String)].toDF("wave", "rank", "url")
-    private val emptyRules =
-      Seq.empty[(String, Seq[RobotsRules.Rule], Option[Double])]
-        .toDF("r_host", "rules", "crawl_delay")
     // RFC 6265 jar keyed by (domain, name, path); c_domain is the Domain
     // attribute, or the response host when absent (c_hostonly);
     // c_expires = -1 for a session cookie
@@ -393,20 +402,22 @@ object CrawlJob {
     // ---- crawl state ----------------------------------------------------
     var wave = 0
     var frontier: DataFrame = emptyFrontier
-    // observed by the frontier's checkpoint: its rows, and its rows whose
-    // host has no robots rules yet
+    // counted by the frontier's fill: its rows, and its rows whose host has
+    // no robots rules yet
     var frontierN = 0L
     var frontierUnruled = 0L
-    // the seen table: one relation over the checkpointed increments
-    private val seenRel = new graft.state.SeenSet.Relation(spark)
-    def seen: DataFrame = seenRel.df
-    var records: DataFrame = emptyRecords
-    var audit: DataFrame = emptyAudit
-    var order: DataFrame = emptyOrder
-    private var robotRules = emptyRules // (r_host, rules) for hosts seen so far
-    // robotRules' hosts, driver-side (broadcast to the frontier checkpoint)
+    // accumulators
+    val seen = new Kept.Accumulator(Seq.empty[String].toDF("url"))
+    val records = new Kept.Accumulator(emptyRecords)
+    // read by metrics scrapes: added to under the metricsBuf lock
+    val audit = new Kept.Accumulator(emptyAudit)
+    val order = new Kept.Accumulator(emptyOrder)
+    // the rules of every host seen so far
+    private val robotRules = new Kept.Accumulator(
+      Seq.empty[(String, Seq[RobotsRules.Rule], Option[Double])]
+        .toDF("r_host", "rules", "crawl_delay"))
+    // robotRules' hosts, driver-side (broadcast to the frontier's fill)
     private var ruledHosts = Set.empty[String]
-    private var rulesDeltas = 0 // non-empty robots deltas since last compaction
     private var cookieJar = emptyCookies // accumulated Set-Cookies
     var cookieJarNonEmpty = false
     // jar-shape flags: the common all-host-only jar never builds the
@@ -436,10 +447,10 @@ object CrawlJob {
     def stage(name: String): Unit =
       spark.sparkContext.setJobDescription(s"wave=$wave stage=$name")
 
-    /** Checkpoint the frontier of wave `w`. The job that materializes it
-      * counts its rows, its rows whose host has no robots rules yet and its
-      * rows whose `wave` is not `w`, which fail the crawl. Returns
-      * (frontier, rows, unruled rows).
+    /** Keep the frontier of wave `w`. The job that fills it counts its
+      * rows, its rows whose host has no robots rules yet and its rows whose
+      * `wave` is not `w`, which fail the crawl. Returns (frontier, rows,
+      * unruled rows).
       */
     def checkpointFrontier(df: DataFrame, w: Int): (DataFrame, Long, Long) = {
       val ruled = spark.sparkContext.broadcast(ruledHosts)
@@ -447,7 +458,7 @@ object CrawlJob {
       val waveAt = df.schema.fieldIndex("wave")
       try {
         // per partition: rows, unruled rows, rows of another wave
-        val (cp, parts) = materialize(df) { rows =>
+        val (cp, parts) = Kept(df).fill { rows =>
           var n, unruled, foreign = 0L
           rows.foreach { r =>
             n += 1
@@ -465,30 +476,6 @@ object CrawlJob {
       } finally ruled.destroy()
     }
 
-    /** `df`'s rows as ONE leaf relation over an RDD-level local checkpoint,
-      * computed by the first job that reads them. Unlike a persist, a scan
-      * of it compiles no columnar reader and no batch filter, and AQE starts
-      * no job to fill it; unlike `Dataset.localCheckpoint`, it carries no
-      * constraints of `df`'s plan. Planning runs `df`'s exchanges (AQE).
-      */
-    def keep(df: DataFrame): (DataFrame, RDD[InternalRow]) = {
-      val qe = df.queryExecution
-      val rows = qe.toRdd.map(_.copy()).localCheckpoint()
-      (RddRelation(spark, qe.analyzed.output.map(_.newInstance()), rows,
-        qe.optimizedPlan.stats.sizeInBytes), rows)
-    }
-
-    /** [[keep]], filled now by ONE job that also returns `f` of each
-      * partition's rows: a checkpoint that observes its own rows.
-      */
-    def materialize[A: scala.reflect.ClassTag](df: DataFrame)(
-        f: Iterator[InternalRow] => A): (DataFrame, Array[A]) = {
-      val (rel, rows) = keep(df)
-      // an empty plan may have no partition: no job to run
-      (rel, if (rows.partitions.isEmpty) Array.empty[A]
-        else spark.sparkContext.runJob(rows, f))
-    }
-
     def adoptFrontier(f: (DataFrame, Long, Long)): Unit = {
       frontier = f._1
       frontierN = f._2
@@ -499,13 +486,22 @@ object CrawlJob {
     private def waveNowEpoch: Long =
       spec.cacheNowEpochSec + wave.toLong * spec.waveIntervalMs / 1000L
 
-    private def refreshJarFlags(): Unit = {
-      val s = cookieJar.filter(!col("c_hostonly"))
-        .agg(count(lit(1)),
-          count(when(size(split(col("c_domain"), "\\.")) < 2, 1)))
-        .head()
-      jarHasDomainCk = s.getLong(0) > 0
-      jarHasTldCk = s.getLong(1) > 0
+    /** Keep `jar` as the cookie jar; the job that fills it sets the
+      * jar-shape flags. Returns its rows.
+      */
+    private def adoptJar(jar: DataFrame): Long = {
+      val hostOnlyAt = jar.schema.fieldIndex("c_hostonly")
+      val domainAt = jar.schema.fieldIndex("c_domain")
+      // per partition: rows, Domain-attribute cookies, single-label ones
+      val (kept, parts) = Kept(jar).fill(_.foldLeft((0L, 0L, 0L)) {
+        case ((n, dom, tld), r) if r.getBoolean(hostOnlyAt) => (n + 1, dom, tld)
+        case ((n, dom, tld), r) => (n + 1, dom + 1, tld + (if (r.isNullAt(domainAt) ||
+          r.getUTF8String(domainAt).toString.contains('.')) 0 else 1))
+      })
+      cookieJar = kept
+      jarHasDomainCk = parts.exists(_._2 > 0)
+      jarHasTldCk = parts.exists(_._3 > 0)
+      parts.map(_._1).sum
     }
 
     // live counter snapshot, per scrape (metrics/metrics.go:100-115) and
@@ -513,7 +509,7 @@ object CrawlJob {
     // snapshot `audit` and the buffer under the metricsBuf lock.
     def liveMetrics(): DataFrame = {
       val (auditSnap, bufSnap) = metricsBuf.synchronized {
-        (audit, metricsBuf.toList)
+        (audit.df, metricsBuf.toList)
       }
       val auditMetrics = auditSnap
         .groupBy(col("wave"), col("kind").as("metric"))
@@ -524,7 +520,6 @@ object CrawlJob {
     // ---- resume / cold start ---------------------------------------------
     def resume(dir: String, w: Int): Unit = {
       frontier = StateStore.read(spark, dir, w, "frontier")
-      robotRules = StateStore.read(spark, dir, w, "robot_rules")
       // accumulators resume as the union of committed per-wave deltas
       val seenDeltas = StateStore.readDeltas(spark, dir, "seen", w)
       // legacy pre-delta layout: resuming would silently lose the seen
@@ -536,32 +531,31 @@ object CrawlJob {
             "resuming would silently lose the seen set and all records — " +
             "re-run the crawl from scratch or migrate the checkpoint " +
             "(copy wave=N/<table> to delta/<table>/wave=N)")
-      seenDeltas.foreach(seenRel.add)
-      records = StateStore.readDeltas(spark, dir, "records", w)
-        .getOrElse(emptyRecords)
-      audit = StateStore.readDeltas(spark, dir, "audit", w)
-        .getOrElse(emptyAudit)
-      order = StateStore.readDeltas(spark, dir, "crawl_order", w)
-        .getOrElse(emptyOrder)
+      seenDeltas.foreach(seen.add)
+      robotRules.add(StateStore.read(spark, dir, w, "robot_rules"))
+      StateStore.readDeltas(spark, dir, "records", w).foreach(records.add)
+      StateStore.readDeltas(spark, dir, "audit", w).foreach(audit.add)
+      StateStore.readDeltas(spark, dir, "crawl_order", w).foreach(order.add)
+      StateStore.readDeltas(spark, dir, "metrics", w).foreach(m =>
+        metricsBuf ++= m.as[(Int, String, Long)].collect())
       if (StateStore.hasTable(dir, w, "cookies")) {
-        cookieJar = StateStore.read(spark, dir, w, "cookies")
-        if (!cookieJar.columns.contains("c_name") ||
-            !cookieJar.columns.contains("c_path") ||
-            !cookieJar.columns.contains("c_domain"))
+        val jar = StateStore.read(spark, dir, w, "cookies")
+        if (!jar.columns.contains("c_name") ||
+            !jar.columns.contains("c_path") ||
+            !jar.columns.contains("c_domain"))
           throw new IllegalStateException(
             s"checkpoint at $dir wave=$w has a legacy cookies snapshot " +
               "(pre-RFC6265 jar without (host, name, path) keys); " +
               "resuming would fail downstream — restart the crawl or " +
               "migrate the snapshot")
-        cookieJarNonEmpty = !cookieJar.isEmpty
-        if (cookieJarNonEmpty) refreshJarFlags()
+        cookieJarNonEmpty = adoptJar(jar) > 0
       }
       if (StateStore.hasTable(dir, w, "host_caps"))
         hostCaps = Some(StateStore.read(spark, dir, w, "host_caps"))
       if (StateStore.hasTable(dir, w, "trap_counts"))
         trapCounts = Some(StateStore.read(spark, dir, w, "trap_counts"))
       if (!spec.robotsTxtDisabled)
-        ruledHosts = robotRules.select(col("r_host"))
+        ruledHosts = robotRules.df.select(col("r_host"))
           .filter(col("r_host").isNotNull).as[String].collect().toSet
       wave = w + 1
       adoptFrontier(checkpointFrontier(frontier, wave))
@@ -624,10 +618,9 @@ object CrawlJob {
         seedsAllowed.filter(col("method") === "GET")
           .dropDuplicates("url")
           .unionByName(seedsAllowed.filter(col("method") =!= "GET")), 0))
-      // the checkpointed frontier's GETs are the deduped seeds
-      val seeds = frontier.filter(col("method") === "GET").select(col("url"))
-      seenRel.add(seeds)
-      coldSeedSeen = Some(seeds)
+      // the kept frontier's GETs are the deduped seeds
+      coldSeedSeen = Some(seen.add(
+        frontier.filter(col("method") === "GET").select(col("url"))))
     }
 
     // ---- gate ------------------------------------------------------------
@@ -642,7 +635,7 @@ object CrawlJob {
       * lazily, so a host's FIRST wave runs uncapped, like the reference.
       */
     def crawlDelayCap(req: DataFrame): DataFrame = req
-      .join(broadcast(robotRules.select(col("r_host"), col("crawl_delay"))),
+      .join(broadcast(robotRules.df.select(col("r_host"), col("crawl_delay"))),
         col("host") === col("r_host"), "left")
       .withColumn("hcap",
         least(lit(spec.hostTokensPerWave.toLong),
@@ -706,14 +699,14 @@ object CrawlJob {
         .agg(min_by(
           regexp_extract(col("url"), "^([A-Za-z][A-Za-z0-9+.-]*)://", 1),
           col("rank")).as("scheme"), min(col("wave")).as("wave"))
-        .join(robotRules, col("host") === col("r_host"), "left_anti")
+        .join(robotRules.df, col("host") === col("r_host"), "left_anti")
         .withColumn("robots_url",
           concat(when(col("scheme") === "", "http").otherwise(col("scheme")),
             lit("://"), col("host"), lit("/robots.txt")))
       // the tiny new-host set first, its hosts listed by the job that
-      // materializes it: a wave with no new host skips the corpus scan
+      // fills it: a wave with no new host skips the corpus scan
       val hostAt = newHosts.schema.fieldIndex("host")
-      val (newHostsM, parts) = materialize(newHosts)(_.map(r =>
+      val (newHostsM, parts) = Kept(newHosts).fill(_.map(r =>
         if (r.isNullAt(hostAt)) null else r.getUTF8String(hostAt).toString
       ).toVector)
       val newHostList = parts.toSeq.flatten
@@ -735,9 +728,8 @@ object CrawlJob {
           if (b == null) ""
           else new String(b, java.nio.charset.StandardCharsets.UTF_8),
           specUa))
-      // ONE tiny materialization feeds the rules-cache delta, the counter
-      // rows and (with sitemap discovery) the Sitemap: pointers; the rules
-      // cache compacts every 8th delta (plan-width bound)
+      // ONE tiny kept table feeds the rules increment, the counter rows
+      // and (with sitemap discovery) the Sitemap: pointers
       val smPtrsU = udf((status: java.lang.Integer, b: Array[Byte]) =>
         if (status == null || status.intValue() < 200 ||
             status.intValue() >= 300 || b == null) Seq.empty[String]
@@ -747,13 +739,12 @@ object CrawlJob {
         if (spec.sitemapDiscovery)
           Seq(smPtrsU(col("r_status"), col("r_body")).as("sitemap_ptrs"))
         else Nil
-      val newRulesFull = newHostsM
+      val newRulesFull = Kept(newHostsM
         .join(broadcast(hits), col("host") === col("h_hit"), "left")
         .withColumn("g", parseRobotsU(col("r_status"), col("r_body")))
         .select(Seq(col("wave"), col("host"), col("robots_url"), col("r_status"),
           col("g.rules").as("rules"),
-          col("g.crawlDelay").as("crawl_delay")) ++ smCol: _*)
-        .localCheckpoint(true)
+          col("g.crawlDelay").as("crawl_delay")) ++ smCol: _*)).df
       // counter parity (metrics/metrics.go:31-33): one request row per new
       // host, one response row per robots.txt served
       auditInc += auditRows(newRulesFull, "robots_request",
@@ -761,12 +752,9 @@ object CrawlJob {
       auditInc += auditRows(newRulesFull.filter(col("r_status").isNotNull),
         "robots_response", status = col("r_status"), method = lit("GET"),
         url = col("robots_url"))
-      robotRules = robotRules.union(newRulesFull
+      robotRules.add(newRulesFull
         .select(col("host").as("r_host"), col("rules"), col("crawl_delay")))
       ruledHosts ++= newHostList.filter(_ != null)
-      rulesDeltas += 1
-      if (rulesDeltas % 8 == 0)
-        robotRules = robotRules.localCheckpoint(true)
       Some(newRulesFull)
     }
 
@@ -807,7 +795,7 @@ object CrawlJob {
       val isBlocked = udf((path: String, rules: Seq[Row]) =>
         rules != null && rules.nonEmpty &&
           !RobotsRules.allowedRows(path, rules))
-      val j = granted.join(broadcast(robotRules),
+      val j = granted.join(broadcast(robotRules.df),
         col("host") === col("r_host"), "left")
       val blocked = j.filter(!col("is_retry") &&
           isBlocked(col("path"), col("rules")))
@@ -934,16 +922,15 @@ object CrawlJob {
     }
 
     // ---- fetch -----------------------------------------------------------
-    /** Materialize the wave's requests; record the crawl order, the
-      * frontier_size metric and the per-partition lineage. The materializing
-      * job counts each partition's rows. Returns (requests, their count).
+    /** Keep the wave's requests; record the crawl order, the frontier_size
+      * metric and the per-partition lineage. The job that fills them counts
+      * each partition's rows. Returns (requests, their count).
       */
     def dispatch(toFetch: DataFrame): (DataFrame, Long) = {
-      val (pending, parts) = materialize(toFetch
+      val (pending, parts) = Kept(toFetch
         .withColumn("cur_url", col("url")).withColumn("hops", lit(0))
-      )(_.size.toLong)
-      orderInc = pending.select(col("wave"), col("rank"), col("url"))
-      order = order.union(orderInc)
+      ).fill(_.size.toLong)
+      orderInc = order.add(pending.select(col("wave"), col("rank"), col("url")))
       metricsBuf.synchronized {
         metricsBuf += ((wave, "frontier_size", frontierN))
       }
@@ -963,19 +950,16 @@ object CrawlJob {
       var fetched = Option.empty[DataFrame]
       var hop = 0
       while (hop <= spec.maxRedirect && pendingN > 0) {
-        // Materialize the join ONCE per hop; finals and the redirect
-        // continuation are filters over it. The job that materializes it
-        // also counts the next hop's rows and this hop's final rows with a
-        // Set-Cookie. A kept relation, NOT Dataset.localCheckpoint: a
-        // checkpoint's plan constraints under the `fetched` union trip
-        // Catalyst's Union.rewriteConstraints (key-not-found).
+        // Keep the join ONCE per hop; finals and the redirect continuation
+        // are filters over it. The job that fills it also counts the next
+        // hop's rows and this hop's final rows with a Set-Cookie.
         val joined = pending.join(corpus, col("cur_url") === col("p_url"), "left")
           .drop("p_url")
         val statusAt = joined.schema.fieldIndex("p_status")
         val locAt = joined.schema.fieldIndex("p_loc")
         val setckAt = joined.schema.fieldIndex("p_setck")
         val lastHop = hop == spec.maxRedirect
-        val (j, counts) = materialize(joined) { rows =>
+        val (j, counts) = Kept(joined).fill { rows =>
           var redirects, setCookies = 0L
           rows.foreach { r =>
             val redir = !r.isNullAt(statusAt) && !r.isNullAt(locAt) &&
@@ -1070,7 +1054,8 @@ object CrawlJob {
         overObs.limit(0).select(col("a_host"),
           lit(null).cast("long").as("acap")))
       val init = lit(AdaptiveInitialCap)
-      hostCaps = Some(prev
+      // read from this wave's fetched rows, so filled before the wave ends
+      hostCaps = Some(Kept(prev
         .join(overObs, Seq("a_host"), "full_outer")
         .select(col("a_host"),
           when(col("over") === 1,
@@ -1078,8 +1063,7 @@ object CrawlJob {
               floor(coalesce(col("acap"), init) / 2).cast("long")))
             .when(col("over") === 0,
               least(lit(AdaptiveMaxCap), coalesce(col("acap"), init) + 2))
-            .otherwise(col("acap")).as("acap"))
-        .localCheckpoint(true))
+            .otherwise(col("acap")).as("acap"))).fill(_ => ())._1)
     }
 
     /** Accumulate Set-Cookie responses (RFC 6265, client/client.go:
@@ -1113,9 +1097,10 @@ object CrawlJob {
           .filter(col("rn") === 1 && !col("c_remove") &&
             liveU(col("c_expires")))
           .drop("rn", "c_remove")
-        cookieJar = merged.localCheckpoint(true)
+        adoptJar(merged)
+        // the jar stays applied even once empty: it strips a cookie header
+        // that requests inherit from their parent
         cookieJarNonEmpty = true
-        refreshJarFlags()
       }
     }
 
@@ -1290,13 +1275,12 @@ object CrawlJob {
         }
         .toDF("url", "host", "depth", "meta", "wave", "rank", "parser_id",
           "records", "links", "parse_error")
-      val parsed = keep(parsedRows)._1
+      val parsed = Kept(parsedRows).df
       auditInc += auditRows(parsed.filter(col("parse_error").isNotNull),
         "parse_error", method = lit("GET"), detail = col("parse_error"))
-      recordsInc = parsed
+      recordsInc = records.add(parsed
         .select(col("wave"), col("rank"),
-          posexplode(col("records")).as(Seq("seq", "json")))
-      records = records.union(recordsInc)
+          posexplode(col("records")).as(Seq("seq", "json"))))
       parsed
     }
 
@@ -1327,7 +1311,8 @@ object CrawlJob {
     // ---- dedup -----------------------------------------------------------
     /** Intra-wave first-wins dedup (duplicate_requests.go:18), then the
       * seen-set anti-join (bloomDedup: Bloom prefilter first;
-      * URLRevisitEnabled: none). Checkpointed once for both consumers.
+      * URLRevisitEnabled: none). Kept and filled once for its consumers,
+      * by the job that counts its rows for the Bloom merge.
       */
     def dedup(cand: DataFrame): DataFrame = {
       val dw = Window.partitionBy(col("url"))
@@ -1335,15 +1320,13 @@ object CrawlJob {
       val candDeduped = cand
         .withColumn("rn", row_number().over(dw))
         .filter(col("rn") === 1).drop("rn")
-      val candNew = {
-        val cn =
-          if (spec.urlRevisitEnabled) candDeduped
-          else if (spec.bloomDedup) sketch.filterNew(candDeduped, seen)
-          else candDeduped.join(seen, Seq("url"), "left_anti")
-        cn.localCheckpoint(true)
-      }
-      // candNew is materialized, so no job still reads the old broadcast
-      sketch.mergeIncrement(candNew.select(col("url")))
+      val (candNew, rows) = Kept(
+        if (spec.urlRevisitEnabled) candDeduped
+        else if (spec.bloomDedup) sketch.filterNew(candDeduped, seen.df)
+        else candDeduped.join(seen.df, Seq("url"), "left_anti")
+      ).fill(_.size.toLong)
+      // candNew is filled, so no job still reads the old broadcast
+      sketch.mergeIncrement(candNew.select(col("url")), rows.sum)
       candNew
     }
 
@@ -1382,12 +1365,12 @@ object CrawlJob {
         detail = col("template"))
       val newCounts = granted.groupBy(col("host"), col("template"))
         .agg(count(lit(1)).as("n_inc"))
-      trapCounts = Some(counts
+      // filled by the next wave's (or the commit's) first read
+      trapCounts = Some(Kept(counts
         .join(newCounts, Seq("host", "template"), "full_outer")
         .select(col("host"), col("template"),
           (coalesce(col("n_prev"), lit(0L)) +
-            coalesce(col("n_inc"), lit(0L))).as("n_prev"))
-        .localCheckpoint(true))
+            coalesce(col("n_inc"), lit(0L))).as("n_prev"))).df)
       granted.drop("template", "n_prev")
     }
 
@@ -1412,13 +1395,10 @@ object CrawlJob {
           col("link_pos").cast("long").as("ord_b"))
 
       // candNew is unique and anti-joined against seen: no distinct needed
-      val seenInc = coldSeedSeen match {
-        case Some(seeds) =>
-          coldSeedSeen = None // seeds belong to the FIRST committed delta
-          seeds.union(candNew.select(col("url")))
-        case None => candNew.select(col("url"))
-      }
-      seenRel.add(candNew)
+      val newSeen = seen.add(candNew.select(col("url")))
+      // seeds belong to the FIRST committed delta
+      val seenInc = coldSeedSeen.fold(newSeen)(_.union(newSeen))
+      coldSeedSeen = None
       val assembled = deferred.withColumn("wave", col("wave") + 1)
         .withColumn("grp", lit(0))
         .withColumn("ord_a", col("rank")).withColumn("ord_b", lit(0L))
@@ -1441,43 +1421,48 @@ object CrawlJob {
     }
 
     // ---- account ---------------------------------------------------------
-    /** Fold the wave's audit increment (with logDisabled, its crawled
-      * rows become the crawled metric, counted by the fold's own job), then
-      * take the next frontier from its side job.
+    /** Append the wave's audit increment (with logDisabled, its crawled
+      * rows become the crawled metric, counted by the job that fills it),
+      * then take the next frontier from its side job.
       */
     def account(frontierF: Future[(DataFrame, Long, Long)]): Unit = {
-      // Column names normalized for the delta parquet; materialized NOW,
-      // while granted is still cached.
+      // Column names normalized for the delta parquet; filled NOW, while
+      // granted is still kept.
       val raw = auditInc.reduce(_ union _).toDF(emptyAudit.columns: _*)
       val crawledKind = org.apache.spark.unsafe.types.UTF8String
         .fromString("crawled")
       // small waves collapse the branches into 4 tasks
-      val (inc, crawled) = materialize(
-        if (frontierN < 100000L) raw.coalesce(4) else raw)(
-        _.count(_.getUTF8String(1) == crawledKind).toLong)
-      auditIncDf =
-        if (spec.logDisabled) inc.filter(col("kind") =!= "crawled") else inc
+      val inc = Kept(if (frontierN < 100000L) raw.coalesce(4) else raw)
+      val crawled =
+        inc.fill(_.count(_.getUTF8String(1) == crawledKind).toLong)._2.sum
+      val kept =
+        if (spec.logDisabled) Kept(inc.df.filter(col("kind") =!= "crawled"))
+        else inc
       metricsBuf.synchronized {
-        audit = audit.union(auditIncDf)
-        if (spec.logDisabled) metricsBuf += ((wave, "crawled", crawled.sum))
+        auditIncDf = audit.add(kept)
+        if (spec.logDisabled) metricsBuf += ((wave, "crawled", crawled))
       }
       adoptFrontier(Await.result(frontierF, Duration.Inf))
     }
 
     /** Snapshot tables are rewritten whole; accumulators commit only this
       * wave's increment (StateStore scaladoc). The AIMD caps and the trap
-      * counts are snapshots too, once their feature has started them.
+      * counts are snapshots too, once their feature has started them; the
+      * wave's counters not derived from the audit are a delta.
       */
     def commit(dir: String, seenInc: DataFrame): Unit =
       StateStore.commitWave(dir, wave,
         snapshots = Map(
           "frontier" -> frontier,
-          "robot_rules" -> robotRules, "cookies" -> cookieJar) ++
+          "robot_rules" -> robotRules.df, "cookies" -> cookieJar) ++
           hostCaps.map("host_caps" -> _) ++
           trapCounts.map("trap_counts" -> _),
         deltas = Map(
           "seen" -> seenInc, "records" -> recordsInc,
-          "audit" -> auditIncDf, "crawl_order" -> orderInc))
+          "audit" -> auditIncDf, "crawl_order" -> orderInc,
+          // only this thread appends to metricsBuf
+          "metrics" -> metricsBuf.filter(_._1 == wave).toList
+            .toDF("wave", "metric", "value")))
   }
 
   /** RFC2616 serve decision over the cached entry's headers

@@ -1,12 +1,8 @@
 package graft.state
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, RddRelation}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.AttributeReference
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StringType
 import org.apache.spark.util.sketch.BloomFilter
 
 /** URL-seen dedup at 10^10-URL scale (SURVEY.md §2.2 — the engine's
@@ -87,9 +83,10 @@ object SeenSet {
 
   /** The Bloom prefilter of one crawl or one stream, from bootstrap to
     * release. Call `filterNew` with each wave's candidates and the current
-    * seen table, `mergeIncrement` with the wave's materialized new urls, and
-    * `close` at the end. It holds exactly one live broadcast: every change
-    * to the filter destroys the broadcast before publishing the next one.
+    * seen table, `mergeIncrement` with the wave's materialized new urls and
+    * their count, and `close` at the end. It holds exactly one live
+    * broadcast: every change to the filter destroys the broadcast before
+    * publishing the next one.
     * Not thread-safe; one loop drives it.
     */
   final class Sketch {
@@ -116,11 +113,13 @@ object SeenSet {
     }
 
     /** OR the increment's urls into the filter — O(|increment|), never
-      * rescans the accumulated seen set. A no-op until bootstrapped, so a
-      * loop may call it whether or not it probes.
+      * rescans the accumulated seen set. `rows` is the increment's row
+      * count, which the caller already has (asked for only once the filter
+      * is bootstrapped). A no-op until bootstrapped, so a loop may call it
+      * whether or not it probes.
       */
-    def mergeIncrement(inc: DataFrame): Unit = if (bloom != null) {
-      val n = inc.count()
+    def mergeIncrement(inc: DataFrame, rows: => Long): Unit = if (bloom != null) {
+      val n = rows
       if (n > 0) {
         bloom.mergeInPlace(inc.stat.bloomFilter("url", capacity, Fpp))
         seenCount += n
@@ -152,35 +151,6 @@ object SeenSet {
       if (bc != null) bc.destroy()
       bc = df.sparkSession.sparkContext.broadcast(bloom)
     }
-  }
-
-  /** The seen table of one crawl as ONE relation over its increments:
-    * their url rows are unioned at the RDD level, so every plan that reads
-    * the table (the dedup anti-join, the Bloom build) has the same shape
-    * however many waves it holds, and no job ever compacts it. Each
-    * increment is computed once, by the first job that reads it, and kept
-    * (RDD localCheckpoint); building the relation runs no job.
-    */
-  final class Relation(spark: org.apache.spark.sql.SparkSession) {
-    private var parts = Vector.empty[RDD[InternalRow]]
-    private var sizeInBytes = BigInt(0)
-    private var current = build()
-
-    /** The urls of every increment added so far (one `url` column). */
-    def df: DataFrame = current
-
-    /** Append the urls of `inc` (a frame with a `url` column). */
-    def add(inc: DataFrame): Unit = {
-      val qe = inc.select(col("url")).queryExecution
-      parts :+= qe.toRdd.map(_.copy()).localCheckpoint()
-      // the union's estimate, as Spark would sum it for a Union plan
-      sizeInBytes += qe.optimizedPlan.stats.sizeInBytes
-      current = build()
-    }
-
-    private def build(): DataFrame =
-      RddRelation(spark, Seq(AttributeReference("url", StringType)()),
-        spark.sparkContext.union(parts), sizeInBytes.max(1))
   }
 
   // ---- cuckoo variant ----------------------------------------------------

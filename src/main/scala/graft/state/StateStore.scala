@@ -14,7 +14,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    trap_counts): current-state tables rewritten whole per wave at
   *    `{dir}/wave={N}/{table}` — they are bounded by the live frontier /
   *    host / template count, not crawl history.
-  *  - DELTA tables (records, audit, crawl_order, seen): append-only
+  *  - DELTA tables (records, audit, crawl_order, seen, metrics): append-only
   *    accumulators. Each wave commits ONLY its own increment under
   *    `{dir}/delta/{table}/wave={N}`; a reader unions the committed
   *    increments. Rewriting the full accumulation per wave would be

@@ -84,7 +84,7 @@ object StreamingCrawl {
         try {
           sinks.foreach(_(fetched))
           fresh.write.mode("append").parquet(seenTablePath)
-          sketch.mergeIncrement(fresh)
+          sketch.mergeIncrement(fresh, fresh.count())
         } finally { fetched.unpersist(); fresh.unpersist() }
         ()
       }

@@ -12,7 +12,8 @@ class CrawlJobSpec extends AnyFunSuite {
     // 40-wave chain crawl: page i links only to page i+1. A union of the
     // per-wave increments would be a 40-way union through every wave's
     // anti-join analysis, and would shift the anti-join's codegen stage
-    // ids every wave; `seen` is one leaf over their RDD-level union.
+    // ids every wave; `seen` is one leaf over their RDD-level union, and so
+    // are the records, the audit and the crawl order.
     val chain = (0 until 45).map { i =>
       val html =
         s"""<html><body><a href="/p/${i + 1}">n</a></body></html>"""
@@ -30,8 +31,11 @@ class CrawlJobSpec extends AnyFunSuite {
       plan.collect {
         case u: org.apache.spark.sql.catalyst.plans.logical.Union => u
       }.map(_.children.size).sum
-    val width = countUnions(res.seen.queryExecution.logical)
-    assert(width == 0, s"seen is a union of $width plans")
+    Seq("seen" -> res.seen, "records" -> res.records, "audit" -> res.audit,
+        "crawlOrder" -> res.crawlOrder).foreach { case (name, df) =>
+      val width = countUnions(df.queryExecution.logical)
+      assert(width == 0, s"$name is a union of $width plans")
+    }
   }
 
   private lazy val spark = SparkTestBase.spark
@@ -301,27 +305,24 @@ class CrawlJobSpec extends AnyFunSuite {
     assert(auditKinds(res)("fetch_miss") == 1)
   }
 
-  test("job-count guard: the flagship quotes crawl starts no more Spark jobs") {
-    // Ceiling = the count measured as below (local[4], AQE on, the fixture
-    // corpus already cached) once the wave loop's checkpoints became kept
-    // relations filled by one counting job each: 128 jobs, the same in
-    // separate JVMs (307, then 190 before). A change that cuts jobs lowers
-    // it; nothing may raise it.
-    val FlagshipJobCeiling = 128
-    val spec = CrawlSpec(startUrls = Seq(SiteFixtures.QuotesBase),
-      parserId = "quotes", syncOrder = true, maxWaves = 20)
+  /** Runs `spec` over the fixture corpus and returns its result, each of
+    * its jobs (description, call sites of its stages) and its Dataset
+    * actions. The action listener is shown to be live: an action run on the
+    * result while it is registered reaches it.
+    */
+  private def crawlJobs(spec: CrawlSpec)
+      : (CrawlJob.CrawlResult, Seq[(String, Seq[String])], Seq[String]) = {
     pagesDf.count()
     val sc = spark.sparkContext
     org.apache.spark.SparkTestBus.drain(sc)
-    // each job's description; each Dataset action's name
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Seq[String])]
     val actions = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.add(Option(e.properties)
+        jobs.add((Option(e.properties)
           .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse(""))
+          .getOrElse(""), e.stageInfos.map(_.name)))
     }
     val actionListener = new org.apache.spark.sql.util.QueryExecutionListener {
       def onSuccess(action: String,
@@ -332,33 +333,75 @@ class CrawlJobSpec extends AnyFunSuite {
     }
     sc.addSparkListener(listener)
     spark.listenerManager.register(actionListener)
-    val res = try {
-      val r = CrawlJob.run(spark, spec, pagesDf)
+    try {
+      val res = CrawlJob.run(spark, spec, pagesDf)
       org.apache.spark.SparkTestBus.drain(sc)
-      r
+      val crawlJobs = jobs.toArray(Array.empty[(String, Seq[String])]).toSeq
+      val crawlActions = actions.toArray(Array.empty[String]).toSeq
+      res.crawlOrder.collect()
+      org.apache.spark.SparkTestBus.drain(sc)
+      assert(actions.toArray(Array.empty[String]).toSeq ==
+        crawlActions :+ "collect", "the action listener missed an action")
+      (res, crawlJobs, crawlActions)
     } finally {
       sc.removeSparkListener(listener)
       spark.listenerManager.unregister(actionListener)
     }
-    assert(res.waves == 10)
-    val all = jobs.toArray(Array.empty[String]).toSeq
-    assert(all.size <= FlagshipJobCeiling,
-      s"the flagship crawl started ${all.size} Spark jobs, " +
-        s"ceiling $FlagshipJobCeiling")
-    // every job is labelled with its wave and stage, side thread included
+  }
+
+  /** Every job is labelled with its wave and stage, side thread included,
+    * and none is a `Dataset.localCheckpoint`: kept tables are filled by
+    * jobs of their own. Returns the (wave, stage) labels.
+    */
+  private def labels(jobs: Seq[(String, Seq[String])]): Seq[(Int, String)] = {
+    val checkpoints = jobs.filter(_._2.exists(_.startsWith("localCheckpoint at")))
+    assert(checkpoints.isEmpty, checkpoints)
     val Label = """wave=(\d+) stage=(\w+)""".r
-    val labelled = all.map {
-      case Label(w, stage) => (w.toInt, stage)
-      case d => fail(s"a crawl job has description '$d'")
+    jobs.map {
+      case (Label(w, stage), _) => (w.toInt, stage)
+      case (d, _) => fail(s"a crawl job has description '$d'")
     }
+  }
+
+  test("job-count guard: the flagship quotes crawl starts no more Spark jobs") {
+    // Ceiling = the count measured as below (local[4], AQE on, the fixture
+    // corpus already cached) once every table kept across waves went
+    // through one primitive (graft.state.Kept) and the final fold became
+    // one job: 125 jobs, the same in separate JVMs (307, 190, then 128
+    // before). A change that cuts jobs lowers it; nothing may raise it.
+    val FlagshipJobCeiling = 125
+    val spec = CrawlSpec(startUrls = Seq(SiteFixtures.QuotesBase),
+      parserId = "quotes", syncOrder = true, maxWaves = 20)
+    val (res, jobs, actions) = crawlJobs(spec)
+    assert(res.waves == 10)
+    assert(jobs.size <= FlagshipJobCeiling,
+      s"the flagship crawl started ${jobs.size} Spark jobs, " +
+        s"ceiling $FlagshipJobCeiling")
     // once the seed host has its rules, a wave starts no robots job
-    val settled = labelled.filter { case (w, _) => w >= 1 && w <= 9 }
+    val settled = labels(jobs).filter { case (w, _) => w >= 1 && w <= 9 }
     assert(settled.nonEmpty)
     assert(!settled.exists(_._2 == "robots"), settled.filter(_._2 == "robots"))
-    // and no wave probes a count or an emptiness with an action of its own
-    val names = actions.toArray(Array.empty[String]).toSeq
-    assert(names.contains("localCheckpoint"), names)
-    assert(!names.exists(a => a == "count" || a == "isEmpty"), names)
+    // and no wave probes a count or an emptiness with an action of its
+    // own: the crawl runs no Dataset action at all
+    assert(actions.isEmpty, actions)
+  }
+
+  test("job-count guard: the bloomDedup quotes crawl starts no more Spark jobs") {
+    // Measured as the flagship ceiling: 157 jobs (180 while the Bloom
+    // merge counted each wave's new urls with a job of its own).
+    val BloomJobCeiling = 157
+    val spec = CrawlSpec(startUrls = Seq(SiteFixtures.QuotesBase),
+      parserId = "quotes", syncOrder = true, maxWaves = 20, bloomDedup = true)
+    val (res, jobs, actions) = crawlJobs(spec)
+    assert(res.waves == 10)
+    assert(jobs.size <= BloomJobCeiling,
+      s"the bloomDedup crawl started ${jobs.size} Spark jobs, " +
+        s"ceiling $BloomJobCeiling")
+    assert(labels(jobs).nonEmpty)
+    // one count bootstraps the Bloom from `seen`; each wave's merge builds
+    // its increment's filter (`head`) and counts nothing again
+    assert(actions.count(_ == "count") == 1 && !actions.contains("isEmpty"),
+      actions)
   }
 
   test("compile-count guard: settled waves of a second flagship crawl " +

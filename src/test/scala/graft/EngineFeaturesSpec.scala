@@ -631,22 +631,14 @@ class EngineFeaturesSpec extends AnyFunSuite {
   // ---- plan property: default mode has no unpartitioned windows -----------
 
   test("default (scale-mode) wave plans contain no unpartitioned Window") {
+    // the crawl's plans are the plans of the tables it keeps
     val plans = scala.collection.mutable.ArrayBuffer.empty[String]
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long): Unit =
-        plans.synchronized { plans += qe.executedPlan.toString }
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
+    graft.state.Kept.onKeep = qe =>
+      plans.synchronized { plans += qe.executedPlan.toString }
     try {
       val spec = CrawlSpec(startUrls = Seq("http://mega.example.com/"),
         parserId = "all_links", hostTokensPerWave = 10, maxWaves = 20)
       CrawlJob.run(spark, spec, pagesDf)
-      Thread.sleep(3000) // QueryExecutionListener delivery is async
       val windowLines = plans.synchronized {
         plans.flatMap(_.linesIterator).map(_.trim)
           .filter(l => l.contains("Window [") || l.contains("WindowExec"))
@@ -658,7 +650,7 @@ class EngineFeaturesSpec extends AnyFunSuite {
         _.matches(""".*Window \[.*\], \[.*\], \[.*\].*"""))
       assert(unpartitioned.isEmpty,
         s"unpartitioned window(s) in default plan:\n${unpartitioned.mkString("\n")}")
-    } finally spark.listenerManager.unregister(listener)
+    } finally graft.state.Kept.onKeep = _ => ()
   }
 
   test("AQE splits a mega-host skewed host-keyed join (the runtime skew path)") {
@@ -750,23 +742,15 @@ class EngineFeaturesSpec extends AnyFunSuite {
   }
 
   test("robots new-host fetch plans as a broadcast join (corpus never shuffled)") {
+    // the crawl's plans are the plans of the tables it keeps
     val plans = scala.collection.mutable.ArrayBuffer.empty[String]
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long): Unit =
-        plans.synchronized { plans += qe.executedPlan.toString }
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
+    graft.state.Kept.onKeep = qe =>
+      plans.synchronized { plans += qe.executedPlan.toString }
     try {
       val spec = CrawlSpec(startUrls = Seq(SiteFixtures.QuotesBase),
         parserId = "quotes", maxWaves = 2)
       CrawlJob.run(spark, spec, pagesDf)
-      Thread.sleep(3000) // QueryExecutionListener delivery is async
-      // the robots rules checkpoint plan joins corpus ⋈ newHosts on
+      // the robots rules' kept plan joins corpus ⋈ newHosts on
       // robots_url — it must be a BroadcastHashJoin with the tiny host
       // set as the build side, never an exchange of the corpus
       val robotsPlans = plans.synchronized {
@@ -775,7 +759,7 @@ class EngineFeaturesSpec extends AnyFunSuite {
       assert(robotsPlans.nonEmpty, "no robots fetch plan captured")
       assert(robotsPlans.exists(_.contains("BroadcastHashJoin")),
         s"robots fetch not broadcast:\n${robotsPlans.head.take(2000)}")
-    } finally spark.listenerManager.unregister(listener)
+    } finally graft.state.Kept.onKeep = _ => ()
   }
 
   // ---- WARC archive output -----------------------------------------------

@@ -75,16 +75,27 @@ class ResumeSpec extends AnyFunSuite {
   }
 
   /** Kill the crawl after every wave but its last and resume it: each
-    * resumed crawl ends with the records, audit, crawl order and seen set
-    * of the uninterrupted one.
+    * resumed crawl ends with the records, audit, crawl order, seen set and
+    * metrics of the uninterrupted one, and commits the same last snapshot
+    * tables (robot rules, cookie jar, and the AIMD caps or trap counts
+    * once their feature has started them).
     */
   private def killAtEveryWave(spec: CrawlSpec,
       pages: org.apache.spark.sql.DataFrame): Unit = {
+    def sorted(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).toSeq.sorted
     def rows(r: CrawlJob.CrawlResult): Seq[Seq[String]] =
-      Seq(r.records, r.audit, r.crawlOrder, r.seen)
-        .map(_.collect().map(_.toString).toSeq.sorted)
-    val direct = CrawlJob.run(spark, spec, pages)
+      Seq(r.records, r.audit, r.crawlOrder, r.seen, r.metrics).map(sorted)
+    def snapshots(dir: String): Map[String, Seq[String]] = {
+      val w = StateStore.latestCommitted(dir).get
+      new java.io.File(s"$dir/wave=$w").list().toSeq
+        .filter(_ != "frontier") // the last frontier is empty
+        .map(t => t -> sorted(StateStore.read(spark, dir, w, t))).toMap
+    }
+    val directDir = Files.createTempDirectory("graft-state-direct").toString
+    val direct = CrawlJob.run(spark, spec, pages, stateDir = Some(directDir))
     val want = rows(direct)
+    val wantSnapshots = snapshots(directDir)
     assert(direct.waves > 2)
     for (k <- 1 until direct.waves) {
       val dir = Files.createTempDirectory(s"graft-state-kill$k").toString
@@ -92,8 +103,42 @@ class ResumeSpec extends AnyFunSuite {
       assert(StateStore.latestCommitted(dir).contains(k - 1))
       val resumed = CrawlJob.run(spark, spec, pages, stateDir = Some(dir))
       assert(rows(resumed) == want, s"killed after wave ${k - 1}")
+      assert(snapshots(dir) == wantSnapshots, s"killed after wave ${k - 1}")
       assert(resumed.waves == direct.waves)
     }
+  }
+
+  test("robots rules in every wave, cookies on: killed at every wave " +
+      "boundary, resume keeps the rules and the jar") {
+    // a chain of hosts, one new host a wave: each wave fetches the rules
+    // of its host (every second host disallows /private/) and each page
+    // sets a Domain cookie that every later host carries. Rules arrive in
+    // 9 waves, one more than the 8 the robots table once compacted after.
+    val t = java.sql.Timestamp.valueOf("2023-06-01 00:00:00")
+    def page(url: String, body: String, setCookie: String = null) = {
+      val html = s"<html><body>$body</body></html>"
+      SiteFixtures.Page(url, t,
+        html.getBytes(java.nio.charset.StandardCharsets.UTF_8), html, "en",
+        200, "text/html; charset=utf-8", null, setCookie)
+    }
+    def robots(url: String) = SiteFixtures.Page(url, t,
+      "User-agent: *\nDisallow: /private/\n".getBytes("UTF-8"), "", "en",
+      200, "text/plain", null)
+    val hosts = 9
+    val chain = (0 until hosts).flatMap { i =>
+      val h = s"http://h$i.chain.example.com"
+      val next =
+        if (i + 1 < hosts) s"""<a href="http://h${i + 1}.chain.example.com/">n</a>"""
+        else ""
+      Seq(page(s"$h/", s"""$next<a href="/private/x">p</a>""",
+          s"c$i=v$i; Domain=chain.example.com"),
+        page(s"$h/private/x", "<p>private</p>")) ++
+        (if (i % 2 == 0) Seq(robots(s"$h/robots.txt")) else Nil)
+    }
+    killAtEveryWave(CrawlSpec(
+      startUrls = Seq("http://h0.chain.example.com/"),
+      parserId = "cookie_echo", maxWaves = 20),
+      SiteFixtures.pagesDf(spark, chain))
   }
 
   test("adaptiveRate: killed at every wave boundary, resume keeps the " +

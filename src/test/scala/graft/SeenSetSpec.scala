@@ -88,7 +88,7 @@ class SeenSetSpec extends AnyFunSuite {
       val inc = urls(seenCount, seenCount + K)
       sketch.filterNew(inc, urls(0, seenCount))
       published ++= sketch.broadcast
-      sketch.mergeIncrement(inc)
+      sketch.mergeIncrement(inc, K)
       published ++= sketch.broadcast
       seenCount += K
       waveNanos(w) = System.nanoTime() - t0
@@ -131,7 +131,7 @@ class SeenSetSpec extends AnyFunSuite {
     val inc = (0 until 5000).map(i => s"http://h.example.com/b/$i").toDF("url")
     val sketch = new SeenSet.Sketch
     sketch.filterNew(inc, base) // bootstraps the filter from `base`
-    sketch.mergeIncrement(inc)
+    sketch.mergeIncrement(inc, 5000)
     assert(sketch.count == 15000)
     // 15,000 urls sit below the 2^20 capacity floor, so a full build over
     // both halves at that capacity has the same geometry: the in-place
