@@ -244,7 +244,7 @@ object CrawlJob {
           else st.requestChain(withCookies, requestMiddlewares)
         val (toFetch, cacheServed) =
           if (st.cacheActive) st.cacheDecision(requested)
-          else (st.noCache(requested), None)
+          else (requested, None)
 
         st.stage("fetch")
         val (pending, pendingN) = st.dispatch(toFetch)
@@ -275,13 +275,12 @@ object CrawlJob {
           spec.trapTemplateBudget.fold(candNew)(st.trapGate(candNew, _))
 
         st.stage("assemble")
-        val (frontierF, seenInc) =
-          st.assemble(candGranted, candNew, deferred, requeue)
+        val frontierF = st.assemble(candGranted, candNew, deferred, requeue)
 
         st.stage("account")
         st.account(frontierF)
         ranked.foreach(_.rdd.unpersist())
-        stateDir.foreach(st.commit(_, seenInc))
+        stateDir.foreach(st.commit)
         st.wave += 1
       }
     }
@@ -290,13 +289,9 @@ object CrawlJob {
     // increments no wave has read, so none holds the kept relations it was
     // computed from (`parsed`, `pending`, `candNew`)
     st.stage("fold")
-    Kept.fill(st.records, st.audit, st.order, st.seen)
-
-    import spark.implicits._
-    val metrics = st.liveMetrics()
-    val lineage = st.lineageBuf.toSeq.toDF("wave", "partition_id", "n_rows")
-    CrawlResult(st.records.df, st.audit.df, st.seen.df, st.order.df, metrics,
-      lineage, st.wave)
+    Kept.fill(st.records, st.audit, st.order, st.seen, st.metrics, st.lineage)
+    CrawlResult(st.records.df, st.audit.df, st.seen.df, st.order.df,
+      st.liveMetrics(), st.lineage.df, st.wave)
     } finally {
       st.sketch.close()
       metricsServer.foreach(_.stop())
@@ -317,9 +312,15 @@ object CrawlJob {
     *    caps, the trap counts and the cookie jar. A snapshot whose count
     *    the loop reads is filled by the one job that counts it;
     *  - accumulators, grown by one kept increment a wave: `seen`,
-    *    `records`, `audit`, `order` and the robots rules. Each is one leaf
-    *    relation however many waves it holds; the final fold fills the
-    *    increments no wave has read.
+    *    `records`, `audit`, `order`, `metrics`, `lineage` and the robots
+    *    rules. Each is one leaf relation however many waves it holds; the
+    *    final fold fills the increments no wave has read.
+    *
+    * With a state dir, a table's kind is all that commit and resume know
+    * of it. Each wave commits the frames of its snapshots and, for each
+    * accumulator in [[accumulators]], the increments added since its last
+    * commit (none, no write); resume reads the snapshots back and restores
+    * each accumulator's committed increments as one.
     *
     * One release rule: kept rows go when nothing references them, by
     * Spark's cleaner. The exception is a capped wave's granted and deferred
@@ -382,10 +383,6 @@ object CrawlJob {
     private val emptyAudit =
       Seq.empty[(Int, String, String, Int, String, String, String)]
         .toDF("wave", "kind", "method", "status", "host", "url", "detail")
-    private val emptyRecords = Seq.empty[(Int, Long, Int, String)]
-      .toDF("wave", "rank", "seq", "json")
-    private val emptyOrder =
-      Seq.empty[(Int, Long, String)].toDF("wave", "rank", "url")
     // RFC 6265 jar keyed by (domain, name, path); c_domain is the Domain
     // attribute, or the response host when absent (c_hostonly);
     // c_expires = -1 for a session cookie
@@ -408,14 +405,27 @@ object CrawlJob {
     var frontierUnruled = 0L
     // accumulators
     val seen = new Kept.Accumulator(Seq.empty[String].toDF("url"))
-    val records = new Kept.Accumulator(emptyRecords)
-    // read by metrics scrapes: added to under the metricsBuf lock
+    val records = new Kept.Accumulator(
+      Seq.empty[(Int, Long, Int, String)].toDF("wave", "rank", "seq", "json"))
+    val order = new Kept.Accumulator(
+      Seq.empty[(Int, Long, String)].toDF("wave", "rank", "url"))
+    // read by metrics scrapes: added to under `scrapeLock`
     val audit = new Kept.Accumulator(emptyAudit)
-    val order = new Kept.Accumulator(emptyOrder)
+    // per-wave counters not derived from the audit
+    val metrics = new Kept.Accumulator(
+      Seq.empty[(Int, String, Long)].toDF("wave", "metric", "value"))
+    // per-partition rows of each wave's dispatched requests
+    val lineage = new Kept.Accumulator(
+      Seq.empty[(Int, Int, Long)].toDF("wave", "partition_id", "n_rows"))
     // the rules of every host seen so far
     private val robotRules = new Kept.Accumulator(
       Seq.empty[(String, Seq[RobotsRules.Rule], Option[Double])]
         .toDF("r_host", "rules", "crawl_delay"))
+    /** Every accumulator, by the table it commits as. */
+    private val accumulators = Seq("seen" -> seen, "records" -> records,
+      "audit" -> audit, "crawl_order" -> order, "metrics" -> metrics,
+      "lineage" -> lineage, "robot_rules" -> robotRules)
+    private val scrapeLock = new Object
     // robotRules' hosts, driver-side (broadcast to the frontier's fill)
     private var ruledHosts = Set.empty[String]
     private var cookieJar = emptyCookies // accumulated Set-Cookies
@@ -424,8 +434,6 @@ object CrawlJob {
     // Domain join slices
     private var jarHasDomainCk = false // any non-host-only (Domain-attribute) cookie
     private var jarHasTldCk = false //   … with a single-label domain (no 2-label key)
-    // at cold start the seed set is the first seen-delta increment
-    private var coldSeedSeen: Option[DataFrame] = None
     // Bloom prefilter of the seen set (CrawlSpec.bloomDedup)
     val sketch = new graft.state.SeenSet.Sketch
     // trap budget: (host, template) → urls granted so far
@@ -433,15 +441,8 @@ object CrawlJob {
     // AIMD: observed host → current grant cap
     private var hostCaps: Option[DataFrame] = None
 
-    // per-wave counters + per-partition lineage of the granted set
-    val metricsBuf = scala.collection.mutable.ArrayBuffer.empty[(Int, String, Long)]
-    val lineageBuf = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Long)]
-
-    // ---- this wave's increments ------------------------------------------
+    // this wave's audit rows, one frame per kind of check
     val auditInc = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    private var orderInc: DataFrame = emptyOrder
-    private var recordsInc: DataFrame = emptyRecords
-    private var auditIncDf: DataFrame = emptyAudit
 
     /** Label the jobs this thread starts from here on. */
     def stage(name: String): Unit =
@@ -506,43 +507,45 @@ object CrawlJob {
 
     // live counter snapshot, per scrape (metrics/metrics.go:100-115) and
     // for CrawlResult.metrics. Scrapes run on the metrics server's threads:
-    // snapshot `audit` and the buffer under the metricsBuf lock.
+    // read `audit` and `metrics` under `scrapeLock`.
     def liveMetrics(): DataFrame = {
-      val (auditSnap, bufSnap) = metricsBuf.synchronized {
-        (audit.df, metricsBuf.toList)
+      val (auditSnap, counters) = scrapeLock.synchronized {
+        (audit.df, metrics.df)
       }
-      val auditMetrics = auditSnap
+      auditSnap
         .groupBy(col("wave"), col("kind").as("metric"))
         .agg(count(lit(1)).as("value"))
-      auditMetrics.union(bufSnap.toDF("wave", "metric", "value"))
+        .union(counters)
     }
+
+    /** Adds this wave's row of counter `metric`. */
+    private def addCounter(metric: String, value: Long): Unit =
+      scrapeLock.synchronized {
+        metrics.add(Seq((wave, metric, value)).toDF(metrics.df.columns: _*))
+      }
 
     // ---- resume / cold start ---------------------------------------------
     def resume(dir: String, w: Int): Unit = {
-      frontier = StateStore.read(spark, dir, w, "frontier")
-      // accumulators resume as the union of committed per-wave deltas
-      val seenDeltas = StateStore.readDeltas(spark, dir, "seen", w)
-      // legacy pre-delta layout: resuming would silently lose the seen
-      // set and every record, so fail loudly
-      if (seenDeltas.isEmpty && StateStore.hasTable(dir, w, "seen"))
-        throw new IllegalStateException(
-          s"checkpoint at $dir wave=$w uses the legacy pre-delta layout " +
-            "(accumulators under wave=N/ snapshots, no delta/ dir); " +
-            "resuming would silently lose the seen set and all records — " +
-            "re-run the crawl from scratch or migrate the checkpoint " +
-            "(copy wave=N/<table> to delta/<table>/wave=N)")
-      seenDeltas.foreach(seen.add)
-      robotRules.add(StateStore.read(spark, dir, w, "robot_rules"))
-      StateStore.readDeltas(spark, dir, "records", w).foreach(records.add)
-      StateStore.readDeltas(spark, dir, "audit", w).foreach(audit.add)
-      StateStore.readDeltas(spark, dir, "crawl_order", w).foreach(order.add)
-      StateStore.readDeltas(spark, dir, "metrics", w).foreach(m =>
-        metricsBuf ++= m.as[(Int, String, Long)].collect())
-      if (StateStore.hasTable(dir, w, "cookies")) {
-        val jar = StateStore.read(spark, dir, w, "cookies")
-        if (!jar.columns.contains("c_name") ||
-            !jar.columns.contains("c_path") ||
-            !jar.columns.contains("c_domain"))
+      // each accumulator resumes as the union of its committed increments.
+      // One kept as a wave=N snapshot instead is the legacy pre-delta
+      // layout: resuming would silently lose it, so fail loudly
+      accumulators.foreach { case (name, acc) =>
+        StateStore.readDeltas(spark, dir, name, w) match {
+          case Some(rows) => acc.restore(rows)
+          case None if StateStore.hasTable(dir, w, name) =>
+            throw new IllegalStateException(
+              s"checkpoint at $dir wave=$w uses the legacy pre-delta layout: " +
+                s"accumulator $name is a wave=N snapshot, not delta/ " +
+                "increments; re-run the crawl from scratch or migrate the " +
+                "checkpoint (copy wave=N/<table> to delta/<table>/wave=N)")
+          case None =>
+        }
+      }
+      def snapshot(name: String) =
+        StateStore.asOf(spark, dir, w, name, delta = false)
+      frontier = snapshot("frontier").get
+      snapshot("cookies").foreach { jar =>
+        if (!Seq("c_domain", "c_name", "c_path").forall(jar.columns.contains))
           throw new IllegalStateException(
             s"checkpoint at $dir wave=$w has a legacy cookies snapshot " +
               "(pre-RFC6265 jar without (host, name, path) keys); " +
@@ -550,10 +553,8 @@ object CrawlJob {
               "migrate the snapshot")
         cookieJarNonEmpty = adoptJar(jar) > 0
       }
-      if (StateStore.hasTable(dir, w, "host_caps"))
-        hostCaps = Some(StateStore.read(spark, dir, w, "host_caps"))
-      if (StateStore.hasTable(dir, w, "trap_counts"))
-        trapCounts = Some(StateStore.read(spark, dir, w, "trap_counts"))
+      hostCaps = snapshot("host_caps")
+      trapCounts = snapshot("trap_counts")
       if (!spec.robotsTxtDisabled)
         ruledHosts = robotRules.df.select(col("r_host"))
           .filter(col("r_host").isNotNull).as[String].collect().toSet
@@ -619,8 +620,7 @@ object CrawlJob {
           .dropDuplicates("url")
           .unionByName(seedsAllowed.filter(col("method") =!= "GET")), 0))
       // the kept frontier's GETs are the deduped seeds
-      coldSeedSeen = Some(seen.add(
-        frontier.filter(col("method") === "GET").select(col("url"))))
+      seen.add(frontier.filter(col("method") === "GET").select(col("url")))
     }
 
     // ---- gate ------------------------------------------------------------
@@ -880,13 +880,6 @@ object CrawlJob {
       out.filter(!col("cancelled")).drop("cancelled")
     }
 
-    /** No cache: every request fetches, with empty cache columns. */
-    def noCache(req: DataFrame): DataFrame = req
-      .withColumn("k_headers", lit(null).cast("map<string,string>"))
-      .withColumn("k_body", lit(null).cast("binary"))
-      .withColumn("k_ct", lit(null).cast("string"))
-      .withColumn("cache_action", lit("fetch"))
-
     /** RFC2616 cache decision (cache/cache.go:182-265). Returns (to fetch,
       * served from cache); revalidate rows carry the cached entry to the
       * 304 merge; gateway_504 (only-if-cached miss) is audited and dropped.
@@ -930,13 +923,11 @@ object CrawlJob {
       val (pending, parts) = Kept(toFetch
         .withColumn("cur_url", col("url")).withColumn("hops", lit(0))
       ).fill(_.size.toLong)
-      orderInc = order.add(pending.select(col("wave"), col("rank"), col("url")))
-      metricsBuf.synchronized {
-        metricsBuf += ((wave, "frontier_size", frontierN))
-      }
-      lineageBuf ++= parts.zipWithIndex.collect {
+      order.add(pending.select(col("wave"), col("rank"), col("url")))
+      addCounter("frontier_size", frontierN)
+      lineage.add(parts.zipWithIndex.collect {
         case (n, p) if n > 0 => (wave, p, n)
-      }
+      }.toSeq.toDF("wave", "partition_id", "n_rows"))
       (pending, parts.sum)
     }
 
@@ -1278,7 +1269,7 @@ object CrawlJob {
       val parsed = Kept(parsedRows).df
       auditInc += auditRows(parsed.filter(col("parse_error").isNotNull),
         "parse_error", method = lit("GET"), detail = col("parse_error"))
-      recordsInc = records.add(parsed
+      records.add(parsed
         .select(col("wave"), col("rank"),
           posexplode(col("records")).as(Seq("seq", "json"))))
       parsed
@@ -1378,13 +1369,13 @@ object CrawlJob {
     /** Next frontier = deferred < retries < new discoveries, ranked on the
       * side pool by ONE window over (group, order a, order b), where
       * discoveries order by (parent_rank, link_pos) and the others by their
-      * rank; also grows `seen`. Returns (next frontier, seen delta).
+      * rank; also grows `seen`. Returns the next frontier's future.
       * Sync-order mode (geziyor.go:225-227) ranks globally; scale mode
       * ranks inside the bucketed window of [[bucketRank]].
       */
     def assemble(candGranted: DataFrame, candNew: DataFrame,
         deferred: DataFrame,
-        requeue: DataFrame): (Future[(DataFrame, Long, Long)], DataFrame) = {
+        requeue: DataFrame): Future[(DataFrame, Long, Long)] = {
       val nextFrontier = candGranted
         .select(col("url"), col("host"), col("path"), col("depth"),
           lit("GET").as("method"), col("meta"), lit(0).as("retry"),
@@ -1395,10 +1386,7 @@ object CrawlJob {
           col("link_pos").cast("long").as("ord_b"))
 
       // candNew is unique and anti-joined against seen: no distinct needed
-      val newSeen = seen.add(candNew.select(col("url")))
-      // seeds belong to the FIRST committed delta
-      val seenInc = coldSeedSeen.fold(newSeen)(_.union(newSeen))
-      coldSeedSeen = None
+      seen.add(candNew.select(col("url")))
       val assembled = deferred.withColumn("wave", col("wave") + 1)
         .withColumn("grp", lit(0))
         .withColumn("ord_a", col("rank")).withColumn("ord_b", lit(0L))
@@ -1408,7 +1396,7 @@ object CrawlJob {
       // runs CONCURRENTLY with the audit fold (both read cached frames)
       val description = spark.sparkContext.getLocalProperty(JobDescription)
       val next = wave + 1
-      val frontierF = Future {
+      Future {
         spark.sparkContext.setJobDescription(description)
         val order = Seq(col("grp").asc, col("ord_a").asc, col("ord_b").asc)
         checkpointFrontier(assembled.withColumn("rank",
@@ -1417,7 +1405,6 @@ object CrawlJob {
             else bucketRank(order: _*))
           .drop("grp", "ord_a", "ord_b"), next)
       }(sideEc)
-      (frontierF, seenInc)
     }
 
     // ---- account ---------------------------------------------------------
@@ -1438,31 +1425,25 @@ object CrawlJob {
       val kept =
         if (spec.logDisabled) Kept(inc.df.filter(col("kind") =!= "crawled"))
         else inc
-      metricsBuf.synchronized {
-        auditIncDf = audit.add(kept)
-        if (spec.logDisabled) metricsBuf += ((wave, "crawled", crawled))
+      scrapeLock.synchronized {
+        audit.add(kept)
+        if (spec.logDisabled) addCounter("crawled", crawled)
       }
       adoptFrontier(Await.result(frontierF, Duration.Inf))
     }
 
-    /** Snapshot tables are rewritten whole; accumulators commit only this
-      * wave's increment (StateStore scaladoc). The AIMD caps and the trap
-      * counts are snapshots too, once their feature has started them; the
-      * wave's counters not derived from the audit are a delta.
+    /** Commits the wave: each snapshot's frame (the AIMD caps and the trap
+      * counts once their feature has started them), and each accumulator's
+      * increments since its last commit.
       */
-    def commit(dir: String, seenInc: DataFrame): Unit =
+    def commit(dir: String): Unit =
       StateStore.commitWave(dir, wave,
-        snapshots = Map(
-          "frontier" -> frontier,
-          "robot_rules" -> robotRules.df, "cookies" -> cookieJar) ++
+        snapshots = Map("frontier" -> frontier, "cookies" -> cookieJar) ++
           hostCaps.map("host_caps" -> _) ++
           trapCounts.map("trap_counts" -> _),
-        deltas = Map(
-          "seen" -> seenInc, "records" -> recordsInc,
-          "audit" -> auditIncDf, "crawl_order" -> orderInc,
-          // only this thread appends to metricsBuf
-          "metrics" -> metricsBuf.filter(_._1 == wave).toList
-            .toDF("wave", "metric", "value")))
+        deltas = accumulators.flatMap { case (name, acc) =>
+          acc.commit().map(name -> _)
+        }.toMap)
   }
 
   /** RFC2616 serve decision over the cached entry's headers

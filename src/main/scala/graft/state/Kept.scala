@@ -17,7 +17,8 @@ import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Union}
   *    over the RDD-level union of its kept increments, so every plan that
   *    reads it has the same shape however many waves it holds, and no job
   *    ever compacts it. `Kept.fill(accs*)` fills, with at most one job,
-  *    the increments no job has read yet.
+  *    the increments no job has read yet, and `commit` hands out the
+  *    increments added since the last commit.
   *
   * Unlike a persist, a scan of a kept relation compiles no columnar reader
   * and no batch filter, and AQE starts no job to fill it; unlike
@@ -58,14 +59,16 @@ object Kept {
 
   /** A table that grows by one kept increment per wave. Its columns are
     * `empty`'s; each increment has the same names and types, and a column
-    * is nullable when any increment's is, as Spark types a union. One
-    * thread adds; `df` may be read from any.
+    * is nullable when any increment's is, as Spark types a union. It
+    * remembers which increments have been committed: [[commit]] hands out
+    * the others once. One thread adds and commits; `df` may be read from
+    * any.
     */
   final class Accumulator(empty: DataFrame) {
     private var output = empty.queryExecution.analyzed.output
-    private[Kept] var parts = Vector.empty[RDD[InternalRow]]
-    private var sizeInBytes = BigInt(0)
-    @volatile private var current = build()
+    private[Kept] var parts = Vector.empty[Kept]
+    private var committed = 0
+    @volatile private var current = build(parts)
 
     /** Every increment added so far, as one relation. */
     def df: DataFrame = current
@@ -79,24 +82,40 @@ object Kept {
         s"columns ${inc.output.map(_.name)} are not ${output.map(_.name)}")
       output = Union(Seq(LocalRelation(output), LocalRelation(inc.output)))
         .output
-      parts :+= inc.rdd
-      sizeInBytes += inc.sizeInBytes
-      current = build()
+      parts :+= inc
+      current = build(parts)
       inc.df
     }
 
-    // with no increment yet, `empty` itself: a broadcast of it runs no job
-    private def build(): DataFrame =
-      if (parts.isEmpty) empty
+    /** The increments added since the last commit, as one relation, now
+      * counted as committed; None when there are none.
+      */
+    def commit(): Option[DataFrame] = {
+      val fresh = parts.drop(committed)
+      committed = parts.size
+      if (fresh.isEmpty) None else Some(build(fresh))
+    }
+
+    /** Appends rows read back from a commit, as one committed increment. */
+    def restore(committedRows: DataFrame): Unit = {
+      add(committedRows)
+      committed = parts.size
+    }
+
+    // with no increment, `empty` itself: a broadcast of it runs no job
+    private def build(ps: Vector[Kept]): DataFrame =
+      if (ps.isEmpty) empty
       else RddRelation(empty.sparkSession, output,
-        empty.sparkSession.sparkContext.union(parts), sizeInBytes.max(1))
+        empty.sparkSession.sparkContext.union(ps.map(_.rdd)),
+        ps.map(_.sizeInBytes).sum.max(1))
   }
 
   /** Fills every increment of `accs` that no job has read yet, with at most
     * ONE job; after it, no increment holds the lineage it was computed from.
     */
   def fill(accs: Accumulator*): Unit = {
-    val unfilled = accs.flatMap(_.parts).filter(p => !p.isCheckpointed && p.partitions.nonEmpty)
+    val unfilled = accs.flatMap(_.parts.map(_.rdd))
+      .filter(p => !p.isCheckpointed && p.partitions.nonEmpty)
     if (unfilled.nonEmpty)
       unfilled.head.sparkContext.union(unfilled).foreachPartition(_.size)
   }

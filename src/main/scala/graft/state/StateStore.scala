@@ -9,24 +9,24 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * resume, readers only ever see fully-committed snapshots, swappable to
   * real Iceberg later.
   *
-  * Two table families (Iceberg-style snapshot semantics):
-  *  - SNAPSHOT tables (frontier, robot_rules, cookies, host_caps,
-  *    trap_counts): current-state tables rewritten whole per wave at
-  *    `{dir}/wave={N}/{table}` — they are bounded by the live frontier /
-  *    host / template count, not crawl history.
-  *  - DELTA tables (records, audit, crawl_order, seen, metrics): append-only
-  *    accumulators. Each wave commits ONLY its own increment under
-  *    `{dir}/delta/{table}/wave={N}`; a reader unions the committed
-  *    increments. Rewriting the full accumulation per wave would be
-  *    O(total × waves) write amplification — a scale-killer for long
-  *    checkpointed crawls.
+  * Two table families (Iceberg-style snapshot semantics); the store
+  * knows no table by name, only its family:
+  *  - SNAPSHOT tables: current state, rewritten whole per wave at
+  *    `{dir}/wave={N}/{table}`, each bounded by what is live (frontier,
+  *    hosts, templates), not by crawl history.
+  *  - DELTA tables: append-only accumulators. A wave commits ONLY the
+  *    increments added since the table's last commit, under
+  *    `{dir}/delta/{table}/wave={N}`, and a wave that added none writes
+  *    nothing; a reader unions the committed increments. Rewriting the
+  *    full accumulation per wave would be O(total × waves) write
+  *    amplification — a scale-killer for long checkpointed crawls.
   *
   * Atomicity: the commit marker `{dir}/_COMMIT_{N}` is written only after
   * every snapshot table and delta increment of wave N is durably on disk.
   * A reader taking max committed N can never observe a torn snapshot, and
   * `readDeltas` unions increments only up to that N — a half-written
-  * increment from a crashed wave N+1 is invisible and simply overwritten
-  * when the resumed run re-executes the wave.
+  * increment from a crashed wave N+1 is invisible, and overwritten or
+  * removed when the resumed run commits the wave again.
   */
 object StateStore {
 
@@ -41,6 +41,10 @@ object StateStore {
     deltas.foreach { case (name, df) =>
       df.write.mode("overwrite").parquet(s"$dir/delta/$name/wave=$wave")
     }
+    // a table that commits nothing this wave drops the increment a crashed
+    // run may have left at this wave
+    deltaTables(dir).filterNot(deltas.contains)
+      .foreach(name => rmTree(new java.io.File(s"$dir/delta/$name/wave=$wave")))
     Files.createDirectories(Paths.get(dir))
     Files.write(Paths.get(s"$dir/_COMMIT_$wave"), Array.emptyByteArray)
   }
@@ -53,6 +57,10 @@ object StateStore {
       .map(_.stripPrefix("_COMMIT_").toInt)
     if (waves.isEmpty) None else Some(waves.max)
   }
+
+  /** The delta tables under `dir`, by name, sorted. */
+  def deltaTables(dir: String): Seq[String] =
+    Option(new java.io.File(s"$dir/delta").list()).toSeq.flatten.sorted
 
   def read(spark: SparkSession, dir: String, wave: Int, name: String): DataFrame =
     spark.read.parquet(s"$dir/wave=$wave/$name")

@@ -8,7 +8,7 @@ import graft.state.StateStore
   * rewrite_data_files + snapshot-expiration analog — see
   * `StateStore.compactDeltas`). Run BETWEEN crawl runs, never inside one:
   * `sbt "runMain graft.tools.CompactState <stateDir> [table...]"`.
-  * Defaults to every accumulator table the engine commits.
+  * Defaults to every delta table under `<stateDir>/delta/`.
   */
 object CompactState {
   def main(args: Array[String]): Unit = {
@@ -16,7 +16,7 @@ object CompactState {
     val dir = args(0)
     val tables =
       if (args.length > 1) args.drop(1).toSeq
-      else Seq("seen", "records", "audit", "crawl_order")
+      else StateStore.deltaTables(dir)
     val w = StateStore.latestCommitted(dir).getOrElse {
       println(s"nothing committed at $dir — nothing to compact"); return
     }

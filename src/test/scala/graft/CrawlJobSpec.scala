@@ -305,12 +305,13 @@ class CrawlJobSpec extends AnyFunSuite {
     assert(auditKinds(res)("fetch_miss") == 1)
   }
 
-  /** Runs `spec` over the fixture corpus and returns its result, each of
-    * its jobs (description, call sites of its stages) and its Dataset
-    * actions. The action listener is shown to be live: an action run on the
-    * result while it is registered reaches it.
+  /** Runs `spec` over the fixture corpus, committing to `stateDir` if one
+    * is given, and returns its result, each of its jobs (description, call
+    * sites of its stages) and its Dataset actions. The action listener is
+    * shown to be live: an action run on the result while it is registered
+    * reaches it.
     */
-  private def crawlJobs(spec: CrawlSpec)
+  private def crawlJobs(spec: CrawlSpec, stateDir: Option[String] = None)
       : (CrawlJob.CrawlResult, Seq[(String, Seq[String])], Seq[String]) = {
     pagesDf.count()
     val sc = spark.sparkContext
@@ -334,7 +335,7 @@ class CrawlJobSpec extends AnyFunSuite {
     sc.addSparkListener(listener)
     spark.listenerManager.register(actionListener)
     try {
-      val res = CrawlJob.run(spark, spec, pagesDf)
+      val res = CrawlJob.run(spark, spec, pagesDf, stateDir = stateDir)
       org.apache.spark.SparkTestBus.drain(sc)
       val crawlJobs = jobs.toArray(Array.empty[(String, Seq[String])]).toSeq
       val crawlActions = actions.toArray(Array.empty[String]).toSeq
@@ -402,6 +403,30 @@ class CrawlJobSpec extends AnyFunSuite {
     // its increment's filter (`head`) and counts nothing again
     assert(actions.count(_ == "count") == 1 && !actions.contains("isEmpty"),
       actions)
+  }
+
+  test("job-count guard: the quotes crawl with a state dir starts no more " +
+      "Spark jobs, and commits robots rules only in waves that add them") {
+    // Measured as the flagship ceiling: 205 jobs, 20 of them parquet
+    // writes of the metrics and lineage increments (204 while the robots
+    // rules were rewritten whole every wave and lineage was not committed).
+    val StateDirJobCeiling = 205
+    val dir = java.nio.file.Files.createTempDirectory("graft-census").toString
+    val spec = CrawlSpec(startUrls = Seq(SiteFixtures.QuotesBase),
+      parserId = "quotes", syncOrder = true, maxWaves = 20)
+    val (res, jobs, _) = crawlJobs(spec, Some(dir))
+    assert(res.waves == 10)
+    assert(jobs.size <= StateDirJobCeiling,
+      s"the crawl with a state dir started ${jobs.size} Spark jobs, " +
+        s"ceiling $StateDirJobCeiling")
+    assert(labels(jobs).nonEmpty)
+    // the seed host's rules arrive in wave 0, and no other wave adds any
+    val robotsWaves = res.audit.filter(col("kind") === "robots_request")
+      .select("wave").distinct().collect().map(r => s"wave=${r.getInt(0)}")
+      .toSeq.sorted
+    assert(robotsWaves == Seq("wave=0"))
+    assert(new java.io.File(s"$dir/delta/robot_rules").list().toSeq.sorted ==
+      robotsWaves)
   }
 
   test("compile-count guard: settled waves of a second flagship crawl " +

@@ -75,27 +75,31 @@ class ResumeSpec extends AnyFunSuite {
   }
 
   /** Kill the crawl after every wave but its last and resume it: each
-    * resumed crawl ends with the records, audit, crawl order, seen set and
-    * metrics of the uninterrupted one, and commits the same last snapshot
-    * tables (robot rules, cookie jar, and the AIMD caps or trap counts
-    * once their feature has started them).
+    * resumed crawl ends with the records, audit, crawl order, seen set,
+    * metrics and lineage of the uninterrupted one, and commits the same
+    * tables: the last snapshots (cookie jar, and the AIMD caps or trap
+    * counts once their feature has started them) and every delta table
+    * read back at the last committed wave.
     */
   private def killAtEveryWave(spec: CrawlSpec,
       pages: org.apache.spark.sql.DataFrame): Unit = {
     def sorted(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.collect().map(_.toString).toSeq.sorted
     def rows(r: CrawlJob.CrawlResult): Seq[Seq[String]] =
-      Seq(r.records, r.audit, r.crawlOrder, r.seen, r.metrics).map(sorted)
-    def snapshots(dir: String): Map[String, Seq[String]] = {
+      Seq(r.records, r.audit, r.crawlOrder, r.seen, r.metrics, r.lineage)
+        .map(sorted)
+    def committed(dir: String): Map[String, Seq[String]] = {
       val w = StateStore.latestCommitted(dir).get
       new java.io.File(s"$dir/wave=$w").list().toSeq
         .filter(_ != "frontier") // the last frontier is empty
-        .map(t => t -> sorted(StateStore.read(spark, dir, w, t))).toMap
+        .map(t => t -> sorted(StateStore.read(spark, dir, w, t))).toMap ++
+        StateStore.deltaTables(dir).map(t =>
+          s"delta/$t" -> sorted(StateStore.readDeltas(spark, dir, t, w).get))
     }
     val directDir = Files.createTempDirectory("graft-state-direct").toString
     val direct = CrawlJob.run(spark, spec, pages, stateDir = Some(directDir))
     val want = rows(direct)
-    val wantSnapshots = snapshots(directDir)
+    val wantCommitted = committed(directDir)
     assert(direct.waves > 2)
     for (k <- 1 until direct.waves) {
       val dir = Files.createTempDirectory(s"graft-state-kill$k").toString
@@ -103,7 +107,7 @@ class ResumeSpec extends AnyFunSuite {
       assert(StateStore.latestCommitted(dir).contains(k - 1))
       val resumed = CrawlJob.run(spark, spec, pages, stateDir = Some(dir))
       assert(rows(resumed) == want, s"killed after wave ${k - 1}")
-      assert(snapshots(dir) == wantSnapshots, s"killed after wave ${k - 1}")
+      assert(committed(dir) == wantCommitted, s"killed after wave ${k - 1}")
       assert(resumed.waves == direct.waves)
     }
   }
@@ -246,6 +250,27 @@ class ResumeSpec extends AnyFunSuite {
     assert(e.getMessage.contains("legacy pre-delta layout"))
   }
 
+  test("a checkpoint that keeps the robots rules as a wave=N snapshot " +
+      "fails LOUDLY instead of resuming without rules") {
+    // the layout before the rules were committed as increments: one
+    // snapshot of every rule at wave=N, no robot_rules deltas
+    val dir = Files.createTempDirectory("graft-state-rules").toString
+    val spec = CrawlSpec(startUrls = Seq(SiteFixtures.QuotesBase),
+      parserId = "quotes", maxWaves = 3)
+    CrawlJob.run(spark, spec, pagesDf, stateDir = Some(dir))
+    val w = StateStore.latestCommitted(dir).get
+    StateStore.readDeltas(spark, dir, "robot_rules", w).get
+      .write.parquet(s"$dir/wave=$w/robot_rules")
+    Files.walk(java.nio.file.Paths.get(s"$dir/delta/robot_rules"))
+      .sorted(java.util.Comparator.reverseOrder()).forEach(Files.delete(_))
+    val e = intercept[IllegalStateException] {
+      CrawlJob.run(spark, spec.copy(maxWaves = 20), pagesDf,
+        stateDir = Some(dir))
+    }
+    assert(e.getMessage.contains("legacy pre-delta layout"))
+    assert(e.getMessage.contains("robot_rules"))
+  }
+
   test("delta compaction: resume after compactDeltas is byte-identical, " +
       "crashed-compactor leftovers are ignored, expired history fails loudly") {
     val dir = Files.createTempDirectory("graft-state-compact").toString
@@ -259,7 +284,7 @@ class ResumeSpec extends AnyFunSuite {
     // accumulator (the Iceberg rewrite_data_files + expiration analog)
     CrawlJob.run(spark, full.copy(maxWaves = 5), pagesDf, stateDir = Some(dir))
     val w = StateStore.latestCommitted(dir).get
-    Seq("seen", "records", "audit", "crawl_order")
+    StateStore.deltaTables(dir)
       .foreach(t => StateStore.compactDeltas(spark, dir, t, w))
     // covered wave dirs are gone; one base remains
     val seenDir = new java.io.File(s"$dir/delta/seen")
@@ -278,6 +303,15 @@ class ResumeSpec extends AnyFunSuite {
     assert(resumedRecs == directRecs)
     assert(resumed.seen.collect().map(_.getString(0)).toSet ==
       direct.seen.collect().map(_.getString(0)).toSet)
+    // every table compacted, the robots rules, metrics and lineage too
+    assert(StateStore.deltaTables(dir) == Seq("audit", "crawl_order",
+      "lineage", "metrics", "records", "robot_rules", "seen"))
+    def sorted(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).toSeq.sorted
+    for ((got, want) <- Seq(resumed.audit -> direct.audit,
+        resumed.crawlOrder -> direct.crawlOrder,
+        resumed.metrics -> direct.metrics, resumed.lineage -> direct.lineage))
+      assert(sorted(got) == sorted(want))
 
     // time travel below the compaction horizon is EXPIRED — loud failure,
     // never a silent over-read
