@@ -521,7 +521,7 @@ object CrawlJob {
     /** Adds this wave's row of counter `metric`. */
     private def addCounter(metric: String, value: Long): Unit =
       scrapeLock.synchronized {
-        metrics.add(Seq((wave, metric, value)).toDF(metrics.df.columns: _*))
+        metrics.add(Seq((wave, metric, value)).toDF("wave", "metric", "value"))
       }
 
     // ---- resume / cold start ---------------------------------------------

@@ -271,6 +271,22 @@ class ResumeSpec extends AnyFunSuite {
     assert(e.getMessage.contains("robot_rules"))
   }
 
+  test("a table that commits nothing in a wave drops the increment a " +
+      "crashed run left at that wave") {
+    // the robots rules commit only in waves that add rules: a stale
+    // increment of a later wave would otherwise be read back as committed
+    val dir = Files.createTempDirectory("graft-state-stale").toString
+    val spec = CrawlSpec(startUrls = Seq(SiteFixtures.QuotesBase),
+      parserId = "quotes", maxWaves = 3)
+    CrawlJob.run(spark, spec, pagesDf, stateDir = Some(dir))
+    StateStore.readDeltas(spark, dir, "robot_rules", 2).get
+      .write.parquet(s"$dir/delta/robot_rules/wave=3")
+    CrawlJob.run(spark, spec.copy(maxWaves = 5), pagesDf, stateDir = Some(dir))
+    assert(StateStore.latestCommitted(dir).contains(4))
+    assert(new java.io.File(s"$dir/delta/robot_rules").list().toSeq ==
+      Seq("wave=0"))
+  }
+
   test("delta compaction: resume after compactDeltas is byte-identical, " +
       "crashed-compactor leftovers are ignored, expired history fails loudly") {
     val dir = Files.createTempDirectory("graft-state-compact").toString
